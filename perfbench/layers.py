@@ -59,23 +59,14 @@ def per_layer_unit(name):
 # ---------------------------------------------------------------- e2e
 
 def alerts_samples(m):
+    """(alert latencies, achieved events/s, alerts closed only by the flush)."""
     last = {(svc, int(sec)): int(i) for svc, sec, i in m["last_index"]}
-    lat = stats.alert_latencies([(a[0], a[1], a[2], a[3], int(a[4]), int(a[5])) for a in m["alerts"]],
-                                last, m["rate"], m["open_loop_end_ms"])
+    lat, flush_only = stats.alert_latencies(
+        [(a[0], a[1], a[2], a[3], int(a[4]), int(a[5])) for a in m["alerts"]], last, m["rate"],
+        int(m["closed_by_s"]))
     # achieved rate: events sent over the time until both raw consumers had
     # finished the batch holding the last one; it falls as the backlog grows
-    return lat, m["sent"] / (m["drained_ms"] / 1000.0)
-
-
-def gate_samples(m):
-    ok = [r for r in m["replays"] if r["ok"]]
-    shard_ms = [x for r in ok for x in r["shard_ms"]]
-    eps = [m["events"] / (sum(r["shard_ms"]) / 1000.0) for r in ok]
-    return shard_ms, stats.median(eps)
-
-
-def scan_ok_runs(m, bad):
-    return [r for p in m["passes"] for r in p["runs"] if r["error"] is None and r["name"] not in bad]
+    return lat, m["sent"] / (m["drained_ms"] / 1000.0), flush_only
 
 
 def scan_counts(measures, bad):
@@ -87,7 +78,7 @@ def scan_counts(measures, bad):
 
 def scan_samples(m, bad, key="wall_ms"):
     """Per query of the first pass: the fastest of its cold executions, as
-    graft.Bench times it, by wall time or (key="cpu_ms") process CPU time.
+    graft.Bench times it, by wall time or (key="cpu_ms") Java-thread CPU time.
     A query with a failed execution has no time; the suite is the sum over
     the others (the failure shows in fail_ratio and `correct`).
     Returns (query ms, queries/s, suite s)."""
@@ -101,31 +92,28 @@ def scan_samples(m, bad, key="wall_ms"):
 
 
 def cpu_per_op(workload, m):
-    """Process CPU ms per operation: per event offered over the open-loop
-    phase on alerts_stream, per cold execution on scan_batch, per event
-    replayed on gate_backfill. Steal does not count as process CPU time."""
+    """Java-thread CPU ms per operation: per event offered over the open-loop
+    phase on alerts_stream, per cold execution on scan_batch. Steal does not
+    count as CPU time."""
     if workload == "alerts_stream":
         return m["cpu_ms"] / m["sent"]
-    if workload == "gate_backfill":
-        ok = [r for r in m["replays"] if r["ok"]]
-        return sum(r["cpu_ms"] for r in ok) / (m["events"] * len(ok)) if ok else None
     runs = m["passes"][0]["runs"]
     return sum(r["cpu_ms"] for r in runs) / len(runs)
 
 
 def e2e_of(workload, m, bad):
     """The timing metrics of one measurement (untraced or traced)."""
+    flush_only = None
     if workload == "alerts_stream":
-        lat, thr = alerts_samples(m)
-    elif workload == "gate_backfill":
-        lat, thr = gate_samples(m)
+        lat, thr, flush_only = alerts_samples(m)
     else:
         # by CPU time: a cold query saturates the cores, so its wall time
         # moves with the host's steal (README.md, "scan_batch by CPU time")
         lat, thr, _ = scan_samples(m, bad, key="cpu_ms")
     p, t = stats.tail(lat)
     return {"p50_ms": stats.median(lat), "tail_ms": t, "throughput_per_s": thr,
-            "cpu_ms_per_op": cpu_per_op(workload, m), "_n": len(lat), "_tail_pct": p}
+            "cpu_ms_per_op": cpu_per_op(workload, m), "_n": len(lat), "_tail_pct": p,
+            "_flush_only": flush_only}
 
 
 def end_to_end(raw, out: Path):
@@ -146,7 +134,9 @@ def end_to_end(raw, out: Path):
         failed += 0 if raw["extra"]["gate_ok"] else 1
 
     e = e2e_of(w, u, bad)
-    setup = stats.median(raw["setup_s"])
+    # set-up by CPU time: it is a string of small Spark jobs whose wall time
+    # follows the host's steal (README.md, "setup_s by CPU time")
+    setup = stats.median(raw["setup_cpu_s"])
     metrics = {k: setup if k == "setup_s" else e[k] for k in E2E_UNITS}
     missing = [k for k, v in metrics.items() if v is None]
     if missing:
@@ -157,22 +147,20 @@ def end_to_end(raw, out: Path):
         overhead = {k: et[k] - e[k] for k in OVERHEAD if et[k] is not None}
 
     n, tp = e["_n"], e["_tail_pct"]
-    named = {"setup_s": {"value": setup, "unit": "s", "stat": "median", "n": len(raw["setup_s"])},
+    named = {"setup_s": {"value": setup, "unit": "s", "stat": "median CPU", "n": len(raw["setup_cpu_s"])},
+             "setup_wall_s": {"value": stats.median(raw["setup_wall_s"]), "unit": "s", "stat": "median",
+                              "n": len(raw["setup_wall_s"])},
              "rss_peak_mb": {"value": raw["rss_peak_kb"] / 1024.0, "unit": "MB", "stat": "max", "n": 1},
              "fail_ratio": {"value": stats.fail_ratio(attempted, failed), "unit": "ratio",
                             "n": attempted}}
     if w == "alerts_stream":
-        named["alert_p50_ms"] = {"value": e["p50_ms"], "unit": "ms", "stat": "median", "n": n}
-        if tp is not None:
+        named["alert_p50_ms"] = {"value": e["p50_ms"], "unit": "ms", "stat": "median", "n": n,
+                                 "flush_only": e["_flush_only"]}
+        if tp is not None and tp > 50:
             named[f"alert_p{tp:g}_ms"] = {"value": e["tail_ms"], "unit": "ms", "stat": f"p{tp:g}", "n": n}
         named["events_per_s"] = {"value": e["throughput_per_s"], "unit": "1/s", "stat": "achieved",
                                  "n": 1, "offered": u["rate"]}
         detail["check"] = u["check"]
-    elif w == "gate_backfill":
-        named["events_per_s"] = {"value": e["throughput_per_s"], "unit": "1/s", "stat": "median",
-                                 "n": sum(1 for r in u["replays"] if r["ok"])}
-        named["shard_p50_ms"] = {"value": e["p50_ms"], "unit": "ms", "stat": "median", "n": n}
-        detail["lanes"] = {"expected_kept": u["expected_kept"], "expected_late": u["expected_late"]}
     else:
         wall, _, suite = scan_samples(u, bad)
         named["suite_s"] = {"value": suite, "unit": "s", "stat": "sum of per-query floors", "n": len(wall)}
@@ -276,15 +264,6 @@ def module_metrics(t, ops, owner):
     return out
 
 
-def gate_fields(v, progress, kept, late, eps_1core):
-    g = stream_fields([p for p in progress if p["name"] == "gate"])
-    for f in ("batch_p50_ms", "add_batch_ms", "state_rows", "state_mem_mb", "state_commit_ms"):
-        v[f"streaming.gate.{f}"] = g.get(f, 0.0)
-    v["streaming.gate.kept_rows"] = kept
-    v["streaming.gate.late_rows"] = late
-    v["streaming.gate.eps_1core"] = eps_1core
-
-
 def per_layer(raw, out: Path):
     """Every per-layer metric of the traced measurement; a layer the workload
     does not run reports 0 (it did no work)."""
@@ -318,12 +297,12 @@ def per_layer(raw, out: Path):
             for f, x in stream_fields(by_name.get(q, [])).items():
                 if f in STREAM_FIELDS:
                     v[f"{prefix}.{f}"] = x
-        gate_fields(v, raw["extra"]["gate_progress"], raw["extra"]["kept"], raw["extra"]["late"],
-                    raw["extra"]["eps_1core"])
-    elif w == "gate_backfill":
-        ok = [r for r in t["replays"] if r["ok"]]
-        gate_fields(v, t["progress"], stats.median([r["kept"] for r in ok]) or 0.0,
-                    stats.median([r["late"] for r in ok]) or 0.0, raw["extra"]["eps_1core"])
+        gate = stream_fields([p for p in extra["gate_progress"] if p["name"] == "gate"])
+        for f in ("batch_p50_ms", "add_batch_ms", "state_rows", "state_mem_mb", "state_commit_ms"):
+            v[f"streaming.gate.{f}"] = gate.get(f, 0.0)
+        v["streaming.gate.kept_rows"] = extra["kept"]
+        v["streaming.gate.late_rows"] = extra["late"]
+        v["streaming.gate.eps_1core"] = extra["eps_1core"]
     else:
         runs = [r for p in t["passes"] for r in p["runs"]]
         v["oracle.release_s"] = sum(r["release_ms"] for r in runs) / 1000.0 / len(t["passes"])

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Benchmark of the graft engine. See perfbench/README.md.
 
-    python3 perfbench/run.py --workload <alerts_stream|gate_backfill|scan_batch>
+    python3 perfbench/run.py --workload <alerts_stream|scan_batch>
                              --seed <n> --seconds <s> --trace <0|1>
 
 Builds the engine from source (perfbench/build.py), runs one workload in one
@@ -24,8 +24,7 @@ import layers  # noqa: E402
 import stats  # noqa: E402
 
 ROOT = build.ROOT
-# gate_backfill runs by hand; BENCHMARK.json lists the other two (README.md)
-WORKLOADS = ("alerts_stream", "scan_batch", "gate_backfill")
+WORKLOADS = ("alerts_stream", "scan_batch")
 # alerts_stream's offered rate in events/s: about half the rate at which the
 # seed code's backlog starts to grow on a 4-core host (README.md)
 ALERT_RATE = 800.0
@@ -60,7 +59,7 @@ def host_end(h):
     return h
 
 
-def run_jvm(args, out: Path, sf: str, check_sf: str, cores: int):
+def run_jvm(args, out: Path, sf: str, cores: int):
     tmp = out / "tmp"
     tmp.mkdir(parents=True, exist_ok=True)
     cmd = (["java", "-Xss64m", "-Xmx3g", f"-Djava.io.tmpdir={tmp}", "-Dspark.ui.enabled=false",
@@ -68,8 +67,8 @@ def run_jvm(args, out: Path, sf: str, check_sf: str, cores: int):
            + [a for p in JDK17_OPENS for a in ("--add-opens", f"{p}=ALL-UNNAMED")]
            + ["-cp", build.classpath(), "graft.perfbench.Main",
               "--workload", args.workload, "--seed", str(args.seed), "--seconds", str(args.seconds),
-              "--trace", str(args.trace), "--out", str(out), "--sf", sf, "--check-sf", check_sf,
-              "--cores", str(cores), "--rate", str(ALERT_RATE)])
+              "--trace", str(args.trace), "--out", str(out), "--sf", sf, "--cores", str(cores),
+              "--rate", str(ALERT_RATE)])
     with open(out / "jvm.log", "w") as log:
         p = subprocess.Popen(cmd, stdout=log, stderr=subprocess.STDOUT, cwd=ROOT)
         try:
@@ -96,15 +95,12 @@ def main():
     build.build()
     # the fixture dirs TESTDATA.md describes
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.expanduser("~/testdata/sf0.1"))
-    check_sf = os.environ.get("SPARK_GRAFT_CHECK_SF_DIR", os.path.expanduser("~/testdata/sf0.01"))
-    for d in (sf, check_sf):
-        if not Path(d, "events.parquet").exists():
-            raise SystemExit(f"perfbench: fixture dir {d} not found "
-                             "(set SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CHECK_SF_DIR)")
+    if not Path(sf, "events.parquet").exists():
+        raise SystemExit(f"perfbench: fixture dir {sf} not found (set SPARK_GRAFT_SF_DIR)")
     out = ROOT / ".bench_out" / f"{args.workload}-s{args.seed}-t{args.trace}"
     shutil.rmtree(out, ignore_errors=True)
     out.mkdir(parents=True)
-    raw = run_jvm(args, out, sf, check_sf, host["nproc"])
+    raw = run_jvm(args, out, sf, host["nproc"])
     if "error" in raw:
         raise SystemExit(f"perfbench: workload failed: {raw['error']}")
 

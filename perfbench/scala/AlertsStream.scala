@@ -42,14 +42,29 @@ final class AlertsStream(rate: Double, sfDir: String) extends Workload {
   /** The generator's send interval. */
   val LingerMs = 250.0
 
-  /** How long alerts of the open-loop phase may still arrive after the feed
-    * ends and both raw consumers have drained, before the flush. */
+  /** How long the queries may still work on the open-loop phase's events
+    * after both raw consumers have drained, before the flush; the CPU time
+    * counted for the phase includes it. */
   val GraceMs = 2000L
+
+  /** The raw consumers' event-time watermark delay in seconds: a window
+    * whose end is at or before (last event's second − this) is closed by the
+    * real events alone; later windows close only at the flush. */
+  val WatermarkS: Long = Seq(ErrorRateDetector.Watermark, LatencySloMonitor.Watermark).map { w =>
+    val Array(n, unit) = w.split(" ")
+    require(unit.startsWith("second"), s"watermark $w")
+    n.toLong
+  }.max
 
   /** Every query's processing-time trigger: a deployment runs micro-batches
     * on an interval, not back to back, so six queries leave the cores idle
-    * between batches instead of spinning on per-batch fixed cost. */
-  val TriggerMs = 2000L
+    * between batches instead of spinning on per-batch fixed cost. At 2 s
+    * that fixed cost kept a 4-core host's CPU near saturation: alert latency
+    * climbed through a run and moved with the host's load. */
+  val TriggerMs = 3000L
+
+  /** Where in the trigger interval the feed starts (see [[feed]]). */
+  val PhaseMs = 100.0
 
   /** Untimed warm-up feed. */
   val WarmSeconds = 4.0
@@ -63,11 +78,6 @@ final class AlertsStream(rate: Double, sfDir: String) extends Workload {
     val (events, genS) = Main.timed(
       LogGenerator.logs(spark, Base, virtual, seed).as[RawLog].collect())
     Staged(events.sortBy(e => (e.timestamp, e.service, e.request_id)), genS)
-  }
-
-  override def prime(spark: SparkSession): Unit = {
-    import spark.implicits._
-    LogGenerator.logs(spark, Base, 10, 1).as[RawLog].collect()
   }
 
   override def setupInfo(s: Staged): Map[String, Any] =
@@ -88,11 +98,18 @@ final class AlertsStream(rate: Double, sfDir: String) extends Workload {
   /** One load-generating thread sends event i at t0 + i / rate, whether or
     * not the queries keep up. It sends everything due every [[LingerMs]], as
     * a Kafka producer lingers: each send is one input partition of the next
-    * micro-batch. Returns when the last event due within `seconds` is sent. */
+    * micro-batch. Returns when the last event due within `seconds` is sent.
+    *
+    * t0 sits [[PhaseMs]] after a trigger tick: processing-time triggers fire
+    * at epoch multiples of their interval, so every run meets the triggers
+    * at the same point of its schedule, and the trigger phase, which alone
+    * moves an alert's latency by up to one interval, is the same in every
+    * run instead of a random draw. */
   private def feed(t: Topology, events: Array[RawLog], seconds: Double): Feed = {
     val sends = mutable.ArrayBuffer[(Int, Int, Double)]() // (first index, count, send ms after t0)
     val limit = math.min(events.length, (rate * seconds).toInt)
-    val t0 = Clock.ms + 50
+    val t0 = (math.floor(Clock.ms / TriggerMs) + 1) * TriggerMs + PhaseMs
+    Thread.sleep((t0 - Clock.ms).toLong)
     val feeder = new Thread(() => {
       var i = 0
       while (i < limit) {
@@ -118,20 +135,20 @@ final class AlertsStream(rate: Double, sfDir: String) extends Workload {
     val t = new Topology(spark, s"$work/run-${System.nanoTime()}", rec, root)
     try {
       val feedSpan = rec.start("feeder", "gen", root)
-      val cpu0 = Main.cpuMs()
+      val cpu0 = Main.threadCpu()
       val f = feed(t, s.events, seconds)
       rec.end(feedSpan)
       // wait until both raw consumers have finished a batch that holds the
       // last send (a MemoryStream offset counts sends from 0), then give the
-      // alerts still in flight GraceMs before the flush
+      // queries GraceMs before the flush; alerts still in flight then
+      // arrive during the flush's drain and count with their arrival time
       def offset(q: StreamingQuery): Long = Option(q.lastProgress)
         .flatMap(p => scala.util.Try(p.sources.head.endOffset.toLong).toOption).getOrElse(-1L)
       while (Seq(t.errorRate, t.p95).exists(q => offset(q) < f.sends.size - 1 && q.isActive) &&
         Clock.ms - f.t0 < f.endMs + 60000) Thread.sleep(10)
       val drained = Clock.ms - f.t0
       Thread.sleep(GraceMs)
-      val openLoopEnd = Clock.ms - f.t0
-      val cpu = Main.cpuMs() - cpu0
+      val cpu = Main.threadCpuMsSince(cpu0)
       t.flush(s.events(f.sent - 1))
       t.stop()
       rec.end(root)
@@ -141,8 +158,9 @@ final class AlertsStream(rate: Double, sfDir: String) extends Workload {
       val lastIdx = mutable.Map[(String, Long), Int]()
       s.events.iterator.take(f.sent).zipWithIndex.foreach { case (e, i) => lastIdx((e.service, sec(e))) = i }
       Map(
-        "rate" -> rate, "t0_ms" -> f.t0, "feed_end_ms" -> f.endMs, "open_loop_end_ms" -> openLoopEnd,
+        "rate" -> rate, "t0_ms" -> f.t0, "feed_end_ms" -> f.endMs,
         "sent" -> f.sent, "drained_ms" -> drained, "cpu_ms" -> cpu,
+        "closed_by_s" -> (Base + sec(s.events(f.sent - 1)) - WatermarkS),
         "sends" -> f.sends.map { case (i, n, ms) => Seq(i, n, ms) },
         "last_index" -> lastIdx.toSeq.map { case ((svc, sc), i) => Seq(svc, Base + sc, i) },
         "alerts" -> t.alertSink.asScala.toSeq.map(a =>
@@ -155,9 +173,9 @@ final class AlertsStream(rate: Double, sfDir: String) extends Workload {
   }
 
   /** The DLQ gate shares this workload's streaming engine and state-store
-    * layer; the traced run measures it here (see [[GateBackfill.layerProbe]]). */
+    * layer; the traced run measures it here (see [[GateProbe.layerProbe]]). */
   override def tracedExtra(spark: SparkSession, s: Staged, work: String): Map[String, Any] =
-    new GateBackfill(sfDir).layerProbe(spark, work)
+    new GateProbe(sfDir).layerProbe(spark, work)
 
   /** The open-loop run's outputs against a batch evaluation of the same
     * stage functions over the logs that were sent:

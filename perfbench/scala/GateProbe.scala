@@ -11,15 +11,15 @@ import graft.oracle.Tables
 import graft.streaming.LateDlq
 import graft.streaming.TransitionGate.ItemEvent
 
-/** `gate_backfill`: a closed-loop replay of the `events` corpus through the
-  * DLQ gate ([[LateDlq.routedOf]], transformWithState on RocksDB). The
-  * corpus is cut into [[Shards]] arrival shards by the q172 arrival model
+/** The DLQ gate's layer probe: a closed-loop replay of the `events` corpus
+  * through [[LateDlq.routedOf]] (transformWithState on RocksDB). The corpus
+  * is cut into [[Shards]] arrival shards by the q172 arrival model
   * ([[DlqRoute.routedOf]], late cohort delayed by [[DelayShards]]); each
   * shard is one micro-batch, sent when the previous one has finished. The
-  * seed permutes the rows within each shard — the gate sorts per user, so
-  * the lanes must not change. A replay is one fresh query; the run repeats
-  * replays for the measured interval. */
-final class GateBackfill(sfDir: String) extends Workload {
+  * gate shares `alerts_stream`'s streaming engine and state-store layer, so
+  * a traced `alerts_stream` run replays it once with the listeners attached
+  * ([[layerProbe]]) and checks its lanes against the batch route. */
+final class GateProbe(sfDir: String) {
 
   val Shards = 10
   val DelayShards = 2L
@@ -29,7 +29,8 @@ final class GateBackfill(sfDir: String) extends Workload {
 
   private def events(spark: SparkSession) = Tables.table(spark, sfDir, "events")
 
-  override def setup(spark: SparkSession, seed: Int, seconds: Double): Staged = {
+  /** The shards, in arrival order. */
+  def stage(spark: SparkSession): Staged = {
     val ev = events(spark)
     val ts = Tables.tsMicros(ev)
     val maxId = DlqRoute.routedOf(ev, ts, bucket = 1L).agg(max(col("event_id"))).head().getLong(0)
@@ -38,21 +39,13 @@ final class GateBackfill(sfDir: String) extends Workload {
     val rows = DlqRoute.routedOf(ev, ts, bucket = bucket, delay = DelayShards)
       .select(col("ab"), col("user_id"), col("event_id"), col("item"), col("t"))
       .collect()
-    val rnd = new scala.util.Random(seed)
     val shards = rows
       .map(r => (r.getLong(0), ItemEvent(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rs) => rnd.shuffle(rs.toSeq).map(_._2).toArray }
+      .map { case (_, rs) => rs.map(_._2) }
       .toIndexedSeq
     Staged(shards, bucket)
   }
-
-  override def setupInfo(s: Staged): Map[String, Any] =
-    Map("shards" -> s.shards.size, "events" -> s.shards.map(_.length).sum, "bucket" -> s.bucket)
-
-  /** Untimed: one full replay (the first replay in a JVM runs ~26% slower). */
-  override def warm(spark: SparkSession, s: Staged, work: String): Unit =
-    replay(spark, s, s"$work/warm-${System.nanoTime()}", new Recorder(false), 0L)
 
   /** One replay: per-shard wall ms and the two lane counts. */
   def replay(spark: SparkSession, s: Staged, dir: String, rec: Recorder, parent: Long): (Seq[Double], Long, Long) = {
@@ -108,35 +101,9 @@ final class GateBackfill(sfDir: String) extends Workload {
     (kept, late)
   }
 
-  override def measure(spark: SparkSession, s: Staged, seconds: Double, rec: Recorder,
-                       work: String): Map[String, Any] = {
-    val root = rec.start("gate_backfill", "workload", 0L)
-    val start = Clock.ms
-    val done = scala.collection.mutable.ArrayBuffer[(scala.util.Try[(Seq[Double], Long, Long)], Double, Double)]()
-    while (done.isEmpty || Clock.ms - start < seconds * 1000) {
-      val t0 = Clock.ms
-      val c0 = Main.cpuMs()
-      val r = scala.util.Try(replay(spark, s, s"$work/run-${System.nanoTime()}", rec, root))
-      done += ((r, (Clock.ms - t0) / 1000.0, Main.cpuMs() - c0))
-    }
-    rec.end(root)
-    val (expKept, expLate) = expected(spark, s)
-    val events = s.shards.map(_.length.toLong).sum
-    val ok = done.map { case (r, _, _) => r.toOption.exists { case (_, k, l) => k == expKept && l == expLate } }
-    Map(
-      "events" -> events, "expected_kept" -> expKept, "expected_late" -> expLate,
-      "replays" -> done.zip(ok).map { case ((r, wall, cpu), good) => Map(
-        "wall_s" -> wall, "cpu_ms" -> cpu, "ok" -> good,
-        "shard_ms" -> r.toOption.map(_._1).getOrElse(Seq.empty),
-        "kept" -> r.toOption.map(_._2), "late" -> r.toOption.map(_._3),
-        "error" -> r.failed.toOption.map(e => s"${e.getClass.getSimpleName}: ${e.getMessage}"))
-      },
-      "attempted" -> done.size, "failed" -> ok.count(!_))
-  }
-
   /** The single-thread baseline: a replay of the first [[BaselineShards]]
     * shards on a `local[1]` session. Stops `spark`. */
-  def baseline(spark: SparkSession, s: Staged, work: String): Map[String, Any] = {
+  private def baseline(spark: SparkSession, s: Staged, work: String): Map[String, Any] = {
     spark.stop()
     val one = Main.session(1, work)
     val part = s.copy(shards = s.shards.take(BaselineShards))
@@ -144,13 +111,11 @@ final class GateBackfill(sfDir: String) extends Workload {
     Map("eps_1core" -> part.shards.map(_.length).sum / (times.sum / 1000.0))
   }
 
-  override def tracedExtra(spark: SparkSession, s: Staged, work: String): Map[String, Any] =
-    baseline(spark, s, work)
-
   /** The gate's per-layer figures for another workload's traced run: one
-    * staged replay with the listeners attached, then the baseline. */
+    * staged replay with the listeners attached, then the baseline. Stops
+    * `spark`. */
   def layerProbe(spark: SparkSession, work: String): Map[String, Any] = {
-    val s = setup(spark, 0, 0)
+    val s = stage(spark)
     val rec = new Recorder(true)
     rec.attach(spark)
     val (times, kept, late) = replay(spark, s, s"$work/probe-${System.nanoTime()}", rec, 0L)

@@ -1,59 +1,23 @@
 package graft.perfbench
 
-/** Minimal JSON renderer for the raw run record (maps, sequences, strings,
-  * numbers, booleans, options). The benchmark writes its raw samples with
-  * this and leaves every statistic to the Python side. */
+import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.databind.{JsonSerializer, ObjectMapper, SerializerProvider}
+import com.fasterxml.jackson.databind.module.SimpleModule
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/** Renders the raw run record (Scala maps, sequences, options, numbers)
+  * with the Jackson in Spark's jars. NaN and infinities, which JSON cannot
+  * hold, become null. The benchmark leaves every statistic to the Python
+  * side. */
 object Json {
-  def render(v: Any): String = {
-    val sb = new StringBuilder
-    write(sb, v)
-    sb.toString
+  private object FiniteDouble extends JsonSerializer[java.lang.Double] {
+    override def serialize(d: java.lang.Double, g: JsonGenerator, p: SerializerProvider): Unit =
+      if (d.isNaN || d.isInfinite) g.writeNull() else g.writeNumber(d.doubleValue)
   }
 
-  private def str(sb: StringBuilder, s: String): Unit = {
-    sb += '"'
-    s.foreach {
-      case '"' => sb ++= "\\\""
-      case '\\' => sb ++= "\\\\"
-      case '\n' => sb ++= "\\n"
-      case '\r' => sb ++= "\\r"
-      case '\t' => sb ++= "\\t"
-      case c if c < ' ' => sb ++= f"\\u${c.toInt}%04x"
-      case c => sb += c
-    }
-    sb += '"'
-  }
+  private val mapper = new ObjectMapper()
+    .registerModule(DefaultScalaModule)
+    .registerModule(new SimpleModule().addSerializer(classOf[java.lang.Double], FiniteDouble))
 
-  private def write(sb: StringBuilder, v: Any): Unit = v match {
-    case null | None => sb ++= "null"
-    case Some(x) => write(sb, x)
-    case s: String => str(sb, s)
-    case b: Boolean => sb ++= b.toString
-    case d: Double =>
-      if (d.isNaN || d.isInfinite) sb ++= "null" else sb ++= d.toString
-    case f: Float => write(sb, f.toDouble)
-    case n: Int => sb ++= n.toString
-    case n: Long => sb ++= n.toString
-    case n: java.lang.Number => sb ++= n.toString
-    case m: scala.collection.Map[_, _] =>
-      sb += '{'
-      var first = true
-      m.foreach { case (k, x) =>
-        if (!first) sb += ','
-        first = false
-        str(sb, k.toString); sb += ':'; write(sb, x)
-      }
-      sb += '}'
-    case a: Array[_] => write(sb, a.toSeq)
-    case s: Iterable[_] =>
-      sb += '['
-      var first = true
-      s.foreach { x =>
-        if (!first) sb += ','
-        first = false
-        write(sb, x)
-      }
-      sb += ']'
-    case other => str(sb, other.toString)
-  }
+  def render(v: Any): String = mapper.writeValueAsString(v)
 }

@@ -10,14 +10,16 @@ import org.apache.spark.sql.SparkSession
   * outputs.
   *
   *   Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
-  *        --out <dir> --sf <dir> --check-sf <dir> --cores <n> --rate <events/s>
+  *        --out <dir> --sf <dir> --cores <n> --rate <events/s>
   *
   * A traced run measures the workload twice, untraced and then with the
   * listeners attached, so the tracing overhead is a measured difference. */
 object Main {
 
-  /** Set-ups per run; `setup_s` is their median. */
-  val SetupReps = 3
+  /** Untimed set-ups first (JIT and the first Spark jobs), then the timed
+    * ones; `setup_s` is the median of their Java-thread CPU times. */
+  val PrimeSetups = 4
+  val SetupReps = 5
 
   /** The settings `graft.Bench` builds its session with, and nothing else
     * that changes the engine. The two directory settings keep every file
@@ -55,10 +57,22 @@ object Main {
     (r, (Clock.ms - t0) / 1000.0)
   }
 
-  /** CPU time of the whole process (every thread), in ms. Time the
-    * hypervisor steals from the host's vCPUs is not in it. */
-  def cpuMs(): Double = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime / 1e6
+  private val threadBean =
+    java.lang.management.ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+
+  /** CPU ns of every live Java thread: the driver, stream execution and
+    * task threads. The JIT compiler and GC threads are not Java threads, so
+    * their CPU time, most of the process's in a cold query and the noisiest
+    * part of it, is not in it; nor is time the hypervisor steals. */
+  def threadCpu(): Map[Long, Long] = {
+    val ids = threadBean.getAllThreadIds
+    ids.zip(threadBean.getThreadCpuTime(ids)).filter(_._2 >= 0).toMap
+  }
+
+  /** Java-thread CPU ms since the snapshot `from`; a thread started since
+    * counts from 0, a thread ended since is not counted. */
+  def threadCpuMsSince(from: Map[Long, Long]): Double =
+    threadCpu().map { case (id, ns) => ns - from.getOrElse(id, 0L) }.sum / 1e6
 
   def vmHwmKb(): Long =
     scala.io.Source.fromFile("/proc/self/status").getLines()
@@ -82,14 +96,17 @@ object Main {
       try {
         val w: Workload = workload match {
           case "alerts_stream" => new AlertsStream(opts("rate").toDouble, sf)
-          case "gate_backfill" => new GateBackfill(sf)
-          case "scan_batch" => new ScanBatch(sf, opts("check-sf"), out)
+          case "scan_batch" => new ScanBatch(sf, out)
           case other => throw new IllegalArgumentException(s"unknown workload $other")
         }
         val phases = scala.collection.mutable.LinkedHashMap[String, Double]()
         def phase[T](name: String)(body: => T): T = { val (r, s) = timed(body); phases(name) = s; r }
-        phase("prime")(w.prime(spark))
-        val setups = phase("setup")((1 to SetupReps).map(_ => timed(w.setup(spark, seed, seconds))))
+        phase("prime")((1 to PrimeSetups).foreach(_ => w.setup(spark, seed, seconds)))
+        val setups = phase("setup")((1 to SetupReps).map { _ =>
+          val c0 = threadCpu()
+          val (st, wallS) = timed(w.setup(spark, seed, seconds))
+          (st, wallS, threadCpuMsSince(c0) / 1000.0)
+        })
         val staged = setups.last._1
         phase("warm")(w.warm(spark, staged, work))
         val untraced = phase("measure")(w.measure(spark, staged, seconds, new Recorder(false), work))
@@ -107,7 +124,8 @@ object Main {
               "progress" -> rec.progress.records.toArray.toSeq))
           }
         val extra = if (trace) phase("extra")(w.tracedExtra(spark, staged, work)) else Map.empty[String, Any]
-        Map("setup_s" -> setups.map(_._2), "setup_info" -> w.setupInfo(staged),
+        Map("setup_wall_s" -> setups.map(_._2), "setup_cpu_s" -> setups.map(_._3),
+          "setup_info" -> w.setupInfo(staged),
           "untraced" -> untraced, "traced" -> traced, "extra" -> extra, "phases_s" -> phases)
       } catch {
         case t: Throwable =>
@@ -128,9 +146,6 @@ object Main {
   * interval, returning raw samples plus `attempted`/`failed`. */
 trait Workload {
   type Staged
-  /** Untimed first touch of the code paths [[setup]] uses, so that the
-    * set-up median is not a JIT-cold reading. */
-  def prime(spark: SparkSession): Unit = ()
   def setup(spark: SparkSession, seed: Int, seconds: Double): Staged
   def setupInfo(s: Staged): Map[String, Any] = Map.empty
   def warm(spark: SparkSession, s: Staged, work: String): Unit

@@ -111,22 +111,29 @@ def due_ms(index, rate):
     return index * 1000.0 / rate
 
 
-def alert_latencies(alerts, last_index, rate, cutoff_ms):
-    """Latency of each alert that reached the sink by cutoff_ms, measured from
-    the due time of the last event that contributed to it: the last event of
-    the alert's service in [window_start, window_end). The send time is not
-    used, so a generator running late cannot hide a stall.
+def alert_latencies(alerts, last_index, rate, closed_by_s):
+    """Latency of each alert whose window the real events close, measured
+    from the due time of the last event that contributed to it (the last
+    event of the alert's service in [window_start, window_end)) to its
+    arrival at the sink, whenever it arrives. Which alerts count is decided
+    by event time, not by arrival: an alert counts when its window ends at or
+    before closed_by_s, the last real event's watermark, so a slow alert is
+    a large sample, never a dropped one. Later windows close only at the
+    flush and are not samples. The send time is not used, so a generator
+    running late cannot hide a stall.
 
     alerts: (arrival_ms, id, service, type, window_start, window_end)
-    last_index: {(service, epoch_second): last event index in that second}"""
-    out = []
+    last_index: {(service, epoch_second): last event index in that second}
+    Returns (latencies, number of alerts closed only by the flush)."""
+    out, flush_only = [], 0
     for arrival, _id, svc, _type, ws, we in alerts:
-        if arrival > cutoff_ms:
+        if we > closed_by_s:
+            flush_only += 1
             continue
         idx = [last_index[(svc, s)] for s in range(ws, we) if (svc, s) in last_index]
         if idx:
             out.append(arrival - due_ms(max(idx), rate))
-    return out
+    return out, flush_only
 
 
 def lateness(sends, rate):

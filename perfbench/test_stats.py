@@ -70,18 +70,21 @@ class OpenLoop(unittest.TestCase):
         last_index = {("svc", 100): 9}
         sends = [(0, 10, 500.0)]
         alerts = [(1009.0, "inc-1", "svc", "ERROR_RATE_SPIKE", 100, 120)]
-        self.assertEqual(stats.alert_latencies(alerts, last_index, rate, cutoff_ms=2000.0), [1000.0])
+        self.assertEqual(stats.alert_latencies(alerts, last_index, rate, closed_by_s=120), ([1000.0], 0))
         self.assertEqual(max(stats.lateness(sends, rate)), 500.0)
         self.assertEqual(min(stats.lateness(sends, rate)), 491.0)
 
     def test_last_contributing_event_over_the_window(self):
         last_index = {("a", 100): 5, ("a", 101): 20, ("b", 102): 90}
         alerts = [(100.0, "x", "a", "t", 100, 102)]
-        self.assertEqual(stats.alert_latencies(alerts, last_index, 1000.0, 1e9), [80.0])
+        self.assertEqual(stats.alert_latencies(alerts, last_index, 1000.0, 10**9), ([80.0], 0))
 
-    def test_alerts_after_the_cutoff_are_not_samples(self):
-        alerts = [(3000.0, "x", "a", "t", 100, 101)]
-        self.assertEqual(stats.alert_latencies(alerts, {("a", 100): 1}, 1000.0, 2000.0), [])
+    def test_samples_are_chosen_by_event_time_not_arrival(self):
+        # a slow alert of a window the real events close counts, however late
+        # it arrives; an alert of a window only the flush closes does not
+        last_index = {("a", 100): 1, ("a", 110): 2}
+        alerts = [(60000.0, "slow", "a", "t", 100, 101), (50.0, "flush", "a", "t", 110, 111)]
+        self.assertEqual(stats.alert_latencies(alerts, last_index, 1000.0, closed_by_s=105), ([59999.0], 1))
 
 
 class Failures(unittest.TestCase):
