@@ -11,7 +11,10 @@ MB = 1024.0 * 1024.0
 
 # end-to-end metrics: the same names on every workload, each workload's unit
 # of work filling them (README.md, "End-to-end metrics")
-E2E_UNITS = {"setup_s": "s", "p50_ms": "ms", "throughput_per_s": "1/s", "cpu_ms_per_op": "ms"}
+E2E_UNITS = {"setup_s": "s", "p50_ms": "ms", "throughput_per_s": "1/s"}
+# reported, and its tracing overhead measured, but not gated: it follows the
+# shared host's speed (README.md, "Why CPU per operation is not gated")
+UNGATED_UNITS = {"cpu_ms_per_op": "ms"}
 OVERHEAD = ("p50_ms", "throughput_per_s", "cpu_ms_per_op")
 
 STREAM_FIELDS = ("batches", "batch_p50_ms", "planning_ms", "add_batch_ms", "wal_commit_ms",
@@ -43,7 +46,7 @@ def per_layer_names():
 def per_layer_unit(name):
     last = name.split(".")[-1]
     if name.startswith("trace_overhead."):
-        return E2E_UNITS[last]
+        return {**E2E_UNITS, **UNGATED_UNITS}[last]
     if name.startswith("self_s."):
         return "s"
     for suffix, unit in (("_ms", "ms"), ("_s", "s"), ("_mb", "MB"), ("_mb_peak", "MB")):
@@ -92,9 +95,10 @@ def scan_samples(m, bad, key="wall_ms"):
 
 
 def cpu_per_op(workload, m):
-    """Java-thread CPU ms per operation: per event offered over the open-loop
-    phase on alerts_stream, per cold execution on scan_batch. Steal does not
-    count as CPU time."""
+    """Java-thread CPU ms per operation: on alerts_stream per event sent,
+    counted from the feed's start until every query has drained the flush,
+    so all the work on the sent events and no part of a batch; on scan_batch
+    per cold execution. Steal does not count as CPU time."""
     if workload == "alerts_stream":
         return m["cpu_ms"] / m["sent"]
     runs = m["passes"][0]["runs"]
@@ -152,7 +156,9 @@ def end_to_end(raw, out: Path):
                               "n": len(raw["setup_wall_s"])},
              "rss_peak_mb": {"value": raw["rss_peak_kb"] / 1024.0, "unit": "MB", "stat": "max", "n": 1},
              "fail_ratio": {"value": stats.fail_ratio(attempted, failed), "unit": "ratio",
-                            "n": attempted}}
+                            "n": attempted},
+             "cpu_ms_per_op": {"value": e["cpu_ms_per_op"], "unit": "ms", "gated": False,
+                               "stat": "per event sent" if w == "alerts_stream" else "mean per execution"}}
     if w == "alerts_stream":
         named["alert_p50_ms"] = {"value": e["p50_ms"], "unit": "ms", "stat": "median", "n": n,
                                  "flush_only": e["_flush_only"]}

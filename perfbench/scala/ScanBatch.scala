@@ -18,8 +18,11 @@ import graft.oracle.{QueryDef, Registry, Tables}
   * query that throws in a timed pass fails too. */
 final class ScanBatch(sfDir: String, out: String) extends Workload {
 
-  /** Cold executions per query and pass. */
-  val Reps = 2
+  /** Cold executions per query and pass. A query's first timed execution
+    * (its second in the JVM) still runs code JIT has not compiled and costs
+    * ~1.5x its later ones, so the fastest of three is, in nearly every run,
+    * the faster of two warm executions. */
+  val Reps = 3
 
   val Tables10 = Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
     "events", "documents", "embeddings")
