@@ -70,56 +70,6 @@ object Bench {
     (timings.result(), errors.result(), loads.result())
   }
 
-  /** Concurrent mode (SPARK_GRAFT_CONCURRENT=N): N worker threads drain
-    * the query list from a shared queue, each query timed once while the
-    * other workers keep the scheduler loaded. This turns the recurring
-    * "full-suite pressure" adjudication narrative (single-pass readings
-    * 1.3–1.7× the isolation floor) into a measured number: the reported
-    * per-query times are BY DESIGN under contention, so they are compared
-    * against floors only to quantify the pressure multiplier, never to
-    * re-record floors. No cache/persist release runs between queries —
-    * releasePersisted() is registry-global and would drop frames other
-    * workers are mid-read (correctness would survive — Spark recomputes —
-    * but the measurement wouldn't); each query executes once, so there is
-    * no warm-reuse to scrub. Keyed persists are query-scoped; a rare
-    * shared key collision degrades to recompute, counted as contention.
-    * Jobs share the default FIFO scheduler — what a shared production
-    * cluster queue does. */
-  def timeQueriesConcurrent(
-      spark: SparkSession, sfDir: String,
-      queries: Seq[(String, (SparkSession, String) => DataFrame)],
-      workers: Int): (Seq[(String, Double)], Seq[(String, String)], Double) = {
-    val queue = new java.util.concurrent.ConcurrentLinkedQueue[(String, (SparkSession, String) => DataFrame)]()
-    queries.foreach(queue.add)
-    val timings = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-    val errors = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val t0 = System.nanoTime()
-    val threads = (1 to workers).map { i =>
-      val t = new Thread(() => {
-        var next = queue.poll()
-        while (next != null) {
-          val (name, fn) = next
-          val s0 = System.nanoTime()
-          try {
-            fn(spark, sfDir).count()
-            timings.add(name -> (System.nanoTime() - s0) / 1e9)
-          } catch {
-            case t: Throwable =>
-              errors.add(name -> s"${t.getClass.getSimpleName}: ${String.valueOf(t.getMessage).linesIterator.take(1).mkString.take(300)}")
-          }
-          next = queue.poll()
-        }
-      }, s"bench-worker-$i")
-      t.start(); t
-    }
-    threads.foreach(_.join())
-    val wall = (System.nanoTime() - t0) / 1e9
-    graft.oracle.Tables.releasePersisted()
-    spark.catalog.clearCache()
-    import scala.jdk.CollectionConverters._
-    (timings.asScala.toSeq.sortBy(_._1), errors.asScala.toSeq.sortBy(_._1), wall)
-  }
-
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
@@ -136,36 +86,7 @@ object Bench {
     val loadAtLaunch = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r16 optimization (guide §2.2/§6): let AQE re-derive CACHED plan
-      // output partitioning from measured bytes. Off (the default) every
-      // swapPersist'd census frame materializes with the raw
-      // spark.sql.shuffle.partitions layout, so each of its readers pays
-      // a fixed-partition-count map stage regardless of size (measured
-      // q156 at sf0.1: 1850 tasks/run vs 82 with the conf on); on, the
-      // cache's partitioning tracks data volume at ANY scale — the
-      // scale-adaptive posture the optimization brief asks for.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // r16 optimization (guide §2.2): AQE coalesce target, parameterised
-      // (scale-dependent — the brief's rule). Local default 2m: at bench
-      // scale the corpus-sized cached frames (a few MB) keep real
-      // parallelism for their compute-dense window/JSON passes (with the
-      // 64m default the cache-final stage coalesces them to ONE task —
-      // measured 2.2 s serial on q166's item-event frame) while census-
-      // grain frames still collapse to single-task stages. At production
-      // scale set SPARK_GRAFT_ADVISORY_PARTITION_BYTES to 64m–256m so
-      // shuffle blocks stay large (guide §2.2's block-count argument).
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "2m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.engine()
     // adjudication knobs (default = the driver contract): SPARK_GRAFT_ONLY
     // comma-separates query-name prefixes to time; SPARK_GRAFT_REPS raises
     // the per-query cold-execution count (min still reported)
@@ -182,42 +103,6 @@ object Bench {
     }
     graft.oracle.Tables.releasePersisted()
     spark.catalog.clearCache() // drop warmup-pass caches
-    // concurrent mode: measure per-query latency under N-way contention
-    // and exit (floors stay sequential-min-of-N; see timeQueriesConcurrent)
-    sys.env.get("SPARK_GRAFT_CONCURRENT").map(_.toInt).filter(_ >= 2).foreach { n =>
-      // heavy-floor queries FIRST: with name-order drain the three >6 s
-      // audits land at the tail, hold their slots while every remaining
-      // tiny query queues behind them, and the per-query contention column
-      // inflates (r12: median ×4 ratio 2.01, q11 at 8.52×) even though
-      // wall/speedup are optimal. Descending-floor launch packs the long
-      // poles at the front where the other workers amortize them; queries
-      // with no recorded floor (new this round) are assumed heavy and go
-      // first. Wall is unchanged (same work, same slots); only the
-      // per-query readings stop lying.
-      val ordered = queries.sortBy { case (nm, _) =>
-        (-Floors.forQuery(nm).getOrElse(Double.MaxValue), nm) }
-      val (ct, ce, wall) = timeQueriesConcurrent(spark, sfDir, ordered, n)
-      val qs = ct.map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
-      val errJson =
-        if (ce.isEmpty) ""
-        else ",\"errors\":" + ce.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
-          .mkString("{", ",", "}")
-      ce.foreach { case (k, v) => System.err.println(s"[bench] FAILED $k: $v") }
-      val sum = ct.map(_._2).sum
-      val cRatios =
-        if (!sfDir.contains("sf0.1")) Seq.empty[(String, Double)]
-        else ct.flatMap { case (nm, t) => Floors.forQuery(nm).map(f => (nm, t / f)) }
-      val cMed =
-        if (cRatios.isEmpty) 0.0
-        else { val s = cRatios.map(_._2).sorted; s(s.size / 2) }
-      val cWorst = cRatios.sortBy(-_._2)
-        .take(math.max(5, cRatios.count(_._2 > 2.0)))
-        .map { case (nm, r) => s"[${jsonStr(nm)},${math.round(r * 100) / 100.0}]" }
-        .mkString("[", ",", "]")
-      println(s"""{"metric":"concurrent","value":${math.round(wall * 1000) / 1000.0},"unit":"sec","workers":$n,"n":${ct.size},"sum_sec":${math.round(sum * 1000) / 1000.0},"speedup":${math.round(sum / wall * 100) / 100.0},"median_vs_floor":${math.round(cMed * 100) / 100.0},"worst_vs_floor":$cWorst,"load":${math.round(loadAtLaunch * 100) / 100.0},"queries":$qs$errJson,"sf":"$sfDir"}""")
-      spark.stop()
-      sys.exit(if (ce.nonEmpty) 1 else 0)
-    }
     val (timings, errors, qLoads) = timeQueries(spark, sfDir, queries, reps)
     val qs = timings.map { case (k, v) => jsonStr(k) + ":" + v }
       .mkString("{", ",", "}")

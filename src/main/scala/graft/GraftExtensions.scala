@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.functions._
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.IntegerType
@@ -10,40 +11,56 @@ import org.apache.spark.sql.types.IntegerType
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *
-  * makes `cosine_sim(a, b)`, `word_ngrams(ws, n)` and
-  * `minhash_signatures(arr, k)` available in SQL text and `expr(...)` on
-  * every session, including Thrift/Connect sessions where driver-side
-  * `register(spark)` calls are not reachable. The operator code paths also
-  * self-register at first use, so the extension is optional for embedded
-  * library use.
+  * makes every function in [[GraftExtensions.functions]] (`cosine_sim`,
+  * `int_dot`, `int_l2`, `word_ngrams`, ...) available in SQL text and
+  * `expr(...)` on every session, including Thrift/Connect sessions where
+  * driver-side `register(spark)` calls are not reachable. The operator
+  * code paths also self-register at first use, so the extension is
+  * optional for embedded library use.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder))
+    }
+}
+
+object GraftExtensions {
+
+  final case class NativeFunction(name: String, clazz: Class[_],
+                                  builder: Seq[Expression] => Expression) {
+    def info: ExpressionInfo = new ExpressionInfo(clazz.getName, name)
+  }
 
   private def intLit(e: Expression, what: String): Int = e match {
     case Literal(v: Int, IntegerType) => v
     case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
   }
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[graft.functions.CosineSim].getName, "cosine_sim"),
-      (args: Seq[Expression]) => graft.functions.CosineSim(args.head, args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[graft.functions.WordNGrams].getName, "word_ngrams"),
-      (args: Seq[Expression]) => graft.functions.WordNGrams(args.head, intLit(args(1), "n"))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_signatures"),
-      new ExpressionInfo(classOf[graft.functions.MinhashSignatures].getName, "minhash_signatures"),
-      (args: Seq[Expression]) => graft.functions.MinhashSignatures(args.head, intLit(args(1), "k"))))
-    ext.injectFunction((
-      FunctionIdentifier("ordered_pairs"),
-      new ExpressionInfo(classOf[graft.functions.OrderedPairs].getName, "ordered_pairs"),
-      (args: Seq[Expression]) => graft.functions.OrderedPairs(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_fingerprint"),
-      new ExpressionInfo(classOf[graft.functions.SimhashFingerprint].getName, "simhash_fingerprint"),
-      (args: Seq[Expression]) => graft.functions.SimhashFingerprint(args.head)))
+  /** The one table of native functions: the extension injects it and
+    * [[register]] registers it. */
+  val functions: Seq[NativeFunction] = Seq(
+    NativeFunction("cosine_sim", classOf[CosineSim], a => CosineSim(a.head, a(1))),
+    NativeFunction("int_dot", classOf[IntDot], a => IntDot(a.head, a(1))),
+    NativeFunction("int_l2", classOf[IntL2], a => IntL2(a.head, a(1))),
+    NativeFunction("word_ngrams", classOf[WordNGrams], a => WordNGrams(a.head, intLit(a(1), "n"))),
+    NativeFunction("minhash_signatures", classOf[MinhashSignatures],
+      a => MinhashSignatures(a.head, intLit(a(1), "k"))),
+    NativeFunction("ordered_pairs", classOf[OrderedPairs], a => OrderedPairs(a.head)),
+    NativeFunction("simhash_fingerprint", classOf[SimhashFingerprint], a => SimhashFingerprint(a.head)))
+
+  /** Register every native function in the session's function registry,
+    * so `expr(...)` and SQL text can call them without the extension.
+    * A registry lookup only — it runs no Spark job. Idempotent per
+    * function (re-registering would log a replaced-function warning per
+    * call), and synchronized: two `Par.par2` arms building operators at
+    * once cannot interleave one's existence check with the other's
+    * registration. */
+  def register(spark: SparkSession): Unit = synchronized {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { f =>
+      val id = FunctionIdentifier(f.name)
+      if (!registry.functionExists(id)) registry.registerFunction(id, f.info, f.builder)
+    }
   }
 }

@@ -147,7 +147,7 @@ object CurationOps {
   def decontaminationGateStreamStatic(docs: DataFrame, benchDocs: DataFrame,
                                       minShareNum: Int = 1,
                                       minShareDen: Int = 2): DataFrame = {
-    graft.functions.TextExprs.register(benchDocs.sparkSession)
+    graft.GraftExtensions.register(benchDocs.sparkSession)
     val vocab = TextOps.shingleArr(benchDocs, distinct = true)
       .select(explode(col("sarr")).as("s")).distinct()
       .collect().map(_.getString(0)).sorted.toSeq
@@ -226,7 +226,7 @@ object CurationOps {
     * engines agree on the row set instead of diverging on null fractions. */
   def repetitionStatsOf(docs: DataFrame, topWordPct: Int = 15,
                         top2GramPct: Int = 8, dupWordPct: Int = 68): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
+    graft.GraftExtensions.register(docs.sparkSession)
     Tables.fanned(docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
         .filter(size(col("ws")) >= 2))
       .withColumn("tw", expr(modeExpr("array_sort(ws)")))

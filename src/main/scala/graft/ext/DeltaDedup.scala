@@ -62,7 +62,7 @@ object DeltaDedup {
   def deltaDedupOf(existing: DataFrame, incoming: DataFrame,
                    maxBucket: Int = TextOps.DefaultMaxBucket,
                    minJaccard: Double = 0.5): DataFrame = {
-    graft.functions.TextExprs.register(existing.sparkSession)
+    graft.GraftExtensions.register(existing.sparkSession)
     val tagged = existing.select(col("doc_id"), col("text")).withColumn("src", lit(0))
       .unionByName(incoming.select(col("doc_id"), col("text")).withColumn("src", lit(1)))
     val base = Tables.swapPersist("delta_base",
@@ -160,7 +160,7 @@ object DeltaDedup {
     * contract). */
   def deltaGateStreamStatic(streamDocs: DataFrame, staticDocs: DataFrame,
                             mBits: Int = 1 << 14): DataFrame = {
-    graft.functions.TextExprs.register(staticDocs.sparkSession)
+    graft.GraftExtensions.register(staticDocs.sparkSession)
     val bitmap = CurationOps.bloomBitmap(staticKeys(staticDocs), mBits).localCheckpoint()
     def keyProbe(mCol: String): org.apache.spark.sql.Column = {
       val h1 = TextOps.hexVal(mCol, 1, duck = false)
@@ -289,7 +289,7 @@ object DeltaDedup {
     * and candidate-side broadcast all inherit from q64. */
   def fitStore(spark: SparkSession, existing: DataFrame,
                dir: String, fp: String): String = synchronized {
-    graft.functions.TextExprs.register(spark)
+    graft.GraftExtensions.register(spark)
     graft.ops.ArtifactStore.beginFit(dir)
     val vdir = graft.ops.ArtifactStore.versionDir(dir, fp)
     val base = Tables.swapPersist("q168_fit_base",
@@ -326,7 +326,7 @@ object DeltaDedup {
       if (!graft.ops.ArtifactStore.isFresh(dir, fp))
         fitStore(spark, existing, dir, fp)
     }
-    graft.functions.TextExprs.register(spark)
+    graft.GraftExtensions.register(spark)
     val vdir = graft.ops.ArtifactStore.versionDir(dir, fp)
     val exact = spark.read.parquet(s"$vdir/exact")
     val bandsArt = spark.read.parquet(s"$vdir/bands")

@@ -38,7 +38,7 @@ object HardNeg {
     * (NULL when the cell holds no other label or was dropped by the cap). */
   def hardNegativesOf(embeds: DataFrame, k: Int = 8, iters: Int = 2,
                       maxCell: Int = 4096): DataFrame = {
-    SemDeDup.registerKernel(embeds.sparkSession)
+    graft.GraftExtensions.register(embeds.sparkSession)
     val base = Tables.swapPersist("hardneg_base",
       KMeans.assignments(embeds.select(col("vec_id"), col("embedding")), k, iters)
         .select(col("vec_id"), col("cid"), col("q"))

@@ -114,7 +114,7 @@ object HybridRrf {
                           dfCap: Int = TextOps.DefaultDfCap,
                           alertN: Int = 5): DataFrame = {
     val spark = staticDocs.sparkSession
-    graft.functions.CosineSim.register(spark)
+    graft.GraftExtensions.register(spark)
 
     // -------- frozen lexical arm (mirrors hybridRrfOf's lex pipeline)
     val docsW = staticDocs

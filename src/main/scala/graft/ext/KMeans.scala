@@ -65,7 +65,7 @@ object KMeans {
     // r17: native fused int_l2 per centroid (the IntDot precedent) — the
     // HOF fold paid interpreted lambdas + a zipped temp array per point
     // per centroid; arithmetic bit-identical
-    graft.functions.IntL2.register(pts.sparkSession)
+    graft.GraftExtensions.register(pts.sparkSession)
     pts.crossJoin(broadcast(centsRow(cents)))
       .withColumn("darr", expr("transform(cs, c -> int_l2(q, c.cvec))"))
       .withColumn("pi", (array_position(col("darr"), array_min(col("darr"))) - 1).cast("int"))
@@ -165,7 +165,7 @@ object KMeans {
     * its subspace's structs (order inherited from the (s, cid)-sorted
     * row → first-min = lowest cid, the sequential tie rule). */
   private[ext] def assignSub(sub: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.IntL2.register(sub.sparkSession) // see [[assign]]
+    graft.GraftExtensions.register(sub.sparkSession) // see [[assign]]
     sub.crossJoin(broadcast(subCentsRow(cents)))
       .withColumn("mine", expr("filter(cs, c -> c.s = s)"))
       .withColumn("darr", expr("transform(mine, c -> int_l2(qs, c.cvec))"))

@@ -44,7 +44,7 @@ object MarginAudit {
     val cents = KMeans.fit(pts, k, iters)
     val centsRow = cents.agg(
       sort_array(collect_list(struct(col("cid"), col("cvec")))).as("cs"))
-    graft.functions.IntL2.register(embeds.sparkSession) // native kernel (r17)
+    graft.GraftExtensions.register(embeds.sparkSession) // native kernel (r17)
     pts.crossJoin(broadcast(centsRow))
       .withColumn("darr", expr("transform(cs, c -> int_l2(q, c.cvec))"))
       .withColumn("pi", (array_position(col("darr"), array_min(col("darr"))) - 1).cast("int"))

@@ -23,7 +23,7 @@ object NgramDiversity {
 
   /** (source, n, total_grams, distinct_grams, ttr_bp). */
   def diversityOf(docs: DataFrame): DataFrame = {
-    graft.functions.TextExprs.register(docs.sparkSession)
+    graft.GraftExtensions.register(docs.sparkSession)
     val d = Tables.fanned(docs).select(col("source"), split(col("text"), " ").as("ws"))
     val grams = d.select(col("source"), explode(expr(
       """concat(

@@ -237,7 +237,7 @@ object Pq {
                          m: Int = M, subDim: Int = SubDim,
                          codes: Int = Codes, iters: Int = Iters,
                          coarseK: Int = 8, coarseIters: Int = 2): DataFrame = {
-    graft.functions.IntL2.register(streamEmbeds.sparkSession) // native kernel (r17)
+    graft.GraftExtensions.register(streamEmbeds.sparkSession) // native kernel (r17)
     val p = KMeans.quantize(staticEmbeds)
     val sub = KMeans.subExplode(p, m, subDim)
     val cb = KMeans.fitSub(p, sub, m, subDim, codes, iters)

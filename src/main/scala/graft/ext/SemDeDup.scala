@@ -58,13 +58,9 @@ object SemDeDup {
     * replaces the aggregate/zip_with HOF chain — evaluated per candidate
     * pair of the within-cell join (q53/q60/q61's dominant stage), the
     * interpreted three-pass fold and its zipped temp array were the hot
-    * path. Bit-identical long arithmetic; callers register via
-    * [[registerKernel]]. */
+    * path. Bit-identical long arithmetic; callers register it via
+    * [[graft.GraftExtensions.register]]. */
   private[graft] def intDot(a: String, b: String) = s"int_dot($a, $b)"
-
-  /** Idempotent registration of the native kernel. */
-  private[graft] def registerKernel(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.functions.IntDot.register(spark)
 
   /** General form over any (vec_id, embedding array<float>) frame.
     * Output: one row per vector — (vec_id, cid, is_dup, rep_of, max_sim)
@@ -72,7 +68,7 @@ object SemDeDup {
     * representatives / singletons). */
   def semDedupOf(embeds: DataFrame, k: Int = 8, iters: Int = 2,
                  minSim: Double = 0.25, maxCell: Int = 4096): DataFrame = {
-    registerKernel(embeds.sparkSession)
+    graft.GraftExtensions.register(embeds.sparkSession)
     // Keyed persist, not bare references: the assignment is read four
     // times (the eager cell census, both pairing sides, the final
     // attach); unpersisted, each reference re-runs quantize+assign — one

@@ -34,7 +34,7 @@ object SemanticDecontam {
   def semanticDecontamOf(embeds: DataFrame, evalMaxId: Long = 50L,
                          tau: Long = 1500000L, k: Int = 8,
                          iters: Int = 2): DataFrame = {
-    graft.functions.IntL2.register(embeds.sparkSession) // native kernel (r17)
+    graft.GraftExtensions.register(embeds.sparkSession) // native kernel (r17)
     val p = Tables.swapPersist("q126_pts", KMeans.quantize(embeds))
     val asg = Tables.swapPersist("q126_asg",
       KMeans.assign(p, KMeans.fit(p, k, iters)))

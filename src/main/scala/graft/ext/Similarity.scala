@@ -1,7 +1,6 @@
 package graft.ext
 
 import graft.agg.TopK
-import graft.functions.CosineSim
 import graft.oracle.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,20 +24,13 @@ object Similarity {
   /** embeddings with vectors widened to double (float math differs between
     * engines; double is exact on both for these magnitudes). */
   private def emb(spark: SparkSession, sfDir: String): DataFrame = {
-    CosineSim.register(spark)
+    graft.GraftExtensions.register(spark)
     Tables.fanned(Tables.table(spark, sfDir, "embeddings"))
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))").as("v"), col("label"))
   }
 
   private[ext] val embCte =
     "emb AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings)"
-
-  /** Interpreted HOF formulation of cosine — kept as the equivalence oracle
-    * for [[graft.functions.CosineSim]] (CosineSimSpec). */
-  val hofCosine: String =
-    "aggregate(zip_with(qv, v, (x, y) -> x * y), cast(0 AS double), (acc, x) -> acc + x)" +
-      " / (sqrt(aggregate(transform(qv, x -> x * x), cast(0 AS double), (acc, x) -> acc + x))" +
-      " * sqrt(aggregate(transform(v, x -> x * x), cast(0 AS double), (acc, x) -> acc + x)))"
 
   // ---------------------------------------------------------------- q19
   /** Brute-force cosine top-`k` ranking for query vectors (vec_id < 20) —
@@ -315,7 +307,7 @@ object Similarity {
   def annGateStreamStatic(streamEmbeds: DataFrame, staticEmbeds: DataFrame,
                           minSim: Double = 0.8): DataFrame = {
     val spark = staticEmbeds.sparkSession
-    CosineSim.register(spark)
+    graft.GraftExtensions.register(spark)
     val census = Dispersion.censusOf(staticEmbeds).collect()
     val cents: Seq[(Int, Seq[Double])] = census.groupBy(_.getInt(0)).toSeq
       .map { case (l, rows) =>

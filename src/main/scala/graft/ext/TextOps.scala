@@ -60,7 +60,7 @@ object TextOps {
     if (!existing.exists(_.contains(rule)))
       spark.conf.set("spark.sql.optimizer.excludedRules",
         (existing.toSeq :+ rule).mkString(","))
-    graft.functions.TextExprs.register(spark)
+    graft.GraftExtensions.register(spark)
     // native fused n-gram loop (graft.functions.WordNGrams) — bit-identical
     // to the transform(sequence(...)) HOF chain it replaced, ~1 JVM call
     // per document instead of ~3 interpreted lambda evals per shingle

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
@@ -77,17 +75,4 @@ case class CosineSim(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSim {
-  /** Register `cosine_sim(a, b)` in the session's function registry so it is
-    * usable from `expr(...)` and SQL text. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry
-          .functionExists(FunctionIdentifier("cosine_sim"))) return
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (children: Seq[Expression]) => CosineSim(children.head, children(1)))
-  }
 }

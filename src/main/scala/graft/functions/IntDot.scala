@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -72,19 +70,6 @@ case class IntDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object IntDot {
-  /** Register `int_dot(a, b)` in the session's function registry so it
-    * is usable from `expr(...)` and SQL text. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry
-          .functionExists(FunctionIdentifier("int_dot"))) return
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("int_dot"),
-      new ExpressionInfo(classOf[IntDot].getName, "int_dot"),
-      (children: Seq[Expression]) => IntDot(children.head, children(1)))
-  }
-}
-
 /** Native codegen'd int64 squared-L2 distance over two `array<bigint>`
   * columns — the Lloyd assignment kernel (KMeans.assign evaluates it per
   * point per centroid; the HOF formulation paid three interpreted lambda
@@ -138,16 +123,4 @@ case class IntL2(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object IntL2 {
-  /** Register `int_l2(a, b)`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry
-          .functionExists(FunctionIdentifier("int_l2"))) return
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("int_l2"),
-      new ExpressionInfo(classOf[IntL2].getName, "int_l2"),
-      (children: Seq[Expression]) => IntL2(children.head, children(1)))
-  }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -259,37 +257,5 @@ object OrderedPairs {
       }
     }
     new GenericArrayData(out.toArray)
-  }
-}
-
-object TextExprs {
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(s"$what must be an integer literal, got $other")
-  }
-
-  /** Register `word_ngrams(ws, n)`, `minhash_signatures(arr, k)`,
-    * `ordered_pairs(ids)` and `simhash_fingerprint(arr)` in the session
-    * function registry. Idempotent PER FUNCTION (and quiet about it —
-    * re-registering logs a replaced-function warning per call otherwise):
-    * each registration is individually guarded, so a registry that holds
-    * some subset (however it got there) is completed, never skipped off
-    * a single-function sentinel. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def ensure(name: String, clazz: Class[_],
-               builder: Seq[Expression] => Expression): Unit = {
-      val id = FunctionIdentifier(name)
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, new ExpressionInfo(clazz.getName, name), builder)
-    }
-    ensure("word_ngrams", classOf[WordNGrams],
-      args => WordNGrams(args.head, intLit(args(1), "n")))
-    ensure("minhash_signatures", classOf[MinhashSignatures],
-      args => MinhashSignatures(args.head, intLit(args(1), "k")))
-    ensure("ordered_pairs", classOf[OrderedPairs],
-      args => OrderedPairs(args.head))
-    ensure("simhash_fingerprint", classOf[SimhashFingerprint],
-      args => SimhashFingerprint(args.head))
   }
 }

@@ -40,7 +40,7 @@ object CurationPipeline {
                     qualityFloor: Double = CorpusPipeline.QualityFloor,
                     residueMod: Int = 20, benchResidue: Int = 7): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.TextExprs.register(spark)
+    graft.GraftExtensions.register(spark)
     // Stage 0 (map-side, fused into the scan): plant-free scrub — counts +
     // redaction in one projection (q49's exact expressions), then the ONE
     // corpus materialization every later stage reads.

@@ -133,7 +133,7 @@ object KmvSketch {
     val sk = corpusSketch(staticDocs, k)
     require(sk.nonEmpty, "static corpus produced an empty sketch")
     val hmax = sk.last
-    graft.functions.TextExprs.register(streamDocs.sparkSession)
+    graft.GraftExtensions.register(streamDocs.sparkSession)
     streamDocs
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .withColumn("sarr", expr("array_distinct(word_ngrams(ws, 3))"))

@@ -41,7 +41,7 @@ object VectorPipeline {
   def vectorCurationOf(embeds: DataFrame, k: Int = 8, iters: Int = 2,
                        minSim: Double = 0.25, maxCell: Int = 500,
                        pct: Double = 0.9, targetPerCell: Int = 40): DataFrame = {
-    SemDeDup.registerKernel(embeds.sparkSession)
+    graft.GraftExtensions.register(embeds.sparkSession)
     val assigned = Tables.swapPersist("vecpipe_assigned",
       KMeans.assignments(embeds, k, iters)
         .select(col("vec_id"), col("cid"), col("q"), col("dist"))

@@ -1,5 +1,9 @@
 package graft.oracle
 
+import java.util.concurrent.{ExecutionException, FutureTask, TimeUnit}
+
+import org.apache.spark.sql.SparkSession
+
 /** Overlap INDEPENDENT eager constructions (guide §2.6 "Overlap
   * independent jobs"): Spark happily runs several jobs at once inside
   * one application — iterative operators here are only sequential
@@ -14,21 +18,39 @@ package graft.oracle
   *
   * The helper thread is created AT CALL TIME, so Spark's inheritable
   * thread-locals (job group, description) propagate — cancellation and
-  * UI attribution behave as if the work ran inline. Exceptions from
-  * either side rethrow to the caller. */
+  * UI attribution behave as if the work ran inline. Its jobs also carry
+  * a per-call job tag: when the caller's side `b` throws, the helper's
+  * jobs are cancelled and the helper is awaited before the exception
+  * rethrows, so no job of a failed query runs on after it, and the
+  * helper's own failure rides along as a suppressed exception. A failure
+  * of `a` rethrows once `b` has finished. */
 object Par {
 
   /** Evaluate `a` on a fresh thread while `b` runs on the caller;
     * returns both. Use ONLY for sides with no mutual data dependency. */
   def par2[A, B](a: => A, b: => B): (A, B) = {
-    val fa = new java.util.concurrent.FutureTask[A](() => a)
-    val t = new Thread(fa, s"graft-par-${System.identityHashCode(fa)}")
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    val fa = new FutureTask[A](() => a)
+    val tag = s"graft-par-${System.identityHashCode(fa)}"
+    val t = new Thread(() => { sc.foreach(_.addJobTag(tag)); fa.run() }, tag)
     t.setDaemon(true)
     t.start()
-    val rb = b
+    val rb =
+      try b
+      catch {
+        case e: Throwable =>
+          // cancel until the helper is done: a job it submits between
+          // one cancel and its exit is caught by the next
+          while (!fa.isDone) {
+            sc.foreach(_.cancelJobsWithTag(tag, "the other Par.par2 arm failed"))
+            try fa.get(100, TimeUnit.MILLISECONDS) catch { case _: Exception => () }
+          }
+          try fa.get() catch { case x: ExecutionException => e.addSuppressed(x.getCause) }
+          throw e
+      }
     try (fa.get(), rb)
     catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
+      case e: ExecutionException => throw e.getCause
     }
   }
 }

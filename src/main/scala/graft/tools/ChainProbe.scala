@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.oracle.Tables
 import graft.ops.RollingRefresh
-import org.apache.spark.sql.SparkSession
 
 /** N-cycle rolling-refresh drift probe (r13 verdict Next #2): drives
   * [[RollingRefresh.chainDriftOf]] through `SPARK_GRAFT_CHAIN_CYCLES`
@@ -22,37 +21,8 @@ object ChainProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val cycles = sys.env.getOrElse("SPARK_GRAFT_CHAIN_CYCLES", "7").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r16 optimization (guide §2.2/§6): let AQE re-derive CACHED plan
-      // output partitioning from measured bytes. Off (the default) every
-      // swapPersist'd census frame materializes with the raw
-      // spark.sql.shuffle.partitions layout, so each of its readers pays
-      // a fixed-partition-count map stage regardless of size (measured
-      // q156 at sf0.1: 1850 tasks/run vs 82 with the conf on); on, the
-      // cache's partitioning tracks data volume at ANY scale — the
-      // scale-adaptive posture the optimization brief asks for.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // r16 optimization (guide §2.2): AQE coalesce target, parameterised
-      // (scale-dependent — the brief's rule). Local default 2m: at bench
-      // scale the corpus-sized cached frames (a few MB) keep real
-      // parallelism for their compute-dense window/JSON passes (with the
-      // 64m default the cache-final stage coalesces them to ONE task —
-      // measured 2.2 s serial on q166's item-event frame) while census-
-      // grain frames still collapse to single-task stages. At production
-      // scale set SPARK_GRAFT_ADVISORY_PARTITION_BYTES to 64m–256m so
-      // shuffle blocks stay large (guide §2.2's block-count argument).
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "2m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.engine()
 
     // SPARK_GRAFT_CHAIN_BPE=1: the tokenizer-drift arm (r15 verdict
     // Next #2) — the q183 rolling fertility chain at sfDir: merges

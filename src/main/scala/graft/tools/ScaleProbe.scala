@@ -304,7 +304,6 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "2").toInt
     val root = sys.env.getOrElse("SPARK_GRAFT_PROBE_DIR", "/tmp/graft_scale_probe")
     val scales = sys.env.getOrElse("SPARK_GRAFT_PROBE_SCALES", "1,3,10")
@@ -313,35 +312,7 @@ object ScaleProbe {
     val floorMin = sys.env.getOrElse("SPARK_GRAFT_PROBE_FLOOR", "1.2").toDouble
     val perTable = sys.env.getOrElse("SPARK_GRAFT_PROBE_PER_TABLE", "5").toInt
     val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY").map(_.split(",").toSeq)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r16 optimization (guide §2.2/§6): let AQE re-derive CACHED plan
-      // output partitioning from measured bytes. Off (the default) every
-      // swapPersist'd census frame materializes with the raw
-      // spark.sql.shuffle.partitions layout, so each of its readers pays
-      // a fixed-partition-count map stage regardless of size (measured
-      // q156 at sf0.1: 1850 tasks/run vs 82 with the conf on); on, the
-      // cache's partitioning tracks data volume at ANY scale — the
-      // scale-adaptive posture the optimization brief asks for.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // r16 optimization (guide §2.2): AQE coalesce target, parameterised
-      // (scale-dependent — the brief's rule). Local default 2m: at bench
-      // scale the corpus-sized cached frames (a few MB) keep real
-      // parallelism for their compute-dense window/JSON passes (with the
-      // 64m default the cache-final stage coalesces them to ONE task —
-      // measured 2.2 s serial on q166's item-event frame) while census-
-      // grain frames still collapse to single-task stages. At production
-      // scale set SPARK_GRAFT_ADVISORY_PARTITION_BYTES to 64m–256m so
-      // shuffle blocks stay large (guide §2.2's block-count argument).
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "2m"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.engine()
 
     val readers = scaledTableReaders(spark, "/root/testdata/sf0.001", only)
     val probeSet = deriveProbeSet(readers, floorMin, perTable, only)

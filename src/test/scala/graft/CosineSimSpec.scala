@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.CosineSim
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, rng}
 
@@ -16,7 +15,7 @@ class CosineSimSpec extends SparkSpec {
 
   test("cosine_sim == HOF fold bit-for-bit on random vectors") {
     import spark.implicits._
-    CosineSim.register(spark)
+    GraftExtensions.register(spark)
     val gen = Gen.listOfN(64, Gen.chooseNum(-5.0, 5.0))
     val params = Gen.Parameters.default
     val rows = (1 to 50).map { i =>
@@ -33,7 +32,7 @@ class CosineSimSpec extends SparkSpec {
 
   test("cosine_sim is null-safe and handles self-similarity == 1.0") {
     import spark.implicits._
-    CosineSim.register(spark)
+    GraftExtensions.register(spark)
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0, 3.0))).toDF("qv", "v")
     assert(math.abs(df.select(expr("cosine_sim(qv, v)")).head.getDouble(0) - 1.0) < 1e-12)
     val withNull = df.select(expr("cosine_sim(qv, cast(NULL AS array<double>))"))
@@ -41,7 +40,7 @@ class CosineSimSpec extends SparkSpec {
   }
 
   test("cosine_sim participates in whole-stage codegen") {
-    CosineSim.register(spark)
+    GraftExtensions.register(spark)
     // local relations constant-fold; a file scan forces a real plan
     val df = graft.oracle.Tables.table(spark, sf0001, "embeddings")
       .select(expr("transform(embedding, x -> cast(x AS double))").as("qv"))

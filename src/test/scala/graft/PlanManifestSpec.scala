@@ -5,14 +5,14 @@ import graft.tools.PlanManifest
 /** Plan-stability gate: every registered query's live plan signature must
   * match the checked-in PLAN_MANIFEST.txt. A drifted counter means a plan
   * changed — if intended, regenerate the manifest
-  * (`sbt "runMain graft.tools.PlanManifest"`) and commit the one-line
+  * (`sbt "runMain graft.tools.PlanManifest manifest"`) and commit the one-line
   * diff; if not, this is the regression the manifest exists to catch. */
 class PlanManifestSpec extends SparkSpec {
 
   test("live plan signatures match PLAN_MANIFEST.txt") {
     val path = java.nio.file.Paths.get("PLAN_MANIFEST.txt")
     assert(java.nio.file.Files.exists(path),
-      "PLAN_MANIFEST.txt missing — run: sbt \"runMain graft.tools.PlanManifest\"")
+      "PLAN_MANIFEST.txt missing — run: sbt \"runMain graft.tools.PlanManifest manifest\"")
     val recorded = scala.jdk.CollectionConverters.ListHasAsScala(
         java.nio.file.Files.readAllLines(path)).asScala
       .filterNot(l => l.startsWith("#") || l.trim.isEmpty)

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.TextExprs
 import org.apache.spark.sql.functions._
 
 /** Pins the native text expressions to the HOF formulations they replaced —
@@ -17,7 +16,7 @@ class TextExprsSpec extends SparkSpec {
     }.mkString("(", " + ", ")")
 
   test("word_ngrams(ws, 3) == transform(sequence(...)) chain on fixture docs") {
-    TextExprs.register(spark)
+    GraftExtensions.register(spark)
     val docs = graft.oracle.Tables.table(spark, sf0001, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 3)
@@ -30,7 +29,7 @@ class TextExprsSpec extends SparkSpec {
 
   test("word_ngrams handles short arrays (empty result), n=1 identity") {
     import spark.implicits._
-    TextExprs.register(spark)
+    GraftExtensions.register(spark)
     val df = Seq(Seq("a"), Seq("a", "b"), Seq("a", "b", "c")).toDF("ws")
     val sizes = df.select(size(expr("word_ngrams(ws, 3)"))).collect().map(_.getInt(0)).toSeq
     assert(sizes == Seq(0, 0, 1))
@@ -40,7 +39,7 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("ordered_pairs == nested-transform HOF on fixture posting lists") {
-    TextExprs.register(spark)
+    GraftExtensions.register(spark)
     val inv = graft.ext.TextOps.docShingleArr(spark, sf0001, distinct = true)
       .select(col("doc_id"), size(col("sarr")).as("n"), explode(col("sarr")).as("s"))
       .groupBy(col("s"))
@@ -63,7 +62,7 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("minhash_signatures == md5-hex Carter-Wegman HOF chain on fixture shingles") {
-    TextExprs.register(spark)
+    GraftExtensions.register(spark)
     val sarr = graft.ext.TextOps.docShingleArr(spark, sf0001, distinct = false)
     val hof = sarr
       .withColumn("ms", expr("transform(sarr, s -> md5(s))"))
@@ -79,7 +78,7 @@ class TextExprsSpec extends SparkSpec {
   }
 
   test("simhash_fingerprint == aggregate/zip_with HOF vote on fixture shingles") {
-    TextExprs.register(spark)
+    GraftExtensions.register(spark)
     val sarr = graft.ext.TextOps.docShingleArr(spark, sf0001, distinct = true)
     val bad = sarr
       .select(expr("simhash_fingerprint(sarr)").as("a"),
@@ -99,7 +98,7 @@ class TextExprsSpec extends SparkSpec {
 
   test("null elements from arbitrary SQL callers are skipped, not NPEs") {
     import spark.implicits._
-    TextExprs.register(spark)
+    GraftExtensions.register(spark)
     // word_ngrams: a gram window containing NULL emits nothing
     val grams = Seq(Seq[String]("a", "b", null, "c", "d")).toDF("ws")
       .select(expr("word_ngrams(ws, 2)").as("g")).head.getSeq[String](0)
