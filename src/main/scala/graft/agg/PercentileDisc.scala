@@ -26,13 +26,7 @@ class PercentileDisc(q: Double) extends Aggregator[Double, ArrayBuffer[Double], 
   override def zero: ArrayBuffer[Double] = ArrayBuffer.empty[Double]
   override def reduce(b: ArrayBuffer[Double], a: Double): ArrayBuffer[Double] = { b += a; b }
   override def merge(b1: ArrayBuffer[Double], b2: ArrayBuffer[Double]): ArrayBuffer[Double] = { b1 ++= b2; b1 }
-  override def finish(b: ArrayBuffer[Double]): Double =
-    if (b.isEmpty) Double.NaN
-    else {
-      val s = b.toArray
-      java.util.Arrays.sort(s)
-      s(math.floor(q * (s.length - 1)).toInt)
-    }
+  override def finish(b: ArrayBuffer[Double]): Double = PercentileDisc.of(q, b)
   override def bufferEncoder: Encoder[ArrayBuffer[Double]] = Encoders.kryo[ArrayBuffer[Double]]
   override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
 }
@@ -53,7 +47,7 @@ class PercentileBand(q: Double) extends Aggregator[Double, ArrayBuffer[Double], 
     else {
       val s = b.toArray
       java.util.Arrays.sort(s)
-      val idx = math.floor(q * (s.length - 1)).toInt
+      val idx = PercentileDisc.rank(q, s.length)
       val r = math.max(1, math.ceil(s.length / 5000.0).toInt)
       (s(math.max(0, idx - r)), s(math.min(s.length - 1, idx + r)))
     }
@@ -62,6 +56,19 @@ class PercentileBand(q: Double) extends Aggregator[Double, ArrayBuffer[Double], 
 }
 
 object PercentileDisc {
+  /** The floor-index rule: the 0-based rank of the q-quantile of n values. */
+  def rank(q: Double, n: Int): Int = math.floor(q * (n - 1)).toInt
+
+  /** The discrete q-quantile of `xs` (NaN when empty): the one copy of the
+    * rule, shared by the aggregate and the streaming p95 windows. */
+  def of(q: Double, xs: Iterable[Double]): Double =
+    if (xs.isEmpty) Double.NaN
+    else {
+      val s = xs.toArray
+      java.util.Arrays.sort(s)
+      s(rank(q, s.length))
+    }
+
   /** p95 as a Column-producing aggregate: `p95(col("latency_ms"))`. */
   val p95 = udaf(new PercentileDisc(0.95))
 

@@ -7,17 +7,23 @@ import org.apache.spark.sql.functions._
 /** Stage 1a — sliding-window error-rate spike detector
   * (flink/error_rate_detector.py re-expressed Spark-first).
   *
-  * One declarative program serves batch AND streaming: the caller passes a
-  * static or streaming DataFrame of raw logs; Catalyst plans the same
-  * partial+final hash aggregation either way, with
-  * `EventTimeWatermark`/`StateStoreSave` inserted only in streaming mode.
-  *
-  * Scale posture: the groupBy key is (service, window) — windows make the
-  * key high-cardinality, so the 4-value `service` key from the reference
-  * does not hot-spot the exchange; map-side partial aggregation means the
-  * shuffle carries (key → {total, errors}) accumulators, not events —
-  * exactly the reference's incremental `ErrorRateAgg` intent
-  * (error_rate_detector.py:40-68), but picked automatically by Catalyst.
+  * Two branches count the windows; one projection turns counts into alerts.
+  *  - Batch: the declarative `groupBy(service, window(...))`, which Catalyst
+  *    plans as a partial + final hash aggregation. It is the reference the
+  *    streaming branch is checked against.
+  *  - Streaming: [[ServiceWindows]], keyed by `service` as in the reference
+  *    (error_rate_detector.py:141). A window closes in the micro-batch that
+  *    carries its service's closing event (max event time − the 5 s delay
+  *    ≥ end), not one trigger later as Spark's append-mode aggregation does;
+  *    an idle service's windows close when the query watermark passes them.
+  *    The state is one row per service holding its ≤ 3 open windows'
+  *    {total, errors} counts — the reference's incremental `ErrorRateAgg`
+  *    (error_rate_detector.py:40-68). Scale posture: the key has the
+  *    reference's 4 values, so the stateful stage runs on at most 4 tasks,
+  *    and each (row, window) pair is shuffled with no map-side partial
+  *    aggregation — a few thousand pairs a batch at the reference's rates.
+  *  - Shared: threshold filter, `round(…, 4)`, `Codec.incidentId` and the
+  *    column order.
   */
 object ErrorRateDetector {
 
@@ -26,6 +32,9 @@ object ErrorRateDetector {
   val Watermark = "5 seconds"     // error_rate_detector.py:136-138
   val MinVolume = 100L            // error_rate_detector.py:89
   val Threshold = 0.02            // error_rate_detector.py:93
+
+  /** The streaming branch's per-window accumulator. */
+  final case class Counts(total: Long, errors: Long)
 
   /** ISO-8601 string → event_time (P6). Malformed rows get NULL and fall
     * out of event-time windows (SURVEY §1.5 decision: drop, don't
@@ -38,26 +47,39 @@ object ErrorRateDetector {
              windowSize: String = WindowSize, slide: String = Slide,
              watermark: String = Watermark,
              minVolume: Long = MinVolume, threshold: Double = Threshold): DataFrame = {
-    val streaming = logs.isStreaming
-    val windowed = (if (streaming) logs.withWatermark("event_time", watermark) else logs)
-      .groupBy(col("service"), window(col("event_time"), windowSize, slide))
-      .agg(
-        count(lit(1)).as("total_logs"),
-        count(when(col("level") === "ERROR", 1)).as("errors"))
+    val isError = col("level") === "ERROR"
+    val counts =
+      if (logs.isStreaming)
+        ServiceWindows(logs, windowSize, slide, watermark, when(isError, 1).otherwise(0))(
+            Counts(0L, 0L))((c, vs) => Counts(c.total + vs.size, c.errors + vs.count(_ > 0)))
+          .select(col("service"),
+            timestamp_micros(col("start")).as("window_start"), timestamp_micros(col("end")).as("window_end"),
+            col("acc.total").as("total_logs"), col("acc.errors").as("errors"))
+      else
+        logs.groupBy(col("service"), window(col("event_time"), windowSize, slide))
+          .agg(count(lit(1)).as("total_logs"), count(when(isError, 1)).as("errors"))
+          .select(col("service"), col("window.start").as("window_start"), col("window.end").as("window_end"),
+            col("total_logs"), col("errors"))
+    alerts(counts, minVolume, threshold)
+  }
+
+  /** Window counts (service, window_start, window_end, total_logs, errors)
+    * → alert rows. */
+  private def alerts(counts: DataFrame, minVolume: Long, threshold: Double): DataFrame =
+    counts
       .withColumn("error_rate", round(col("errors") / col("total_logs"), 4))
       .filter(col("total_logs") >= minVolume && col("error_rate") >= threshold)
-    windowed.select(
-      Codec.incidentId(col("service"), unix_timestamp(col("window.start")), lit("ERS")).as("incident_id"),
-      col("service"),
-      lit("ERROR_RATE_SPIKE").as("type"),
-      lit("HIGH").as("severity"),
-      lit(null).cast("int").as("p95_latency"),
-      lit(null).cast("int").as("breach_count"),
-      unix_timestamp(col("window.start")).as("window_start"),
-      unix_timestamp(col("window.end")).as("window_end"),
-      col("error_rate"),
-      col("total_logs"))
-  }
+      .select(
+        Codec.incidentId(col("service"), unix_timestamp(col("window_start")), lit("ERS")).as("incident_id"),
+        col("service"),
+        lit("ERROR_RATE_SPIKE").as("type"),
+        lit("HIGH").as("severity"),
+        lit(null).cast("int").as("p95_latency"),
+        lit(null).cast("int").as("breach_count"),
+        unix_timestamp(col("window_start")).as("window_start"),
+        unix_timestamp(col("window_end")).as("window_end"),
+        col("error_rate"),
+        col("total_logs"))
 
   /** Full stage: raw JSON `value` stream → alert rows (P1 → W1/A1 → P7/P8). */
   def fromRawJson(raw: DataFrame): DataFrame =

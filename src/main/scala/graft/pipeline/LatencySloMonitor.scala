@@ -11,11 +11,16 @@ import org.apache.spark.sql.functions._
   * machine (ST1).
   *
   * Like the reference (which runs window→process then a second key_by), this
-  * is two keyed stages. In Spark a streaming aggregation cannot feed
-  * flatMapGroupsWithState inside one query, so the stages connect exactly
-  * where the reference puts its topic boundary: stage A emits window results
-  * (append mode, watermark-closed), stage B consumes them — or, in batch
-  * mode, the two compose directly in one plan.
+  * is two keyed stages. Stage A emits closed windows: in batch the
+  * declarative `groupBy(service, window(...))` with the [[PercentileDisc]]
+  * aggregate; streaming, [[ServiceWindows]] keyed by `service` (append mode,
+  * a window closes in the micro-batch that carries its service's closing
+  * event). Both take the p95 by the one floor-index rule,
+  * `PercentileDisc.of`. Spark does not run stage B's update-mode
+  * flatMapGroupsWithState after another stateful operator in one query, so
+  * the stages connect exactly where the reference puts its topic boundary:
+  * stage B consumes stage A's rows — or, in batch mode, the two compose
+  * directly in one plan.
   */
 object LatencySloMonitor {
 
@@ -27,16 +32,19 @@ object LatencySloMonitor {
                  windowSize: String = Window,
                  watermark: String = Watermark): Dataset[P95Window] = {
     import logs.sparkSession.implicits._
-    val streaming = logs.isStreaming
-    (if (streaming) logs.withWatermark("event_time", watermark) else logs)
-      .groupBy(col("service"), window(col("event_time"), windowSize))
-      .agg(PercentileDisc.p95(col("latency_ms").cast("double")).as("p95"))
-      .select(
-        col("service"),
-        unix_timestamp(col("window.start")).as("window_start"),
-        unix_timestamp(col("window.end")).as("window_end"),
-        col("p95"))
-      .as[P95Window]
+    if (logs.isStreaming)
+      ServiceWindows(logs, windowSize, windowSize, watermark, col("latency_ms"))(Seq.empty[Double])(_ ++ _)
+        .map(w => P95Window(w.service, ServiceWindows.seconds(w.start), ServiceWindows.seconds(w.end),
+          PercentileDisc.of(0.95, w.acc)))
+    else
+      logs.groupBy(col("service"), window(col("event_time"), windowSize))
+        .agg(PercentileDisc.p95(col("latency_ms").cast("double")).as("p95"))
+        .select(
+          col("service"),
+          unix_timestamp(col("window.start")).as("window_start"),
+          unix_timestamp(col("window.end")).as("window_end"),
+          col("p95"))
+        .as[P95Window]
   }
 
   /** Stage B: consecutive-breach detection (ST1). */
