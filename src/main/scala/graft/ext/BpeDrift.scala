@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.io.IO
 import graft.oracle.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -158,10 +159,10 @@ object BpeDrift {
       if (!graft.ops.ArtifactStore.isFresh(dir, fp)) fitStore(spark, docs, dir, fp)
     }
     val vdir = graft.ops.ArtifactStore.versionDir(dir, fp)
-    val ml = spark.read.parquet(s"$vdir/merges")
+    val ml = IO.parquet(spark, s"$vdir/merges")
       .orderBy(col("sweep"), col("rnk"))
       .collect().map(r => (r.getString(2), r.getString(3))).toSeq
-    val fit0 = spark.read.parquet(s"$vdir/fert0")
+    val fit0 = IO.parquet(spark, s"$vdir/fert0")
     val d = Tables.swapPersist("q185_d", docsWithDay(docs))
     // the ONLY document work is the arriving shard's delta-vocab encode —
     // the settled side rides the artifact's stored stratum sums

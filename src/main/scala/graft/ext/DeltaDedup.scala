@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.io.IO
 import graft.oracle.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -328,8 +329,8 @@ object DeltaDedup {
     }
     graft.GraftExtensions.register(spark)
     val vdir = graft.ops.ArtifactStore.versionDir(dir, fp)
-    val exact = spark.read.parquet(s"$vdir/exact")
-    val bandsArt = spark.read.parquet(s"$vdir/bands")
+    val exact = IO.parquet(spark, s"$vdir/exact")
+    val bandsArt = IO.parquet(spark, s"$vdir/bands")
     // the batch signs itself: ONE persisted pass (exact rollup, band
     // stream and the verify tid/early-pid sides all read it)
     val base = Tables.swapPersist("q168_base",

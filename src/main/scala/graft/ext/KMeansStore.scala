@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.IO
 import graft.oracle.{QueryDef, Tables}
 
 /** q170 — the centroid store: q165's warm Lloyd refresh run against
@@ -69,7 +70,7 @@ object KMeansStore {
       if (!graft.ops.ArtifactStore.isFresh(dir, fp))
         fitStore(spark, embeds, dir, fp)
     }
-    val cS = spark.read.parquet(
+    val cS = IO.parquet(spark,
       s"${graft.ops.ArtifactStore.versionDir(dir, fp)}/centroids")
     val pts = Tables.swapPersist("q170_pts", KMeans.quantize(embeds))
     val cW = KMeans.fitFrom(pts, cS, warmIters)

@@ -1,8 +1,16 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
+
+import scala.util.control.NonFatal
 
 /** Source/sink builders (S2-S5). The Kafka builders mirror the reference's
   * topology (topics app_logs_raw / incident_alerts / incident_escalations)
@@ -62,6 +70,75 @@ object Sources {
   def orc(spark: SparkSession, path: String,
           schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).orc(path)
+}
+
+/** The batch parquet reader every table and artifact read goes through.
+  *
+  * `spark.read.parquet(path)` infers the schema with a one-task Spark job
+  * that reads one footer (`ParquetUtils.inferSchema`). [[parquet]] reads
+  * the same footer on the driver and hands Spark the schema, so the read
+  * runs no job. It picks the file Spark's
+  * inference would: the path itself, or in a flat directory
+  * `_common_metadata`, then `_metadata`, then the first data file by
+  * path. It converts the footer with Spark's own `readSchemaFromFooter`
+  * and a converter set from the session's conf, as the inference job
+  * does, so the Spark row-metadata key, `nanosAsLong`, INT96 and
+  * binary-as-string follow Spark's rules.
+  *
+  * Wherever Spark's answer is not certain it is Spark that answers: with
+  * `spark.sql.parquet.mergeSchema` on, a glob, a directory with
+  * subdirectories (partition discovery), no data file, or a footer that
+  * fails to read, the plain `spark.read.parquet(path)` runs and raises
+  * its own error (e.g. `UNABLE_TO_INFER_SCHEMA` on an empty directory).
+  * Nothing is cached: every call lists the path and reads the footer. */
+object IO {
+
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  private val Summaries = Seq("_common_metadata", "_metadata")
+
+  /** Spark's listing filter (`HadoopFSUtils.shouldFilterOutPathName`):
+    * hidden `_`/`.` names and in-flight `._COPYING_` files are skipped,
+    * the summary files and `_k=v` partition names are not. */
+  private def listed(name: String): Boolean =
+    Summaries.exists(name.startsWith) ||
+      !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_"))
+
+  /** The schema Spark would infer for `path`, or None where the plain read
+    * must decide (see the object doc). */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_))) None
+    else try {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val fs = root.getFileSystem(hadoopConf)
+      val status = fs.getFileStatus(root)
+      val files = (if (status.isDirectory) fs.listStatus(root) else Array(status))
+        .filter(f => listed(f.getPath.getName)).sortBy(_.getPath.toString)
+      val pick =
+        if (files.exists(_.isDirectory)) None
+        else Summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+          .orElse(files.find(f => !Summaries.contains(f.getPath.getName)))
+      pick.map { f =>
+        val footer =
+          ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+        // the converter ParquetFileFormat.mergeSchemasInParallel builds
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
+      }
+    } catch { case NonFatal(_) => None }
+  }
 }
 
 object Sinks {

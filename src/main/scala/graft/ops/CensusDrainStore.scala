@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.IO
 import graft.oracle.Tables
 
 /** The census ARTIFACT updated by a DLQ drain (r14 verdict Next #1, the
@@ -91,7 +92,7 @@ object CensusDrainStore {
     val dir = ArtifactStore.versionDir(base, drainedFp)
     ArtifactStore.beginFit(base)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val csArt = spark.read.parquet(s"$keptDir/census")
+    val csArt = IO.parquet(spark, s"$keptDir/census")
     val (kept, late) = slices(spark, sfDir, cutUs, lateMod)
     val repaired = LateRepair
       .applyTo(csArt, LateRepair.correctionOf(kept, late, key = "dlqcensus"))
@@ -111,6 +112,6 @@ object CensusDrainStore {
     val dir =
       if (ArtifactStore.isFresh(base, fp)) ArtifactStore.versionDir(base, fp)
       else drainCommit(spark, sfDir, cutUs, lateMod)
-    spark.read.parquet(s"$dir/census")
+    IO.parquet(spark, s"$dir/census")
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.IO
 import graft.oracle.{QueryDef, Tables}
 
 /** q167 — the daily refresh as production actually schedules it:
@@ -126,10 +127,10 @@ object RefreshArtifacts {
   def refreshOf(spark: SparkSession, sfDir: String,
                 cutUs: Long = SpectralDelta.DeltaCutUs): DataFrame = {
     val dir = ensureFit(spark, sfDir, cutUs)
-    val csArt = spark.read.parquet(s"$dir/census")
-    val frontier = spark.read.parquet(s"$dir/frontier")
-    val vS = spark.read.parquet(s"$dir/spectral")
-    val rS = spark.read.parquet(s"$dir/ranks")
+    val csArt = IO.parquet(spark, s"$dir/census")
+    val frontier = IO.parquet(spark, s"$dir/frontier")
+    val vS = IO.parquet(spark, s"$dir/spectral")
+    val rS = IO.parquet(spark, s"$dir/ranks")
 
     // the ONLY corpus touch: the delta shard, filter pushed to the scan;
     // persisted once for its two window readers (delta lag + first-item

@@ -48,25 +48,27 @@ object ScaleGuard {
       .getOrElse(DefaultMaxBytes)
 
   /** Materialized block bytes of a checkpointed/cached frame, from the
-    * driver's storage registry — ZERO jobs. None when the frame's plan
-    * is not rooted at a materialized RDD (not checkpointed, or blocks
-    * already evicted). */
+    * driver's storage registry — ZERO jobs. A plan over several
+    * materialized RDDs (a join of two checkpointed frames) measures as
+    * its LARGEST one, so the gate sees the frame that could overflow it,
+    * not whichever comes first in the plan. None when no RDD under the
+    * plan is materialized (not checkpointed, or blocks already evicted). */
   def materializedBytes(df: DataFrame): Option[Long] = {
-    val viaCheckpoint = df.queryExecution.analyzed.collectFirst {
+    val rddIds = df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.flatMap { id =>
-      df.sparkSession.sparkContext.getRDDStorageInfo
-        .find(_.id == id)
-        .map(i => i.memSize + i.diskSize)
-    }
+    }.toSet
+    val viaCheckpoint = df.sparkSession.sparkContext.getRDDStorageInfo
+      .filter(i => rddIds(i.id))
+      .map(i => i.memSize + i.diskSize)
+      .maxOption
     // cached (InMemoryRelation) frames: once the column buffers are
     // materialized the relation's stats carry the REAL cached bytes
     viaCheckpoint.orElse {
-      df.queryExecution.withCachedData.collectFirst {
+      df.queryExecution.withCachedData.collect {
         case im: org.apache.spark.sql.execution.columnar.InMemoryRelation
             if im.cacheBuilder.isCachedColumnBuffersLoaded =>
           im.stats.sizeInBytes.toLong
-      }
+      }.maxOption
     }
   }
 

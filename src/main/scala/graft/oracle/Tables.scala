@@ -1,6 +1,9 @@
 package graft.oracle
 
+import graft.io.IO
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, FilterExec, GenerateExec,
+  InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -34,7 +37,7 @@ object Tables {
     if (log != null) log.add(name)
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    IO.parquet(spark, s"$sfDir/$name.parquet")
   }
 
   /** Fan a small scan out to the session's parallelism before
@@ -47,7 +50,23 @@ object Tables {
     * relevant filters/projections — the exchange pins the scan below it. */
   def fanned(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    // `df.rdd` plans and generates code for a second query just to count
+    val partitions = scanSplits(df).getOrElse(df.rdd.getNumPartitions)
+    if (partitions < target) df.repartition(target) else df
+  }
+
+  /** The split count of the one file scan under `df`'s executed plan, read
+    * off the plan `df` itself runs, when that plan is a chain of narrow
+    * row-wise nodes over the scan. None for any other shape (an exchange,
+    * AQE, a union, a coalesce, a cached relation). */
+  private[graft] def scanSplits(df: DataFrame): Option[Int] = {
+    def over(p: SparkPlan): Option[Int] = p match {
+      case scan: FileSourceScanExec => Some(scan.inputRDD.getNumPartitions)
+      case _: WholeStageCodegenExec | _: InputAdapter | _: ColumnarToRowExec | _: ProjectExec |
+           _: FilterExec | _: GenerateExec => over(p.children.head)
+      case _ => None
+    }
+    over(df.queryExecution.executedPlan)
   }
 
   /** Keyed persist with an explicit lifecycle — the write-once

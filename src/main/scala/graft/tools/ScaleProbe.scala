@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{Floors, NameFilter}
+import graft.io.IO
 import graft.oracle.{Registry, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -335,8 +336,8 @@ object ScaleProbe {
       s"SPARK_GRAFT_PROBE_EVENTS_AXIS must be users|items, got $eventsAxis")
     val dirs = scales.map(k => k -> buildDir(spark, srcDir, root, k, eventsAxis)).toMap
     scales.foreach { k =>
-      val n = spark.read.parquet(s"${dirs(k)}/documents.parquet").count()
-      val ne = spark.read.parquet(s"${dirs(k)}/events.parquet").count()
+      val n = IO.parquet(spark, s"${dirs(k)}/documents.parquet").count()
+      val ne = IO.parquet(spark, s"${dirs(k)}/events.parquet").count()
       System.err.println(s"[probe] x$k: $n documents, $ne events")
     }
     // untimed byte-level warm of every probe dir (parquet count() reads

@@ -1,0 +1,150 @@
+package graft
+
+import graft.io.IO
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** `IO.parquet` resolves a table's schema from one footer on the driver:
+  * the schema is Spark's own answer (field metadata included), every case
+  * Spark must decide still goes to Spark, nothing is memoized, and the
+  * read launches no Spark job. */
+class ParquetReadSpec extends SparkSpec {
+
+  private val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
+  private val tables = Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+    "events", "documents", "embeddings")
+
+  private def tmpDir(): String = Files.createTempDirectory("parquet_read").toString
+
+  /** The footer path answered, and with Spark's schema. */
+  private def sameAsSpark(path: String): Unit = {
+    val footer = IO.footerSchema(spark, path)
+    assert(footer.isDefined, s"$path: expected the footer path, got the fallback")
+    val expected = spark.read.parquet(path).schema
+    assert(IO.parquet(spark, path).schema == expected, s"$path: schema differs from spark.read.parquet")
+  }
+
+  /** Both reads fail alike: same exception class and error condition. */
+  private def failsAlike(path: String): Unit = {
+    def failure(read: => DataFrame): Throwable =
+      intercept[Throwable](read.schema)
+    val plain = failure(spark.read.parquet(path))
+    val ours = failure(IO.parquet(spark, path))
+    assert(ours.getClass == plain.getClass, s"$ours vs $plain")
+    def condition(t: Throwable): Option[String] = t match {
+      case e: org.apache.spark.SparkThrowable => Option(e.getCondition)
+      case _ => None
+    }
+    assert(condition(ours) == condition(plain), s"$ours vs $plain")
+  }
+
+  for (sf <- sfs) test(s"the 10 fixtures at ${Paths.get(sf).getFileName}: Spark's schema from the footer") {
+    tables.foreach(t => sameAsSpark(s"$sf/$t.parquet"))
+  }
+
+  test("Spark-written directories: nested, array, map, decimal, timestamp and field metadata; _SUCCESS and .crc present") {
+    val dir = tmpDir() + "/t"
+    val meta = new MetadataBuilder().putString("comment", "kept").putLong("n", 7L).build()
+    spark.range(0, 40, 1, 3).select(
+      col("id"),
+      struct(col("id").as("a"), struct((col("id") * 2).as("c")).as("b")).as("nested"),
+      array(col("id"), col("id") + 1).as("arr"),
+      map(col("id").cast("string"), array(col("id").cast("double"))).as("m"),
+      col("id").cast("decimal(18,4)").as("dec"),
+      col("id").cast("decimal(38,10)").as("wide"),
+      timestamp_seconds(col("id")).as("ts"),
+      timestamp_seconds(col("id")).cast("timestamp_ntz").as("ntz"),
+      col("id").cast("string").as("s", meta))
+      .write.parquet(dir)
+    val names = Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
+      names.count(_.startsWith("part-")) >= 2, names)
+    sameAsSpark(dir)
+    assert(IO.parquet(spark, dir).schema("s").metadata == meta)
+    assert(IO.parquet(spark, dir).orderBy("id").collect().toSeq ==
+      spark.read.parquet(dir).orderBy("id").collect().toSeq)
+  }
+
+  test("summary files win, as in Spark: _common_metadata over the data files") {
+    val dir = tmpDir() + "/t"
+    spark.range(5).select(col("id")).write.parquet(dir)
+    // a footer whose schema differs from every data file's: Spark reads it first
+    val other = tmpDir() + "/o"
+    spark.range(5).select(col("id").cast("string").as("other")).coalesce(1).write.parquet(other)
+    val footer = Files.list(Paths.get(other)).iterator().asScala
+      .find(_.getFileName.toString.startsWith("part-")).get
+    Files.copy(footer, Paths.get(dir, "_common_metadata"))
+    sameAsSpark(dir)
+    assert(IO.parquet(spark, dir).schema.fieldNames.toSeq == Seq("other"))
+  }
+
+  test("fallbacks give Spark's answer: mergeSchema, a partitioned directory") {
+    val dir = tmpDir()
+    spark.range(4).select(col("id")).write.parquet(s"$dir/m/a")
+    spark.range(4).select(col("id"), col("id").as("extra")).write.parquet(s"$dir/m/b")
+    val flat = s"$dir/flat"
+    Files.createDirectories(Paths.get(flat))
+    Seq("a", "b").foreach { sub =>
+      Files.list(Paths.get(s"$dir/m/$sub")).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-"))
+        .foreach(p => Files.copy(p, Paths.get(flat, s"$sub-${p.getFileName}")))
+    }
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      assert(IO.footerSchema(spark, flat).isEmpty)
+      assert(IO.parquet(spark, flat).schema == spark.read.parquet(flat).schema)
+      assert(IO.parquet(spark, flat).schema.fieldNames.toSeq == Seq("id", "extra"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    assert(IO.parquet(spark, flat).schema == spark.read.parquet(flat).schema)
+
+    val parted = s"$dir/p"
+    spark.range(6).select(col("id"), (col("id") % 2).as("k")).write.partitionBy("k").parquet(parted)
+    assert(IO.footerSchema(spark, parted).isEmpty)
+    assert(IO.parquet(spark, parted).schema == spark.read.parquet(parted).schema)
+    assert(IO.parquet(spark, parted).schema.fieldNames.toSeq == Seq("id", "k"))
+  }
+
+  test("fallbacks give Spark's error: an empty directory, a non-parquet file, a missing path") {
+    val empty = tmpDir()
+    assert(IO.footerSchema(spark, empty).isEmpty)
+    failsAlike(empty)
+    val text = Paths.get(tmpDir(), "notes.parquet")
+    Files.writeString(text, "not a parquet file\n")
+    assert(IO.footerSchema(spark, text.toString).isEmpty)
+    failsAlike(text.toString)
+    failsAlike(tmpDir() + "/missing")
+  }
+
+  test("no memo: a path rewritten with another schema reads the new schema") {
+    val dir = tmpDir() + "/t"
+    spark.range(3).select(col("id")).write.parquet(dir)
+    assert(IO.parquet(spark, dir).schema.fieldNames.toSeq == Seq("id"))
+    spark.range(3).select(col("id").cast("string").as("name"), col("id").as("n"))
+      .write.mode("overwrite").parquet(dir)
+    sameAsSpark(dir)
+    assert(IO.parquet(spark, dir).schema.fieldNames.toSeq == Seq("name", "n"))
+  }
+
+  test("a footer read launches no Spark job; Spark's inference launches one") {
+    val path = s"$sf0001/lineitem.parquet"
+    val (_, ours) = JobCount.of(spark)(IO.parquet(spark, path).schema)
+    val (_, plain) = JobCount.of(spark)(spark.read.parquet(path).schema)
+    assert(ours == 0, s"IO.parquet launched $ours jobs")
+    assert(plain == 1, s"the counter must see Spark's schema job, saw $plain")
+  }
+
+  test("lockstep: no src/main read.parquet( outside IO.parquet") {
+    val root = Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+    assert(files.size > 100, s"scanned only ${files.size} files under $root")
+    val readers = files.filter(p => "read\\s*\\.\\s*parquet\\(".r.findFirstIn(Files.readString(p)).nonEmpty)
+      .map(root.relativize(_: Path).toString)
+    assert(readers == Seq("graft/io/IO.scala"),
+      s"batch parquet reads outside graft.io.IO.parquet (read through it): $readers")
+  }
+}

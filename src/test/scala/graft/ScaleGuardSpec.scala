@@ -24,6 +24,33 @@ class ScaleGuardSpec extends SparkSpec {
       "an unmaterialized plan must not pretend to a size")
   }
 
+  test("a plan over two checkpointed frames measures as the larger one") {
+    import spark.implicits._
+    val small = (1 to 100).toDF("x").localCheckpoint()
+    val big = (1 to 100000).toDF("y").localCheckpoint()
+    // the registry is fed by the listener bus: wait until both frames show
+    def measured(df: org.apache.spark.sql.DataFrame): Long = {
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      var bytes = ScaleGuard.materializedBytes(df)
+      while (bytes.isEmpty && System.nanoTime() < deadline) {
+        Thread.sleep(20); bytes = ScaleGuard.materializedBytes(df)
+      }
+      bytes.getOrElse(fail("a checkpointed frame never reached the storage registry"))
+    }
+    val (s, b) = (measured(small), measured(big))
+    assert(s < b, s"small $s, big $b")
+    // the small frame comes first in the plan's pre-order
+    val joined = small.join(big, $"x" === $"y")
+    assert(ScaleGuard.materializedBytes(joined).contains(b))
+    withCap((s + b) / 2) {
+      assert(ScaleGuard.fits(small))
+      assert(!ScaleGuard.fits(joined), "the big side exceeds the cap: the join must take the fallback arm")
+      assert(!ScaleGuard.gatedBroadcast(joined).queryExecution.analyzed.collectFirst {
+        case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
+      }.nonEmpty)
+    }
+  }
+
   test("gatedBroadcast hints under the cap and falls back above it") {
     import spark.implicits._
     val df = (1 to 1000).toDF("x").localCheckpoint()
