@@ -36,10 +36,7 @@ import org.apache.spark.sql.functions._
   * reads it twice, SemDeDup three times) re-reads k checkpointed rows,
   * never the Lloyd subtree. Total corpus scans for fit + one assignment
   * pass = iters + 1 (PlanSpec-pinned: the final q51 plan contains
-  * exactly ONE parquet scan), or 1 with `cachePoints`, which
-  * materializes the quantized points once and serves every Lloyd pass
-  * from the cache (the production setting; at fixture scale the rescan
-  * is cheaper than the cache write). Without the checkpoint each
+  * exactly ONE parquet scan). Without the checkpoint each
   * reference re-embedded the whole loop — round 5 measured 15 scans in
   * q51's plan and 24+ in q53's. */
 object KMeans {
@@ -213,12 +210,8 @@ object KMeans {
   /** Final-model per-vector assignment over any (vec_id, embedding) frame:
     * (vec_id, q, cid, dist) — the input to per-cluster operators
     * (SemDeDup's within-cell dedup, cluster-stratified sampling). */
-  def assignments(embeds: DataFrame, k: Int = 8, iters: Int = 2,
-                  cachePoints: Boolean = false): DataFrame = {
-    val pts = if (cachePoints) Tables.swapPersist("kmeans_points", quantize(embeds))
-              else quantize(embeds)
-    assign(pts, fit(pts, k, iters))
-  }
+  def assignments(embeds: DataFrame, k: Int = 8, iters: Int = 2): DataFrame =
+    assignmentsQuantized(quantize(embeds), k, iters)
 
   /** [[assignments]] over a pre-quantized (vec_id, q) frame (PQ's
     * per-subspace coder slices one shared quantized corpus). */
@@ -231,29 +224,16 @@ object KMeans {
     * seeds' actual vec_ids), reporting per-cluster size, exact integer
     * inertia under the final model, and a position-weighted centroid
     * checksum (a hashable witness of the centroid values themselves).
-    *
-    * `cachePoints` materializes the quantized corpus once so the iters+1
-    * corpus passes (Lloyd rounds + the final assignment) read the cache
-    * instead of rescanning the source — the production setting for any
-    * corpus where a scan is not free (default off: at fixture scale the
-    * rescan is cheaper than the cache write, and the per-pass plan is
-    * identical either way). The centroids themselves come back
-    * checkpointed from [[fit]], so the checksum and assignment reads of
-    * the fixed point cost k rows each, not a loop re-execution. */
+    * The centroids come back checkpointed from [[fit]], so the checksum
+    * and assignment reads of the fixed point cost k rows each, not a loop
+    * re-execution. */
   def kmeansOf(embeds: DataFrame, k: Int = 8, iters: Int = 2,
-               cachePoints: Boolean = false, checkpointEvery: Int = 5): DataFrame = {
-    // swapPersist, not a bare .cache(): keyed lifecycle — a re-invocation
-    // releases the previous corpus-scale cached frame instead of pinning
-    // one per call for the session lifetime (Tables.swapPersist scaladoc).
-    val pts = if (cachePoints) Tables.swapPersist("kmeans_points", quantize(embeds))
-              else quantize(embeds)
-    kmeansOfQuantized(pts, k, iters, checkpointEvery)
-  }
+               checkpointEvery: Int = 5): DataFrame =
+    kmeansOfQuantized(quantize(embeds), k, iters, checkpointEvery)
 
   /** [[kmeansOf]] over an already-quantized (vec_id, q) frame — the entry
     * point for callers that slice or cache the quantized corpus themselves
-    * (PQ fits one model PER SUBSPACE off one shared quantized frame; a
-    * per-fit cachePoints would thrash the single persist key). */
+    * (PQ fits one model PER SUBSPACE off one shared quantized frame). */
   def kmeansOfQuantized(pts: DataFrame, k: Int = 8, iters: Int = 2,
                         checkpointEvery: Int = 5): DataFrame = {
     val cents = fit(pts, k, iters, checkpointEvery)

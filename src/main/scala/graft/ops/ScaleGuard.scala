@@ -19,14 +19,15 @@ import org.apache.spark.sql.functions.broadcast
   * The gate measures the frame it guards WITHOUT an extra job: every
   * guarded frame is already materialized (`localCheckpoint`/`cache` —
   * the loops checkpoint their inter-round state anyway), so its
-  * in-memory/on-disk block bytes are in the driver's storage registry.
+  * in-memory/on-disk block bytes are in the block-manager master, which
+  * holds them before the materializing job returns.
   * Census frames derived from a measured frame at the same-or-smaller
   * grain (per-round contrib/nbrMin tables: ≤ one row per node) inherit
   * the measured frame's verdict — pass the measured frame as
   * `measuredFrom`.
   *
   * Failure direction: an UNMEASURABLE frame broadcasts (the pre-guard
-  * behavior) — the registry lookup only fails if the frame is not
+  * behavior) — the block lookup only fails if the frame is not
   * actually materialized, which the loops guarantee; ScaleGuardSpec
   * pins that the lookup works on a checkpointed frame and that the
   * fallback engages under a lowered cap. */
@@ -48,19 +49,19 @@ object ScaleGuard {
       .getOrElse(DefaultMaxBytes)
 
   /** Materialized block bytes of a checkpointed/cached frame, from the
-    * driver's storage registry — ZERO jobs. A plan over several
-    * materialized RDDs (a join of two checkpointed frames) measures as
-    * its LARGEST one, so the gate sees the frame that could overflow it,
-    * not whichever comes first in the plan. None when no RDD under the
-    * plan is materialized (not checkpointed, or blocks already evicted). */
+    * block-manager master ([[org.apache.spark.graft.BlockSizes]]) — ZERO
+    * jobs, and current as soon as the checkpoint returns. A plan over
+    * several materialized RDDs (a join of two checkpointed frames)
+    * measures as its LARGEST one, so the gate sees the frame that could
+    * overflow it, not whichever comes first in the plan. None when no RDD
+    * under the plan is materialized (not checkpointed, or blocks already
+    * evicted). */
   def materializedBytes(df: DataFrame): Option[Long] = {
     val rddIds = df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }.toSet
-    val viaCheckpoint = df.sparkSession.sparkContext.getRDDStorageInfo
-      .filter(i => rddIds(i.id))
-      .map(i => i.memSize + i.diskSize)
-      .maxOption
+    val viaCheckpoint = org.apache.spark.graft.BlockSizes
+      .rddBytes(df.sparkSession.sparkContext, rddIds).values.maxOption
     // cached (InMemoryRelation) frames: once the column buffers are
     // materialized the relation's stats carry the REAL cached bytes
     viaCheckpoint.orElse {

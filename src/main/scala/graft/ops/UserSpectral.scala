@@ -27,38 +27,26 @@ import graft.oracle.{QueryDef, Tables}
   * Scale shape: THE one corpus-scale join in the embedding family, and
   * it is the broadcast-able one — coords is vocab-grain (≤ 24 B/node:
   * ~24 MB at a 10⁶-item catalog, a plain broadcast). The broadcast is a
-  * COUNT-GATED hint, not an unconditional one (round-11 advice #4
-  * follow-through: an unconditional `broadcast()` hint ignores
-  * autoBroadcastJoinThreshold entirely, so the scaladoc's promised
-  * 10⁷-node fallback did not actually exist): coords is vocab-grain and
-  * already materialized by the caller, so counting it is one cheap job,
-  * and past [[BroadcastNodeCap]] nodes the hint is omitted and the plan
-  * degrades to a shuffled equi-join — never a BNLJ (PlanSpec pins both
-  * shapes; the degraded path's growth is probed on the items axis,
-  * BASELINE.md round 12). One map-side-combining user rollup, then
-  * census-grain folds. Int64: per-user sums are DECIMAL(38,0)/HUGEINT
-  * (|v| ≤ 10⁶ × event count). */
+  * SIZE-GATED hint, not an unconditional one (an unconditional
+  * `broadcast()` hint ignores autoBroadcastJoinThreshold entirely):
+  * coords is vocab-grain and checkpointed by the caller, so
+  * [[ScaleGuard.gatedBroadcast]] measures its stored blocks without a
+  * job, and past the `spark.graft.broadcast.maxBytes` cap the hint is
+  * omitted and the plan degrades to a shuffled equi-join — never a BNLJ
+  * (PlanSpec pins both shapes; the degraded path's growth is probed on
+  * the items axis, BASELINE.md round 12). One map-side-combining user
+  * rollup, then census-grain folds. Int64: per-user sums are
+  * DECIMAL(38,0)/HUGEINT (|v| ≤ 10⁶ × event count). */
 object UserSpectral {
 
   /** Grid pitch: 0.1 in the 10⁶ fixed-point scale. */
   val BucketFp = 100000L
 
-  /** Broadcast the coords side only below this node count (~24 MB at
-    * the default). `SPARK_GRAFT_Q161_BCAST_CAP` overrides it so the
-    * scale probe can time the over-threshold (shuffled) plan on the
-    * same fixtures. */
-  val BroadcastNodeCap: Long =
-    sys.env.get("SPARK_GRAFT_Q161_BCAST_CAP").map(_.toLong)
-      .getOrElse(1000000L)
-
   /** (b1, b2, users, share_bp) over item coords (node, v1fp, v2fp) and
     * item events (user_id, item). */
-  def gridOf(coords: DataFrame, itemEvents: DataFrame,
-             broadcastNodeCap: Long = BroadcastNodeCap): DataFrame = {
+  def gridOf(coords: DataFrame, itemEvents: DataFrame): DataFrame = {
     val c = coords.select(col("node"), col("v1fp"), col("v2fp"))
-    // vocab-grain count (callers pass materialized coords — one tiny job)
-    val cSide = if (c.count() <= broadcastNodeCap) broadcast(c) else c
-    itemEvents.join(cSide, itemEvents("item") === c("node"))
+    itemEvents.join(ScaleGuard.gatedBroadcast(c), itemEvents("item") === c("node"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n"),
         sum(col("v1fp").cast(DecimalType(38, 0))).as("s1"),

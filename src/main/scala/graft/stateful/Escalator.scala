@@ -12,8 +12,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * README claims otherwise; code wins, SURVEY §8.2).
   *
   * TTL parity (incident_aggregator.py:27-33): Flink's 1 h OnCreateAndWrite
-  * TTL ≡ a processing-time timeout refreshed on every write — idle services
-  * lose their counter after `ttlMs`, matching full-snapshot cleanup.
+  * TTL. The counter is stored with its expiry deadline (processing time of
+  * the write + `ttlMs`), refreshed on every write; rows arriving after the
+  * deadline count from 0. The deadline is absolute, so it holds across a
+  * restart: a counter that expired while the query was down is not revived
+  * by the restored checkpoint, as with Flink's full-snapshot cleanup. A
+  * processing-time timeout only removes idle keys — Spark reports
+  * `hasTimedOut` only for keys without input in the batch, so it cannot
+  * enforce the TTL by itself.
   *
   * Determinism: a group's micro-batch slice is sorted by
   * (window_start, incident_id) before counting, so replays tag the same
@@ -24,6 +30,9 @@ object Escalator {
 
   val EscalationLimit = 3            // incident_aggregator.py:55
   val TtlMs: Long = 3600 * 1000L     // incident_aggregator.py:29
+
+  /** The per-service counter and the processing time it expires at. */
+  final case class EscalationState(count: Int, expiresAtMs: Long)
 
   /** Pure transition: (count before) → (count after, escalated?). */
   def step(count: Int, limit: Int): (Int, Boolean) = {
@@ -47,8 +56,7 @@ object Escalator {
     *
     * NB with a processing-time timeout the micro-batch engine keeps
     * scheduling empty timeout-check batches, so `processAllAvailable` on a
-    * test query never settles — the reason the TTL path is covered by the
-    * pure [[step]]/batch tests instead. */
+    * test query never settles — TTL tests poll their sink instead. */
   def escalate(alerts: Dataset[IncidentAlert],
                limit: Int = EscalationLimit,
                ttlMs: Option[Long] = Some(TtlMs)): Dataset[EscalationEvent] = {
@@ -58,19 +66,20 @@ object Escalator {
       else GroupStateTimeout.NoTimeout
     alerts.groupByKey(_.service)
       .flatMapGroupsWithState(OutputMode.Update, timeoutConf) {
-        (_: String, rows: Iterator[IncidentAlert], state: GroupState[Int]) =>
-          if (state.hasTimedOut) { // TTL expiry == Flink state cleanup
+        (_: String, rows: Iterator[IncidentAlert], state: GroupState[EscalationState]) =>
+          if (state.hasTimedOut) { // idle past the TTL: drop the key
             state.remove()
             Iterator.empty
           } else {
-            var count = state.getOption.getOrElse(0)
+            val now = state.getCurrentProcessingTimeMs()
+            var count = state.getOption.filter(now < _.expiresAtMs).fold(0)(_.count)
             val out = rows.toSeq.sortBy(a => (a.window_start, a.incident_id)).map { a =>
               val (c2, esc) = step(count, limit)
               count = c2
               tag(a, esc)
             }
-            state.update(count)
-            // refresh TTL on every write (OnCreateAndWrite); no-op in batch
+            // refresh the TTL on every write (OnCreateAndWrite)
+            state.update(EscalationState(count, ttlMs.fold(Long.MaxValue)(now + _)))
             ttlMs.foreach { t =>
               try state.setTimeoutDuration(t) catch { case _: UnsupportedOperationException => () }
             }

@@ -10,12 +10,16 @@ import graft.streaming.TransitionGate.{FrontierState, ItemEvent}
   * flagged the gap this closes: W7's watermark semantics DROP late events
   * and q171's batch repair consumes a late shard, but nothing connected
   * the two. This gate is the connection: instead of dropping, each
-  * arriving event is judged against its user's frontier (the SAME
-  * one-row-per-user transformWithState state [[TransitionGate]] keeps) —
+  * arriving event is judged against its user's frontier (one
+  * [[TransitionGate.FrontierState]] row per user, transformWithState
+  * state) —
   *
   *   - at-or-after the frontier under (t, event_id): KEPT — emit its
-  *     transition exactly like the transition gate and advance the
-  *     frontier;
+  *     (frontier item → item) transition and advance the frontier. The
+  *     first event of a user opens the chain silently; a self-loop
+  *     advances the frontier but is not emitted (the lag-chain semantics
+  *     of [[graft.ops.PageRankDelta.directedCensusOf]]), so the folded
+  *     transition lane IS the directed census (TransitionGateSpec);
   *   - strictly BEFORE the frontier: LATE — emit the event itself on the
   *     DLQ lane, untouched; the frontier does NOT move and no (wrong)
   *     transition is emitted. A late event spliced naively would emit
@@ -36,12 +40,12 @@ import graft.streaming.TransitionGate.{FrontierState, ItemEvent}
   * USER's chain has moved past it — a global watermark would both
   * over-drop (slow users) and under-drop (fast users).
   *
-  * Scale shape: identical to [[TransitionGate]] — one FrontierState row
-  * per user (RocksDB-capable), each micro-batch shuffles only itself on
-  * user_id, per-key transient memory bounded by the trigger's batch
-  * sizing. Within a batch rows process in (t, event_id) order, so
-  * intra-batch disorder never lands in the DLQ (Spark's own watermark
-  * contract); lateness is judged across batches only. */
+  * Scale shape: one FrontierState row per user (RocksDB-capable), each
+  * micro-batch shuffles only itself on user_id, per-key transient memory
+  * bounded by the trigger's batch sizing. Within a batch rows process in
+  * (t, event_id) order, so intra-batch disorder never lands in the DLQ
+  * (Spark's own watermark contract); lateness is judged across batches
+  * only. */
 object LateDlq {
 
   /** One routed output row. `kind` ∈ {"transition", "late"}:

@@ -1,94 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
-
-/** The incremental-maintenance arc's INGESTION face (round-12 verdict
-  * #3): the per-user frontier that q154 proved sufficient for census
-  * maintenance — and that [[graft.ops.RefreshArtifacts]] checkpoints as
-  * a parquet artifact between daily batch runs — kept as STREAMING
-  * state instead, so the transition census updates continuously as
-  * events arrive rather than once per shard landing.
-  *
-  * Each arriving item-event either extends its user's transition chain
-  * (previous item known → emit exactly one (src, dst) transition) or
-  * opens it (first event for the user → emit nothing, remember the
-  * item). The emitted stream, folded by (src, dst) count, IS the
-  * directed transition census — and because the ONLY cross-batch state
-  * is the per-user last item, the fold over (settled batch, then delta
-  * batch) reproduces q154's decomposition by construction: within-batch
-  * transitions are the settled/delta lag censuses, the first emission
-  * of each user's second batch is the frontier-join straddle.
-  * TransitionGateSpec pins the folded gate census ≡
-  * [[graft.ops.PageRankDelta.fullDirectedCensusOf]] ≡ the
-  * settled+delta+straddle decomposition on the real fixture corpus, and
-  * a RecoverySpec-style restart case pins that the frontier survives a
-  * crash between the batches (state loss would drop every straddle
-  * transition — a different census).
-  *
-  * Ordering contract: within one micro-batch a user's rows process in
-  * (t, event_id) order (the q154 frontier contract — unique per user);
-  * ACROSS batches arrival order is trusted, exactly like the daily-
-  * shard model where shard N+1's events follow shard N's. Self-loop
-  * transitions are not emitted but still advance the frontier (the
-  * lag-chain semantics of [[graft.ops.PageRankDelta.directedCensusOf]]).
-  *
-  * Scale shape: state is ONE row per user (two longs + the item — the
-  * same frame [[graft.ops.Frontier.lastOf]] computes in batch), RocksDB-
-  * capable via transformWithState; each micro-batch shuffles only its
-  * own rows on user_id. The census consumer downstream aggregates
-  * (src, dst) counts — vocab²-bounded state, the q154 envelope.
-  * PER-BATCH bound (distinct from the per-user STATE bound):
-  * handleInputRows buffers and sorts one key's batch rows to impose the
-  * (t, event_id) order, so transient memory per key is that key's
-  * MICRO-BATCH row count — bounded by trigger sizing (maxOffsetsPerTrigger
-  * / file-batch caps), not by the corpus; a hot key with an unbounded
-  * trigger is the one shape this buffering punishes, and the mitigation
-  * is the trigger cap, not a code change (dropping the sort would require
-  * trusting intra-batch arrival order, which file sources don't grant). */
+/** The per-user frontier types of the incremental-maintenance arc's
+  * streaming face. The one frontier gate is [[LateDlq.routedOf]]: its
+  * `transition` lane emits each user's (src, dst) transitions — whose
+  * fold is the directed census, q154's settled + delta + straddle
+  * decomposition by construction — and its `late` lane banks arrivals
+  * that fall behind the frontier. [[graft.tools.GateReplay]] and the
+  * benchmark's gate probe feed it these events. */
 object TransitionGate {
 
   /** (user_id, event_id, item, t) — the prepped item-event grain
     * ([[graft.ops.CensusDelta]]'s `prep`), t in epoch micros. */
   final case class ItemEvent(user_id: Long, event_id: Long, item: Long, t: Long)
 
-  /** One emitted transition of `user_id`'s chain. */
-  final case class Transition(user_id: Long, src: Long, dst: Long, t: Long)
-
-  /** The frontier: the user's last item with its (t, event_id) — kept
-    * for observability/debugging; the transition logic needs only
-    * `item`. */
+  /** The frontier: the user's last item with its (t, event_id) — the
+    * order key lateness is judged by. */
   final case class FrontierState(item: Long, t: Long, event_id: Long)
-
-  class GateProcessor extends StatefulProcessor[Long, ItemEvent, Transition] {
-    @transient private var frontier: ValueState[FrontierState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      frontier = getHandle.getValueState[FrontierState](
-        "frontier", Encoders.product[FrontierState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[ItemEvent],
-                                 timers: TimerValues): Iterator[Transition] = {
-      var st = Option(frontier.get())
-      val out = List.newBuilder[Transition]
-      rows.toSeq.sortBy(e => (e.t, e.event_id)).foreach { e =>
-        st match {
-          case Some(f) if f.item != e.item =>
-            out += Transition(key, f.item, e.item, e.t)
-          case _ => () // chain opens, or a self-loop (not emitted)
-        }
-        st = Some(FrontierState(e.item, e.t, e.event_id))
-      }
-      st.foreach(frontier.update)
-      out.result().iterator
-    }
-  }
-
-  /** The gate: item events → their transition stream, per-user frontier
-    * checkpointed as streaming state. */
-  def transitionsOf(events: Dataset[ItemEvent]): Dataset[Transition] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new GateProcessor, TimeMode.None(), OutputMode.Update())
-  }
 }

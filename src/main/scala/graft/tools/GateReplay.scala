@@ -11,8 +11,8 @@ import graft.streaming.TransitionGate.ItemEvent
 /** Streaming-gate throughput replay (r14 verdict Next #4): the bench's
   * `replay_sec` times only the reference 4-stage pipeline, so a
   * throughput regression in the maintenance arc's streaming face — the
-  * transformWithState frontier gates ([[graft.streaming.TransitionGate]]
-  * / [[graft.streaming.LateDlq]]) — was invisible to the artifact. This
+  * transformWithState frontier gate ([[graft.streaming.LateDlq]]) — was
+  * invisible to the artifact. This
   * replays the WHOLE item-event corpus of an sfDir through the DLQ gate
   * under the q172 arrival model (shard width scaled so the replay runs a
   * fixed number of micro-batches regardless of SF; the late cohort

@@ -4,8 +4,8 @@ import graft.ext.KMeans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Pins the k-means execution knobs (cachePoints, checkpointEvery) as pure
-  * physical-plan levers — bit-identical output — and the rank-based seeding
+/** Pins the k-means execution knob (checkpointEvery) as a pure
+  * physical-plan lever — bit-identical output — and the rank-based seeding
   * contract on sparse vec_id frames. The int64 fixed-point math itself is
   * oracle-checked (q51); these cover the paths the fixture binding's
   * defaults never execute. */
@@ -14,13 +14,11 @@ class KMeansSpec extends SparkSpec {
   private def canon(df: DataFrame): Seq[Seq[Any]] =
     df.orderBy("cid").collect().map(_.toSeq.toList).toList
 
-  test("cachePoints / checkpointEvery change execution only — output bit-identical") {
+  test("checkpointEvery changes execution only — output bit-identical") {
     val embeds = graft.oracle.Tables.table(spark, sf0001, "embeddings")
     val base = canon(KMeans.kmeansOf(embeds))
     assert(base.nonEmpty)
-    assert(canon(KMeans.kmeansOf(embeds, cachePoints = true)) == base)
     assert(canon(KMeans.kmeansOf(embeds, checkpointEvery = 1)) == base)
-    assert(canon(KMeans.kmeansOf(embeds, cachePoints = true, checkpointEvery = 1)) == base)
   }
 
   test("sparse vec_id frames seed k clusters; labels are the seeds' actual ids") {

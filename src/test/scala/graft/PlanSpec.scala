@@ -1214,25 +1214,29 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q161 over the broadcast cap: the coords join degrades to a shuffled equi-join — never BNLJ — and the census is unchanged") {
-    // round-11 verdict #4: the 10^7-node fallback was only declared in
-    // the scaladoc (an unconditional broadcast() hint ignores the
-    // threshold). The hint is now count-gated; this pins the over-cap
-    // shape with auto-broadcast ALSO off (the real too-big-to-broadcast
-    // regime — with it on, the planner would re-broadcast the tiny
-    // fixture side on its own and hide the degradation).
+    // an unconditional broadcast() hint ignores the threshold, so the
+    // hint goes through ScaleGuard's byte cap; this pins the over-cap
+    // shape (cap 0) with auto-broadcast ALSO off (the real
+    // too-big-to-broadcast regime — with it on, the planner would
+    // re-broadcast the tiny fixture side on its own and hide the
+    // degradation).
     import spark.implicits._
     val coords = Seq((1L, 100000L, -50000L), (2L, 900000L, 250000L),
       (3L, -400000L, 0L)).toDF("node", "v1fp", "v2fp")
     val items = Seq((10L, 1L), (10L, 2L), (11L, 2L), (12L, 3L), (12L, 1L))
       .toDF("user_id", "item")
-    val under = plan(graft.ops.UserSpectral.gridOf(coords, items, broadcastNodeCap = 100))
+    def overCap[A](body: => A): A = {
+      spark.conf.set(graft.ops.ScaleGuard.MaxBytesKey, "0")
+      try body finally spark.conf.unset(graft.ops.ScaleGuard.MaxBytesKey)
+    }
+    val under = plan(graft.ops.UserSpectral.gridOf(coords, items))
     assert(under.contains("BroadcastHashJoin"),
       s"under the cap the coords side broadcasts:\n$under")
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try {
-      val over = plan(graft.ops.UserSpectral.gridOf(coords, items, broadcastNodeCap = 0))
+      val over = overCap(plan(graft.ops.UserSpectral.gridOf(coords, items)))
       val initial = executedPortion(over)
       assert(!initial.contains("BroadcastHashJoin"),
         s"over the cap the hint must be gone:\n$over")
@@ -1241,9 +1245,9 @@ class PlanSpec extends SparkSpec {
       assert(!over.contains("BroadcastNestedLoopJoin") && !over.contains("CartesianProduct"),
         s"never BNLJ/cartesian on the corpus join:\n$over")
       // and the two shapes agree on the answer
-      val a = graft.ops.UserSpectral.gridOf(coords, items, broadcastNodeCap = 0)
-        .collect().map(_.toSeq).toSet
-      val b = graft.ops.UserSpectral.gridOf(coords, items, broadcastNodeCap = 100)
+      val a = overCap(graft.ops.UserSpectral.gridOf(coords, items)
+        .collect().map(_.toSeq).toSet)
+      val b = graft.ops.UserSpectral.gridOf(coords, items)
         .collect().map(_.toSeq).toSet
       assert(a == b, s"shuffled and broadcast shapes must agree: $a vs $b")
     } finally spark.conf.set(key, prev)

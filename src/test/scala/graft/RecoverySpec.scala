@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.{EscalationEvent, IncidentAlert, P95Window}
-import graft.stateful.{BreachDetector, Escalator, Processors}
+import graft.stateful.{BreachDetector, Escalator}
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -17,8 +17,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the combined output == the uninterrupted run. The cut points are chosen
   * so state LOSS would produce a DIFFERENT answer (fewer alerts, a different
   * deterministic incident id, an untagged escalation) — a restart that
-  * silently reset state cannot pass. Covers both mechanisms: fMGWS
-  * (HDFS-backed state store) and transformWithState on RocksDB.
+  * silently reset state cannot pass. Each restart case runs on both
+  * state-store providers (HDFS-backed default and RocksDB).
   *
   * Sink: `foreachBatch` into a driver-side buffer — the memory sink REFUSES
   * checkpoint recovery (recoverQueryFromCheckpointUnsupportedError), and
@@ -66,7 +66,7 @@ class RecoverySpec extends SparkSpec {
 
   /** 7-window ST1 scenario. Cut after the first 2 breaches: the count=2
     * state exists only in the checkpoint at the stop. Uninterrupted truth
-    * (batch replay — stream==batch pinned in StreamingSpec/ProcessorsSpec):
+    * (batch replay — stream==batch pinned in StreamingSpec):
     * alerts at windows 2 and 6. If the restart lost state, window 2 would
     * count as the FIRST breach, window 3 resets, and the only alert would
     * fire at window 6 — one alert instead of two. */
@@ -104,18 +104,18 @@ class RecoverySpec extends SparkSpec {
     runSt1Restart("rec_st1_fmgws", ds => BreachDetector.detect(ds))
   }
 
-  test("ST1 transformWithState/RocksDB: restart from checkpointLocation == uninterrupted run") {
+  test("ST1 RocksDB: restart from checkpointLocation == uninterrupted run") {
     withRocksDB {
-      runSt1Restart("rec_st1_tws", ds => Processors.detectBreaches(ds))
+      runSt1Restart("rec_st1_rocksdb", ds => BreachDetector.detect(ds))
     }
   }
 
   /** ST2 scenario: 2 alerts, crash, 1 more. The 3rd must come back tagged
     * ESCALATED — possible only if count=2 survived the restart (a reset
     * counter would see it as the 1st). */
-  test("ST2 fMGWS: escalation count survives restart (3rd alert tagged)") {
+  private def runSt2Restart(tag: String): Unit = {
     import spark.implicits._
-    val ckpt = ckptDir("rec_st2_fmgws")
+    val ckpt = ckptDir(tag)
     val stream = MemoryStream[IncidentAlert]
     val col = new Collector[EscalationEvent]
 
@@ -135,57 +135,40 @@ class RecoverySpec extends SparkSpec {
       s"3rd alert must be escalated from recovered count: $got")
   }
 
-  test("ST2 TWS/RocksDB: TTL keeps running WHILE the query is down — state expired at restart") {
-    import spark.implicits._
-    withRocksDB {
-      val ckpt = ckptDir("rec_ttl")
-      val stream = MemoryStream[IncidentAlert]
-      val col = new Collector[EscalationEvent]
-      def start(): StreamingQuery =
-        col.sinkOf(Processors.escalate(stream.toDS(),
-          ttl = java.time.Duration.ofSeconds(2)), ckpt)
-
-      val q1 = start()
-      try { stream.addData(alert("a", 0), alert("a", 1)); col.await(2) } finally q1.stop()
-      // the 2 s TTL elapses while the query is DOWN: TWS TTL timestamps
-      // are absolute processing time (write time + duration), so the
-      // restarted query must see the counter EXPIRED — Flink's
-      // full-snapshot TTL cleanup behaves the same across a restore
-      Thread.sleep(3500)
-      stream.addData(alert("a", 2), alert("a", 3), alert("a", 4))
-      val q2 = start()
-      try col.await(5) finally q2.stop()
-
-      val esc = col.rows.filter(_.severity == "ESCALATED").map(_.incident_id)
-      // expired counter restarted at 0: the tag lands on the 3rd POST-GAP
-      // alert (inc-a-4), not the 3rd overall (inc-a-2, which a surviving
-      // count=2 would have tagged)
-      assert(esc == Seq("inc-a-4"),
-        s"TTL must expire across the downtime (counter reset): got $esc")
-    }
+  test("ST2 fMGWS: escalation count survives restart (3rd alert tagged)") {
+    runSt2Restart("rec_st2_fmgws")
   }
 
-  test("ST2 transformWithState/RocksDB: escalation count survives restart") {
+  test("ST2 RocksDB: escalation count survives restart (3rd alert tagged)") {
+    withRocksDB(runSt2Restart("rec_st2_rocksdb"))
+  }
+
+  test("ST2 TTL keeps running while the query is down: count expired at restart") {
     import spark.implicits._
-    withRocksDB {
-      val ckpt = ckptDir("rec_st2_tws")
-      val stream = MemoryStream[IncidentAlert]
-      val col = new Collector[EscalationEvent]
+    val ckpt = ckptDir("rec_ttl")
+    val stream = MemoryStream[IncidentAlert]
+    val col = new Collector[EscalationEvent]
+    // a processing-time timeout keeps scheduling batches, so
+    // processAllAvailable never settles — poll the collector instead
+    def start(): StreamingQuery =
+      col.sinkOf(Escalator.escalate(stream.toDS(), ttlMs = Some(2000L)), ckpt)
 
-      // TimeMode.ProcessingTime: processAllAvailable never settles (TTL
-      // batches keep scheduling) — poll the collector instead
-      val q1 = col.sinkOf(Processors.escalate(stream.toDS()), ckpt)
-      try { stream.addData(alert("a", 0), alert("a", 1)); col.await(2) } finally q1.stop()
-      stream.addData(alert("a", 2))
-      val q2 = col.sinkOf(Processors.escalate(stream.toDS()), ckpt)
-      try col.await(3) finally q2.stop()
+    val q1 = start()
+    try { stream.addData(alert("a", 0), alert("a", 1)); col.await(2) } finally q1.stop()
+    // the 2 s TTL elapses while the query is DOWN. The restored state
+    // still holds count=2, and Spark reports no timeout for a key with
+    // input in the batch, so only the stored deadline can expire it —
+    // as Flink's full-snapshot TTL cleanup does across a restore
+    Thread.sleep(3500)
+    stream.addData(alert("a", 2), alert("a", 3), alert("a", 4))
+    val q2 = start()
+    try col.await(5) finally q2.stop()
 
-      val got = col.rows.sortBy(_.window_start)
-      assert(got.length == 3, s"all alerts forwarded across the restart: $got")
-      assert(got.count(_.severity == "ESCALATED") == 1 &&
-        got.last.severity == "ESCALATED" &&
-        got.last.escalation_reason.contains("MULTIPLE_INCIDENTS"),
-        s"3rd alert must be escalated from recovered RocksDB count: $got")
-    }
+    val esc = col.rows.filter(_.severity == "ESCALATED").map(_.incident_id)
+    // expired counter restarted at 0: the tag lands on the 3rd POST-GAP
+    // alert (inc-a-4), not the 3rd overall (inc-a-2, which a surviving
+    // count=2 would have tagged)
+    assert(esc == Seq("inc-a-4"),
+      s"TTL must expire across the downtime (counter reset): got $esc")
   }
 }

@@ -24,19 +24,34 @@ class ScaleGuardSpec extends SparkSpec {
       "an unmaterialized plan must not pretend to a size")
   }
 
+  test("materializedBytes sees a fresh checkpoint while the status listener lags") {
+    import spark.implicits._
+    // hold the appStatus listener queue at the checkpoint job's start: the
+    // block updates that would feed the status store queue up behind it
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        release.await(30, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    org.apache.spark.graft.StatusQueue.add(spark.sparkContext, slow)
+    try {
+      val df = (1 to 1000).toDF("x").localCheckpoint()
+      val bytes = ScaleGuard.materializedBytes(df)
+      assert(bytes.exists(_ > 0),
+        s"a checkpointed frame must measure before the listener bus catches up: $bytes")
+      withCap(1L)(assert(!ScaleGuard.fits(df), "measured bytes above a 1-byte cap"))
+    } finally {
+      release.countDown()
+      spark.sparkContext.removeSparkListener(slow)
+    }
+  }
+
   test("a plan over two checkpointed frames measures as the larger one") {
     import spark.implicits._
     val small = (1 to 100).toDF("x").localCheckpoint()
     val big = (1 to 100000).toDF("y").localCheckpoint()
-    // the registry is fed by the listener bus: wait until both frames show
-    def measured(df: org.apache.spark.sql.DataFrame): Long = {
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var bytes = ScaleGuard.materializedBytes(df)
-      while (bytes.isEmpty && System.nanoTime() < deadline) {
-        Thread.sleep(20); bytes = ScaleGuard.materializedBytes(df)
-      }
-      bytes.getOrElse(fail("a checkpointed frame never reached the storage registry"))
-    }
+    def measured(df: org.apache.spark.sql.DataFrame): Long =
+      ScaleGuard.materializedBytes(df).getOrElse(fail("a checkpointed frame must measure"))
     val (s, b) = (measured(small), measured(big))
     assert(s < b, s"small $s, big $b")
     // the small frame comes first in the plan's pre-order

@@ -348,6 +348,35 @@ class StreamingSpec extends SparkSpec {
     assert(esc.select("incident_id").as[String].collect().toSet == Set("inc-a-2", "inc-b-2"))
   }
 
+  test("escalator TTL: a counter idle past the TTL restarts at 0") {
+    import spark.implicits._
+    val mk = (i: Int) => IncidentAlert(s"inc-t-$i", "ttl-svc", "ERROR_RATE_SPIKE", "HIGH",
+      None, None, T0 + i * 10L, T0 + i * 10L + 20, Some(0.05), Some(200L))
+    val stream = MemoryStream[IncidentAlert]
+    val sq = Escalator.escalate(stream.toDS(), ttlMs = Some(2000L))
+      .writeStream.format("memory").queryName("esc_ttl").outputMode("update").start()
+    // a processing-time timeout keeps scheduling batches, so
+    // processAllAvailable never settles — poll the sink instead
+    def awaitRows(n: Long): Unit = {
+      val deadline = System.currentTimeMillis() + 60000
+      while (spark.table("esc_ttl").count() < n && System.currentTimeMillis() < deadline)
+        Thread.sleep(200)
+      assert(spark.table("esc_ttl").count() >= n, s"esc_ttl did not reach $n rows")
+    }
+    try {
+      stream.addData(mk(0), mk(1)) // count -> 2
+      awaitRows(2)
+      Thread.sleep(3500)           // exceed the 2 s TTL: state must expire
+      stream.addData(mk(2), mk(3), mk(4)) // fresh counter: tag fires on the 3rd of THESE
+      awaitRows(5)
+    } finally sq.stop()
+    val esc = spark.table("esc_ttl").filter(col("severity") === "ESCALATED")
+      .select("incident_id").as[String].collect().toSeq
+    // without expiry the 3rd overall (inc-t-2) would be tagged; with
+    // expiry the counter restarted, so the tag lands on inc-t-4
+    assert(esc == Seq("inc-t-4"), s"got $esc")
+  }
+
   test("escalator batch replay == streaming final tags (no TTL gap in data)") {
     import spark.implicits._
     val mk = (s: String, i: Int) => IncidentAlert(s"inc-$s-$i", s, "ERROR_RATE_SPIKE", "HIGH",

@@ -2,8 +2,9 @@ package graft
 
 import graft.ops.{Frontier, PageRankDelta}
 import graft.oracle.Tables
-import graft.streaming.TransitionGate
-import graft.streaming.TransitionGate.{ItemEvent, Transition}
+import graft.streaming.LateDlq
+import graft.streaming.LateDlq.Routed
+import graft.streaming.TransitionGate.ItemEvent
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -11,8 +12,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The streaming ingestion face of the incremental-maintenance arc:
   * per-user frontier as transformWithState state, arriving events
-  * emitting exactly the transitions whose (src, dst) fold is the
-  * directed census. Pinned against the BATCH decomposition q154 proved
+  * emitting on [[LateDlq.routedOf]]'s `transition` lane exactly the
+  * transitions whose (src, dst) fold is the directed census. Every input
+  * here arrives in order, so the `late` lane must stay empty. Pinned against the BATCH decomposition q154 proved
   * (settled + delta + straddle ≡ full), on the real fixture corpus, and
   * across a crash between the settled and delta batches — the frontier
   * IS the checkpointed state, so state loss drops every straddle
@@ -33,15 +35,20 @@ class TransitionGateSpec extends SparkSpec {
   }
 
   private class Collector {
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[Transition]()
-    def sinkOf(ds: Dataset[Transition], ckpt: String): StreamingQuery =
+    val buf = new java.util.concurrent.ConcurrentLinkedQueue[Routed]()
+    def sinkOf(ds: Dataset[Routed], ckpt: String): StreamingQuery =
       ds.writeStream
-        .foreachBatch((batch: Dataset[Transition], _: Long) =>
+        .foreachBatch((batch: Dataset[Routed], _: Long) =>
           batch.collect().foreach(buf.add))
         .outputMode("update").option("checkpointLocation", ckpt).start()
-    def census: Map[(Long, Long), Long] = {
+    private def lane(kind: String): Seq[Routed] = {
       import scala.jdk.CollectionConverters._
-      buf.asScala.toSeq.groupBy(t => (t.src, t.dst))
+      buf.asScala.toSeq.filter(_.kind == kind)
+    }
+    /** The folded transition lane; asserts nothing went to the late lane. */
+    def census: Map[(Long, Long), Long] = {
+      assert(lane("late").isEmpty, s"in-order input routed late: ${lane("late").take(5)}")
+      lane("transition").groupBy(t => (t.src, t.dst))
         .map { case (k, v) => k -> v.size.toLong }
     }
   }
@@ -71,7 +78,7 @@ class TransitionGateSpec extends SparkSpec {
       import spark.implicits._
       val stream = MemoryStream[ItemEvent]
       val col = new Collector
-      val q = col.sinkOf(TransitionGate.transitionsOf(stream.toDS()),
+      val q = col.sinkOf(LateDlq.routedOf(stream.toDS()),
         java.nio.file.Files.createTempDirectory("graft_gate_hand").toString)
       try {
         // user 1: a, a, b  → only a→b (the self-loop advances the chain)
@@ -93,7 +100,7 @@ class TransitionGateSpec extends SparkSpec {
       assert(settled.nonEmpty && delta.nonEmpty, "cut must split the corpus")
       val stream = MemoryStream[ItemEvent]
       val col = new Collector
-      val q = col.sinkOf(TransitionGate.transitionsOf(stream.toDS()),
+      val q = col.sinkOf(LateDlq.routedOf(stream.toDS()),
         java.nio.file.Files.createTempDirectory("graft_gate_sb").toString)
       try {
         stream.addData(settled: _*); q.processAllAvailable()
@@ -120,7 +127,7 @@ class TransitionGateSpec extends SparkSpec {
       val (settled, delta) = events.partition(_.t < cut)
       val stream = MemoryStream[ItemEvent]
       val preCol = new Collector
-      val q = preCol.sinkOf(TransitionGate.transitionsOf(stream.toDS()),
+      val q = preCol.sinkOf(LateDlq.routedOf(stream.toDS()),
         java.nio.file.Files.createTempDirectory("graft_gate_art").toString)
       val settledCensus =
         try {
@@ -169,13 +176,13 @@ class TransitionGateSpec extends SparkSpec {
       val ckpt = java.nio.file.Files.createTempDirectory("graft_gate_rs").toString
       val stream = MemoryStream[ItemEvent]
       val coll = new Collector
-      val q1 = coll.sinkOf(TransitionGate.transitionsOf(stream.toDS()), ckpt)
+      val q1 = coll.sinkOf(LateDlq.routedOf(stream.toDS()), ckpt)
       try { stream.addData(settled: _*); q1.processAllAvailable() } finally q1.stop()
 
       // crash: the ONLY copy of every user's last settled item is the
       // checkpointed frontier. Restart and feed the delta.
       stream.addData(delta: _*)
-      val q2 = coll.sinkOf(TransitionGate.transitionsOf(stream.toDS()), ckpt)
+      val q2 = coll.sinkOf(LateDlq.routedOf(stream.toDS()), ckpt)
       try q2.processAllAvailable() finally q2.stop()
 
       assert(coll.census == batchCensus,
