@@ -57,7 +57,7 @@ object BackboneDrift {
       .orderBy(col("t"), col("event_id"))
     events
       .select(col("user_id"), col("event_id"),
-        // integer-valued item keys only — see pageRankOf's cast note
+        // integer-valued item keys only — see CensusDelta.prep's cast note
         get_json_object(col("props"), "$.k").cast("long").as("item"), tUs.as("t"))
       .filter(col("item").isNotNull)
       .withColumn("wk", expr(s"t div $WeekUs"))
@@ -132,23 +132,7 @@ object BackboneDrift {
       Triangles.weightedItemGraphOf(staticEvents, staticTUs, minW))
     val strong = Tables.swapPersist("drift_gate_strong",
       Backbone.backboneOf(pw, topBp).withColumn("in_backbone", lit(true)))
-    val lastItem = Tables.swapPersist("drift_gate_last",
-      staticEvents
-        .select(col("user_id"), col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"),
-          staticTUs.as("t"))
-        .filter(col("item").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(expr("max_by(item, struct(t, event_id))").as("last_item")))
-    streamEvents
-      .select(col("user_id"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("item"))
-      .filter(col("item").isNotNull)
-      .join(lastItem.select(col("user_id"), col("last_item")), Seq("user_id"))
-      .filter(col("last_item") =!= col("item"))
-      .select(col("user_id"), col("event_id"),
-        least(col("last_item"), col("item")).as("a"),
-        greatest(col("last_item"), col("item")).as("b"))
+    Triangles.arrivalPairsOf(streamEvents, staticEvents, staticTUs, "drift_gate_last")
       .join(pw, Seq("a", "b"), "left")
       .join(strong.select(col("a"), col("b"), col("in_backbone")), Seq("a", "b"), "left")
       .select(col("user_id"), col("event_id"), col("a"), col("b"),

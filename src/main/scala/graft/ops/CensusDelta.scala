@@ -54,7 +54,11 @@ object CensusDelta {
   /** (user_id, event_id, item, t) with non-null integer items. */
   private[graft] def prep(events: DataFrame, tUs: Column): DataFrame =
     events.select(col("user_id"), col("event_id"),
-        // integer-valued item keys only — see pageRankOf's cast note
+        // props.k is INTEGER-VALUED in the fixtures (TESTDATA.md). On a
+        // non-integer numeric string the engines diverge (Spark's
+        // cast("long") truncates '12.5'→12; DuckDB's TRY_CAST rounds or
+        // NULLs) — if the item key ever becomes fractional, normalize
+        // both sides with an integer-pattern guard before the cast.
         get_json_object(col("props"), "$.k").cast("long").as("item"), tUs.as("t"))
       .filter(col("item").isNotNull)
 

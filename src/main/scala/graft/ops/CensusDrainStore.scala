@@ -95,7 +95,7 @@ object CensusDrainStore {
     val csArt = IO.parquet(spark, s"$keptDir/census")
     val (kept, late) = slices(spark, sfDir, cutUs, lateMod)
     val repaired = LateRepair
-      .applyTo(csArt, LateRepair.correctionOf(kept, late, key = "dlqcensus"))
+      .applyTo(csArt, LateRepair.correctionOf(kept, late))
       .filter(col("w") =!= 0)
       .select(col("src"), col("dst"), col("w"))
     repaired.write.mode("overwrite").parquet(s"$dir/census")

@@ -95,16 +95,10 @@ object ChainDrains {
   private def ev(df: DataFrame): DataFrame =
     df.select(col("user_id"), col("event_id"), col("item"), col("t"))
 
-  private def straddleCensus(front: DataFrame, delta: DataFrame): DataFrame =
-    Frontier.straddleFrom(front, delta)
-      .filter(col("s_item") =!= col("d_item"))
-      .groupBy(col("s_item").as("src"), col("d_item").as("dst"))
-      .agg(count(lit(1)).as("w"))
-
   /** One rolled-with-drains cycle: (repaired census, correction,
     * late lane) per cut — the shared loop under the ledger, the drift
-    * arm and the spec's per-cycle closure pin. `key` namespaces the
-    * persisted frames. */
+    * arm and the spec's per-cycle closure pin. `key` names the persisted
+    * routed frame (`${key}_r`). */
   def chainCensusesOf(events: DataFrame, tUs: Column,
                       cuts: Seq[Long] = defaultCuts,
                       key: String = "q176",
@@ -120,14 +114,12 @@ object ChainDrains {
       val kept = ev(r.filter(col("day") === k && !col("late")))
       val lateK = ev(r.filter(col("day") === k && col("late")))
       // kept-lane roll: settled + kept + straddle (exact by the time cut)
-      val mPre = cs.unionByName(PageRankDelta.directedCensusOf(kept))
-        .unionByName(straddleCensus(f, kept))
-        .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
+      val mPre = PageRankDelta.mergedCensusOf(cs, f, kept)
       // nightly drain: correction against everything settled at drain
       // time — prior days (incl. their drains) + today's kept lane
       val settledPre = ev(r.filter(col("day") < k ||
         (col("day") === k && !col("late"))))
-      val corr = LateRepair.correctionOf(settledPre, lateK, key = s"${key}d$k")
+      val corr = LateRepair.correctionOf(settledPre, lateK)
         .localCheckpoint()
       val m = LateRepair.applyTo(mPre, corr)
         .filter(col("w") =!= 0)
@@ -178,21 +170,19 @@ object ChainDrains {
           // r17 (guide §2.6): rank/spectral priors are independent given
           // the checkpointed census — overlap them (the q166 posture)
           val rv = graft.oracle.Par.par2(
-            PageRankDelta.rankOf(cs0, key = "chainld_r0").localCheckpoint(),
+            PageRankDelta.rankOf(cs0).localCheckpoint(),
             SpectralEmbed.spectralOf(
               WalkPmi.pmiOf(Backbone.backboneWeightedOf(DailyRefresh.pooled(cs0))
-                .withColumnRenamed("w", "cnt"), key = "chainld_s0"),
-              key = "chainld_s0").localCheckpoint())
+                .withColumnRenamed("w", "cnt"))).localCheckpoint())
           r = rv._1; v = rv._2
         }
         // per-cycle rank and spectral arms are independent — overlap them
         val (wcR, wcV) = graft.oracle.Par.par2(
-          PageRankDelta.rankWarmColdOf(m, r, key = s"chainld_r$k")
-            .localCheckpoint(),
+          PageRankDelta.rankWarmColdOf(m, r).localCheckpoint(),
           SpectralDelta.spectralWarmColdOf(
             WalkPmi.pmiOf(Backbone.backboneWeightedOf(DailyRefresh.pooled(m))
-              .withColumnRenamed("w", "cnt"), key = s"chainld_s$k"),
-            v, SpectralDelta.WarmRounds, key = s"chainld_s$k").localCheckpoint())
+              .withColumnRenamed("w", "cnt")),
+            v, SpectralDelta.WarmRounds).localCheckpoint())
         val rd = wcR.agg(count(lit(1)).as("nodes"),
           sum(abs(col("rank_warm") - col("rank_cold"))).as("rank_l1"),
           max(abs(col("rank_warm") - col("rank_cold"))).as("rank_max"))

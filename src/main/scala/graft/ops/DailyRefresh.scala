@@ -82,18 +82,12 @@ object DailyRefresh {
 
     // the census update, DIRECTED grain: settled census (persisted — the
     // PageRank settled arm, the merged union and the pooled settled
-    // rollup all read it), delta census, frontier straddle
+    // rollup all read it), then + delta census + frontier straddle
     // r16: checkpoint, not keyed persist — lineage truncation (ppmiMatOf)
     val csDir = PageRankDelta.directedCensusOf(settled).localCheckpoint()
-    val cdDir = PageRankDelta.directedCensusOf(delta)
-    val cbDir = Frontier.straddleOf(settled, delta)
-      .filter(col("s_item") =!= col("d_item"))
-      .groupBy(col("s_item").as("src"), col("d_item").as("dst"))
-      .agg(count(lit(1)).as("w"))
     // merged directed census (persisted — PageRank warm arm + pooled
     // spectral warm rollup)
-    val mDir = csDir.unionByName(cdDir).unionByName(cbDir)
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
+    val mDir = PageRankDelta.mergedCensusOf(csDir, Frontier.lastOf(settled), delta)
       .localCheckpoint()
 
     // r17 (guide §2.6): the spectral chain (settled → warm) and the
@@ -105,23 +99,21 @@ object DailyRefresh {
     val ((vS, vW), (rS, rW)) = graft.oracle.Par.par2(
       {
         // spectral arm: backbone → PMI → warm iteration from the settled
-        // fixed point (q163's warm semantics verbatim; keys namespaced so
-        // the concurrent bench can't cross-evict)
+        // fixed point (q163's warm semantics verbatim)
         val s = SpectralEmbed.spectralOf(
           WalkPmi.pmiOf(Backbone.backboneWeightedOf(pooled(csDir))
-            .withColumnRenamed("w", "cnt"), key = "q166s"),
-          key = "q166s").localCheckpoint()
+            .withColumnRenamed("w", "cnt"))).localCheckpoint()
         val w = SpectralEmbed.spectralWarmOf(
           WalkPmi.pmiOf(Backbone.backboneWeightedOf(pooled(mDir))
-            .withColumnRenamed("w", "cnt"), key = "q166m"),
-          s, SpectralDelta.WarmRounds, key = "q166m")
+            .withColumnRenamed("w", "cnt")),
+          s, SpectralDelta.WarmRounds)
         (s, w)
       },
       {
         // PageRank arm: settled ranks (two readers — warm r0 + output
         // column), then the warm-only refresh over the merged census
-        val s = PageRankDelta.rankOf(csDir, key = "q166sr").localCheckpoint()
-        val w = PageRankDelta.rankFrom(mDir, s, key = "q166mr")
+        val s = PageRankDelta.rankOf(csDir).localCheckpoint()
+        val w = PageRankDelta.rankFrom(mDir, s)
         (s, w)
       })
 

@@ -98,7 +98,7 @@ object DlqRoute {
     val late = r.filter(col("late")).select(col("user_id"), col("event_id"),
       col("item"), col("t"))
     val ck = PageRankDelta.directedCensusOf(kept)
-    LateRepair.applyTo(ck, LateRepair.correctionOf(kept, late, key = "q173"))
+    LateRepair.applyTo(ck, LateRepair.correctionOf(kept, late))
   }
 
   /** q175 — the drain LEDGER: sequential DLQ drains compose. A
@@ -135,13 +135,13 @@ object DlqRoute {
     val d2 = ev(r.filter(col("late") &&
       expr(s"(event_id div $lateMod) % 2") === 1))
     val c0 = PageRankDelta.directedCensusOf(kept)
-    val corr1 = LateRepair.correctionOf(kept, d1, key = "q175a")
+    val corr1 = LateRepair.correctionOf(kept, d1)
     // drain 2 lands on the ALREADY-REPAIRED corpus: kept ∪ drain 1. NOT
     // persisted — it has ONE reader (correctionOf's affected-user join,
     // which persists the |au|-bounded fetch itself), and both legs ride
     // the q175_r cache; materializing a second corpus copy here would be
     // exactly the scale smell the drain ledger exists to avoid.
-    val corr2 = LateRepair.correctionOf(kept.unionByName(d1), d2, key = "q175b")
+    val corr2 = LateRepair.correctionOf(kept.unionByName(d1), d2)
     c0.join(corr1.withColumnRenamed("dw", "dw1"), Seq("src", "dst"), "full_outer")
       .join(corr2.withColumnRenamed("dw", "dw2"), Seq("src", "dst"), "full_outer")
       .select(col("src"), col("dst"),

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * settled events (exactly what a streaming job checkpoints). Frontier
   * rows are row_number() over (t, event_id) — unique per user on both
   * engines (no max_by/arg_max tie-semantics risk; the q154 contract).
-  * Callers shape the straddle census themselves (q154/q163 pool with
-  * least/greatest, q164 keeps direction). */
+  * q154/q163 pool the straddle census with least/greatest; every
+  * directed caller shapes it through [[PageRankDelta.mergedCensusOf]]. */
 object Frontier {
 
   /** (user_id, s_item): each user's LAST settled item — THE frontier

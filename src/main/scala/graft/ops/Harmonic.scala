@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
 object Harmonic {
 
   /** (item, n1, n2, n3, harmonic_x6) per backbone node. */
-  def harmonicOf(strong0: DataFrame, key: String = "q148"): DataFrame = {
+  def harmonicOf(strong0: DataFrame): DataFrame = {
     // r16: checkpoints, not keyed persists — lineage truncation (ppmiMatOf)
     val strong = strong0.select(col("a"), col("b")).localCheckpoint()
     // read by hop-2 (both sides), hop-3 and the n1 census — once

@@ -57,9 +57,8 @@ object LateRepair {
     * item-event slice and a late shard (both at [[CensusDelta]]'s prep
     * grain), fetch ONLY the affected users' settled history, re-lag it
     * with the late events spliced in, and diff. Output (src, dst, dw),
-    * dw ≠ 0. `key` namespaces the persisted affected-history frame. */
-  def correctionOf(settled: DataFrame, late: DataFrame,
-                   key: String = "q171"): DataFrame = {
+    * dw ≠ 0. */
+  def correctionOf(settled: DataFrame, late: DataFrame): DataFrame = {
     // affected users' settled history — the ONLY settled rows the
     // repair touches; two readers (old census + spliced census)
     val au = late.select(col("user_id")).distinct()

@@ -36,8 +36,7 @@ object LinkPredict {
 
   /** (item_a, item_b, closures, deg_a, deg_b, score_bp) for every
     * non-edge pair with ≥ `minClosures` common neighbors. */
-  def linkPredictionOf(strong0: DataFrame, minClosures: Long = DefaultMinClosures,
-                       key: String = "q147"): DataFrame = {
+  def linkPredictionOf(strong0: DataFrame, minClosures: Long = DefaultMinClosures): DataFrame = {
     // read by the wedge self-join (twice via the bidirectional union),
     // the anti-join and the degree census — persist once
     // r16: checkpoints, not keyed persists — lineage truncation (ppmiMatOf)

@@ -61,8 +61,7 @@ object Lpa {
 
   /** (item, community, community_size) after `rounds` synchronous LPA
     * sweeps over a canonical (a < b) edge list. */
-  def lpaOf(strong0: DataFrame, rounds: Int = DefaultRounds,
-            key: String = "q149"): DataFrame = {
+  def lpaOf(strong0: DataFrame, rounds: Int = DefaultRounds): DataFrame = {
     // r16: checkpoints, not keyed persists — lineage truncation (ppmiMatOf)
     val strong = strong0.select(col("a"), col("b")).localCheckpoint()
     val adj =

@@ -35,8 +35,7 @@ object NearDupSpectral {
   def nearDupSpectralOf(pairs: DataFrame): DataFrame =
     SpectralEmbed.spectralOf(
       pairs.select(col("doc_a").as("a"), col("doc_b").as("b"),
-        col("jaccard").as("pmi")),
-      key = "q162")
+        col("jaccard").as("pmi")))
       .select(col("node").as("doc_id"), col("vfp"))
 
   // ---------------------------------------------------------------- q162

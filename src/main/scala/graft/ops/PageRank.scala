@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.oracle.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Item-graph PageRank (q139) — power-iteration centrality over the
@@ -37,65 +36,23 @@ import org.apache.spark.sql.functions._
   * one hash join rank⋈edges on the source key plus one aggregation on
   * the destination key — the standard distributed PageRank round. The
   * corpus-sized work (ordered per-user lag) happens exactly once,
-  * upstream of the persist. Lineage is truncated every 4 rounds
-  * (localCheckpoint) so the planner never sees an unbounded join chain —
-  * the fitSub lesson from ext/KMeans.scala.
+  * upstream of the persist. Each round's rank has one reader (the next
+  * round's contrib join), so lineage is truncated every 4 rounds
+  * (localCheckpoint) — a rule [[PageRankDelta.RankGraph]] derives from
+  * the missing teleport, not an option — and the planner never sees an
+  * unbounded join chain (the fitSub lesson from ext/KMeans.scala).
   */
 object PageRank {
 
   /** (item, rank_micro) after `iters` damped power-iteration rounds over
-    * the consecutive-event item graph. */
+    * the consecutive-event item graph — [[PageRankDelta.RankGraph]]'s
+    * round without teleport. */
   def pageRankOf(events: DataFrame, tUs: Column, iters: Int = 3,
                  dampBp: Long = 8500L): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(dampBp >= 0L && dampBp <= 10000L, s"dampBp out of [0,10000]: $dampBp")
-    val w = Window.partitionBy(col("user_id")).orderBy(col("t"), col("event_id"))
-    val hops = events
-      .select(col("user_id"), col("event_id"),
-        // props.k is INTEGER-VALUED in the fixtures (TESTDATA.md). On a
-        // non-integer numeric string the engines diverge (Spark's
-        // cast("long") truncates '12.5'→12; DuckDB's TRY_CAST rounds or
-        // NULLs) — if the item key ever becomes fractional, normalize
-        // both sides with an integer-pattern guard before the cast.
-        get_json_object(col("props"), "$.k").cast("long").as("item"), tUs.as("t"))
-      .filter(col("item").isNotNull)
-      .withColumn("src", lag(col("item"), 1).over(w))
-      .filter(col("src").isNotNull && col("src") =!= col("item"))
-    val edges = hops.groupBy(col("src"), col("item").as("dst"))
-      .agg(count(lit(1)).as("w"))
-    val outW = edges.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
-    // vocab²-bounded census: persists once, read `iters` times
-    // r16: checkpoints, not keyed persists — lineage truncation (ppmiMatOf)
-    val edgesW = edges.join(outW, Seq("src")).localCheckpoint()
-    val nodes =
-      edgesW.select(col("src").as("item"))
-        .union(edgesW.select(col("dst").as("item"))).distinct()
-        .localCheckpoint()
-
-    var rank = nodes.withColumn("rank_micro", lit(1000000L))
-    // r17 (verdict What's-wrong #2): the forced broadcasts are gated on
-    // the measured bytes of the checkpointed node table (rank/contrib ≤
-    // one row per node) — past the cap the round degrades to the shuffle
-    // join instead of an OOM; zero extra jobs (driver storage registry).
-    val fits = ScaleGuard.fits(nodes)
-    def gated(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-    for (i <- 1 to iters) {
-      // r16 optimization (guide §3.1): rank/contrib are node-bounded —
-      // broadcast both so the edge census never re-shuffles per round.
-      val contrib = edgesW
-        .join(gated(rank.select(col("item").as("src"), col("rank_micro"))),
-          Seq("src"))
-        .groupBy(col("dst"))
-        .agg(sum(expr("(rank_micro * w) div out_w")).as("contrib"))
-      rank = nodes
-        .join(gated(contrib.withColumnRenamed("dst", "item")), Seq("item"), "left")
-        .select(col("item"),
-          (lit((10000L - dampBp) * 100L) +
-            expr(s"(coalesce(contrib, 0L) * ${dampBp}L) div 10000L"))
-            .as("rank_micro"))
-      if (i % 4 == 0 && i < iters) rank = rank.localCheckpoint()
-    }
-    rank
+    val g = new PageRankDelta.RankGraph(
+      PageRankDelta.directedCensusOf(CensusDelta.prep(events, tUs)),
+      teleport = false, iters, dampBp)
+    g.iterate(g.uniform("rank_micro"), Seq("rank_micro"), 1 to iters)
   }
 
   /** Full-Google-matrix PageRank (q142): [[pageRankOf]] plus dangling-mass
@@ -117,72 +74,15 @@ object PageRank {
     * census (rank ⋈ the persisted dangling-node list, vocab-bounded, then
     * a global sum) broadcast back over the node table — the same 1-row
     * census crossJoin posture as ops/Components. n comes from a second
-    * 1-row census computed once. Int64: D ≤ total mass ≈ n·1e6 — the q139
-    * bound; (D div n) ≤ ~1e6·(1+ε), so the damped product is safe.
-    *
-    * Unlike q139 (one consumer per round), each round's rank feeds TWO
-    * readers — the contrib join and the dangling census — so the rank
-    * table localCheckpoints EVERY intermediate round: without it the plan
-    * doubles per round (2^iters copies of round 0; first build measured
-    * 144 scans vs q139's 22 in PLAN_MANIFEST terms) and Spark re-executes
-    * the duplicated subtrees. The checkpoint materializes ≤ |vocab| rows —
-    * bounded, never corpus-sized (the q130 doubled-pass lesson). */
+    * 1-row census. Int64: D ≤ total mass ≈ n·1e6 — the q139 bound;
+    * (D div n) ≤ ~1e6·(1+ε), so the damped product is safe. Each round's
+    * rank feeds two readers here, so it checkpoints every round
+    * ([[PageRankDelta.RankGraph]] derives the cadence). This IS
+    * [[PageRankDelta.rankOf]] over the corpus's directed census. */
   def pageRankFullOf(events: DataFrame, tUs: Column, iters: Int = 3,
-                     dampBp: Long = 8500L): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(dampBp >= 0L && dampBp <= 10000L, s"dampBp out of [0,10000]: $dampBp")
-    val w = Window.partitionBy(col("user_id")).orderBy(col("t"), col("event_id"))
-    val hops = events
-      .select(col("user_id"), col("event_id"),
-        // integer-valued item keys only — see pageRankOf's cast note
-        get_json_object(col("props"), "$.k").cast("long").as("item"), tUs.as("t"))
-      .filter(col("item").isNotNull)
-      .withColumn("src", lag(col("item"), 1).over(w))
-      .filter(col("src").isNotNull && col("src") =!= col("item"))
-    val edges = hops.groupBy(col("src"), col("item").as("dst"))
-      .agg(count(lit(1)).as("w"))
-    val outW = edges.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
-    // r16: checkpoints, not keyed persists — lineage truncation (ppmiMatOf)
-    val edgesW = edges.join(outW, Seq("src")).localCheckpoint()
-    val nodes =
-      edgesW.select(col("src").as("item"))
-        .union(edgesW.select(col("dst").as("item"))).distinct()
-        .localCheckpoint()
-    // vocab-bounded: nodes that never emit (dst-only) — the dangling set
-    val dangling = nodes.join(edgesW.select(col("src").as("item")).distinct(),
-      Seq("item"), "left_anti").localCheckpoint()
-    val nCensus = nodes.agg(count(lit(1)).as("n_nodes"))
-
-    var rank = nodes.withColumn("rank_micro", lit(1000000L))
-    // r17: size-gated forced broadcasts — see pageRankOf's note (the
-    // 1-row dMass/nCensus crossJoins stay unconditional by construction)
-    val fits = ScaleGuard.fits(nodes)
-    def gated(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-    for (i <- 1 to iters) {
-      // r16 optimization (guide §3.1): broadcast the node-bounded
-      // rank/contrib — the edge census never re-shuffles (see q139 loop).
-      val contrib = edgesW
-        .join(gated(rank.select(col("item").as("src"), col("rank_micro"))),
-          Seq("src"))
-        .groupBy(col("dst"))
-        .agg(sum(expr("(rank_micro * w) div out_w")).as("contrib"))
-      val dMass = rank.join(dangling, Seq("item"))
-        .agg(coalesce(sum(col("rank_micro")), lit(0L)).as("d_mass"))
-      rank = nodes
-        .join(gated(contrib.withColumnRenamed("dst", "item")), Seq("item"), "left")
-        .crossJoin(broadcast(dMass))
-        .crossJoin(broadcast(nCensus))
-        .select(col("item"),
-          (lit((10000L - dampBp) * 100L) +
-            expr(s"(coalesce(contrib, 0L) * ${dampBp}L) div 10000L") +
-            expr(s"((d_mass div n_nodes) * ${dampBp}L) div 10000L"))
-            .as("rank_micro"))
-      // two consumers next round (contrib + dangling census): checkpoint
-      // so the lineage doesn't double per round — see the scaladoc
-      if (i < iters) rank = rank.localCheckpoint()
-    }
-    rank
-  }
+                     dampBp: Long = 8500L): DataFrame =
+    PageRankDelta.rankOf(PageRankDelta.directedCensusOf(CensusDelta.prep(events, tUs)),
+      iters, dampBp)
 
   // ---------------------------------------------------------------- q139
   def q139(spark: SparkSession, sfDir: String): DataFrame = {

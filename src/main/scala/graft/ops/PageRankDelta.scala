@@ -33,11 +33,12 @@ import graft.oracle.{QueryDef, Tables}
   *     ranks (alignment contract: delta-new node → uniform 10⁶, retired
   *     node → dropped) and runs [[WarmIters]] round(s), the cold arm
   *     starts uniform and runs the full [[Iters]].
-  *   - warm and cold are FUSED (the q163 pattern): one two-column
-  *     state, one edges join + one two-sum contribution aggregate + one
-  *     two-sum dangling census per round — half the edge-census passes
-  *     of two independent loops; per-column arithmetic pinned equal to
-  *     the single-column loop in PageRankDeltaSpec.
+  *   - warm and cold are FUSED (the q163 pattern): [[RankGraph]]'s
+  *     one round body runs over a two-column state — one edges join +
+  *     one two-sum contribution aggregate + one two-sum dangling census
+  *     per round, half the edge-census passes of two independent loops;
+  *     per-column arithmetic pinned equal to [[rankOf]] in
+  *     PageRankDeltaSpec.
   *
   * Output: (item, rank_settled NULLABLE, rank_warm, rank_cold, drift) —
   * one row per merged-census node; rank_settled is NULL exactly on the
@@ -66,12 +67,6 @@ object PageRankDelta {
   val Iters = 3
   val DampBp = 8500L
 
-  /** (user_id, event_id, item, t) with non-null integer items. */
-  private def itemEvents(events: DataFrame, tUs: Column): DataFrame =
-    events.select(col("user_id"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("item"), tUs.as("t"))
-      .filter(col("item").isNotNull)
-
   /** Directed minW=1 transition census (src, dst, w) within `e` —
     * q142's edge semantics (self-loops dropped, directions kept).
     * `private[graft]`: q166's composed daily refresh builds the SAME
@@ -84,211 +79,184 @@ object PageRankDelta {
       .groupBy(col("src"), col("item").as("dst"))
       .agg(count(lit(1)).as("w"))
 
+  /** The directed census update: the settled census + the delta's own
+    * census + the straddle census, summed — q154's identity in directed
+    * form, and the one merge every refresh (q164, q166, q167, q169, q176,
+    * the chain audits) rolls its census forward with. The straddle census
+    * holds, per user on both sides of the cut, the one transition
+    * (frontier item → first delta item), self-loops dropped;
+    * `front(user_id, s_item)` is [[Frontier.lastOf]] of the settled slice
+    * or a checkpointed frontier, so the settled corpus is never lagged. */
+  private[ops] def mergedCensusOf(settled: DataFrame, front: DataFrame,
+                                  delta: DataFrame): DataFrame = {
+    val straddle = Frontier.straddleFrom(front, delta)
+      .filter(col("s_item") =!= col("d_item"))
+      .groupBy(col("s_item").as("src"), col("d_item").as("dst"))
+      .agg(count(lit(1)).as("w"))
+    settled.unionByName(directedCensusOf(delta)).unionByName(straddle)
+      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
+  }
+
   /** The monolithic directed census of the whole corpus — the reference
     * side of the decomposition identity (spec-only reader). */
   def fullDirectedCensusOf(events: DataFrame, tUs: Column): DataFrame =
-    directedCensusOf(itemEvents(events, tUs))
+    directedCensusOf(CensusDelta.prep(events, tUs))
 
   /** The production-path merged census: settled + delta + the directed
     * per-user straddle, summed. PageRankDeltaSpec pins it equal to
     * [[fullDirectedCensusOf]] (the q154 identity, directed form). */
   def mergedDirectedCensusOf(events: DataFrame, tUs: Column,
                              cutUs: Long = SpectralDelta.DeltaCutUs): DataFrame = {
-    val e = itemEvents(events, tUs)
-    mergedOf(e.filter(col("t") < cutUs), e.filter(col("t") >= cutUs))
+    val e = CensusDelta.prep(events, tUs)
+    val settled = e.filter(col("t") < cutUs)
+    mergedCensusOf(directedCensusOf(settled), Frontier.lastOf(settled),
+      e.filter(col("t") >= cutUs))
   }
 
-  private def mergedOf(settled: DataFrame, delta: DataFrame): DataFrame = {
-    val cs = directedCensusOf(settled)
-    val cd = directedCensusOf(delta)
-    val cb = Frontier.straddleOf(settled, delta)
-      .filter(col("s_item") =!= col("d_item"))
-      .groupBy(col("s_item").as("src"), col("d_item").as("dst"))
-      .agg(count(lit(1)).as("w"))
-    cs.unionByName(cd).unionByName(cb)
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
+  /** A directed census (src, dst, w) prepared for the damped PageRank
+    * loop: the ONE round body every PageRank in the engine runs — q139
+    * and q142 ([[PageRank]]), and the settled, warm and fused warm+cold
+    * arms here. The edges with out-weights and the node table
+    * materialize once (checkpoints, so the round plans read flat RDD
+    * scans, not the census lineage — see SpectralEmbed.ppmiMatOf); with
+    * `teleport` so does the dangling set (nodes that never emit), whose
+    * mass each round redistributes uniformly (q142's rule; without it
+    * the mass drops, q139's). `iters` and `dampBp` are validated here,
+    * before any job runs.
+    *
+    * The checkpoint cadence follows from the round's readers: with
+    * teleport a round's rank feeds TWO readers next round (the contrib
+    * join and the dangling census), so every intermediate round
+    * checkpoints — without that the plan doubles per round (2^iters
+    * copies of round 0, re-executed); without teleport it has one
+    * reader, and every 4th round checkpoints to bound lineage (the
+    * fitSub lesson from ext/KMeans.scala). Either way ≤ |vocab| rows.
+    *
+    * The rank vector and the per-node contribution census are
+    * node-bounded, so both broadcast into the round joins (the edge
+    * census never re-shuffles), gated on the measured bytes of the
+    * checkpointed node table ([[ScaleGuard.fits]], zero jobs): past the
+    * cap the round degrades to the shuffle join instead of an OOM. The
+    * 1-row dangling-mass and node-count censuses broadcast always. */
+  private[ops] final class RankGraph(edges: DataFrame, teleport: Boolean,
+                                     iters: Int, dampBp: Long) {
+    require(iters >= 1, s"iters must be >= 1, got $iters")
+    require(dampBp >= 0L && dampBp <= 10000L, s"dampBp out of [0,10000]: $dampBp")
+
+    private val edgesW = edges
+      .join(edges.groupBy(col("src")).agg(sum(col("w")).as("out_w")), Seq("src"))
+      .localCheckpoint()
+    private val nodes = edgesW.select(col("src").as("item"))
+      .union(edgesW.select(col("dst").as("item"))).distinct()
+      .localCheckpoint()
+    private val dangling = if (!teleport) None else Some(
+      nodes.join(edgesW.select(col("src").as("item")).distinct(), Seq("item"), "left_anti")
+        .localCheckpoint())
+    private val fits = ScaleGuard.fits(nodes)
+    private def gated(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
+
+    /** (item, `c`) uniform at 10⁶ — the cold start. */
+    def uniform(c: String): DataFrame = nodes.withColumn(c, lit(1000000L))
+
+    /** (item, `warm`, `cold`…): prior ranks `start(item, rank_micro)`
+      * aligned to the node table as `warm` (a node the start misses →
+      * uniform 10⁶, a start row naming no node — a retired item —
+      * dropped), each `cold` column uniform. Checkpointed: the first
+      * round reads it twice. */
+    def aligned(start: DataFrame, warm: String, cold: String*): DataFrame =
+      nodes.join(start.select(col("item"), col("rank_micro").as("r0")), Seq("item"), "left")
+        .select(col("item") +: coalesce(col("r0"), lit(1000000L)).as(warm) +:
+          cold.map(lit(1000000L).as(_)): _*)
+        .localCheckpoint()
+
+    /** Rounds `rounds` (a sub-range of 1 to `iters`) over
+      * rank(item, cols…), every column updated by the same round — the
+      * fused arms run their shared rounds over both columns, then the
+      * remaining ones over the cold column alone. */
+    def iterate(rank0: DataFrame, cols: Seq[String], rounds: Range): DataFrame =
+      rounds.foldLeft(rank0) { (rank, i) =>
+        val next = round(rank, cols)
+        if (i < iters && (teleport || i % 4 == 0)) next.localCheckpoint() else next
+      }
+
+    /** One round, per column c: contrib(v) = Σ_{u→v} (c(u)·w) div out_w(u),
+      * c'(v) = (10000−dampBp)·100 + (contrib(v)·dampBp) div 10000, plus
+      * ((D div n)·dampBp) div 10000 with teleport (D = the column's
+      * dangling mass, n = |nodes|). */
+    private def round(rank: DataFrame, cols: Seq[String]): DataFrame = {
+      def per(f: String => Column): Seq[Column] = cols.map(f)
+      val sums = per(c => sum(expr(s"($c * w) div out_w")).as(s"c_$c"))
+      val contrib = edgesW
+        .join(gated(rank.select(col("item").as("src") +: per(col): _*)), Seq("src"))
+        .groupBy(col("dst"))
+        .agg(sums.head, sums.tail: _*)
+      val joined = nodes
+        .join(gated(contrib.withColumnRenamed("dst", "item")), Seq("item"), "left")
+      def damped(c: String): Column = lit((10000L - dampBp) * 100L) +
+        expr(s"(coalesce(c_$c, 0L) * ${dampBp}L) div 10000L")
+      dangling match {
+        case None => joined.select(col("item") +: per(c => damped(c).as(c)): _*)
+        case Some(d) =>
+          val masses = per(c => coalesce(sum(col(c)), lit(0L)).as(s"d_$c"))
+          joined
+            .crossJoin(broadcast(rank.join(d, Seq("item")).agg(masses.head, masses.tail: _*)))
+            .crossJoin(broadcast(nodes.agg(count(lit(1)).as("n_nodes"))))
+            .select(col("item") +: per(c => (damped(c) +
+              expr(s"((d_$c div n_nodes) * ${dampBp}L) div 10000L")).as(c)): _*)
+      }
+    }
   }
 
-  /** edges(src, dst, w) → (edges+out_w, nodes, dangling set, 1-row
-    * node-count census), each materialized once for the round joins.
-    * `checkpoint = true` for the FUSED arm whose graph frames enter the
-    * final displayed plan (the q163 display lesson: a persisted frame in
-    * the final plan nests its whole build lineage — the first manifest
-    * line here read 380 displayed parquet scans; checkpoints truncate
-    * it); the settled arm keeps keyed persists because its output is
-    * checkpointed downstream and the extra eager jobs would buy
-    * nothing. */
-  private def prepGraph(edges: DataFrame, key: String, checkpoint: Boolean)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // r16: BOTH arms checkpoint now — the keyed-persist branch kept the
-    // full corpus lineage in every round plan and the driver re-optimized
-    // it per action (see SpectralEmbed.ppmiMatOf); `checkpoint` is kept
-    // as a (now vestigial) signature for the callers' documentation.
-    def mat(name: String, df: DataFrame): DataFrame = df.localCheckpoint()
-    val outW = edges.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
-    val edgesW = mat("ew", edges.join(outW, Seq("src")))
-    val nodes = mat("nodes",
-      edgesW.select(col("src").as("item"))
-        .union(edgesW.select(col("dst").as("item"))).distinct())
-    val dangling = mat("dang",
-      nodes.join(edgesW.select(col("src").as("item")).distinct(),
-        Seq("item"), "left_anti"))
-    (edgesW, nodes, dangling, nodes.agg(count(lit(1)).as("n_nodes")))
-  }
-
-  /** q142's loop over an edge CENSUS (src, dst, w) from uniform —
-    * byte-identical round arithmetic; the settled arm. */
-  def rankOf(edges: DataFrame, key: String, iters: Int = Iters,
-             dampBp: Long = DampBp): DataFrame = {
-    val (edgesW, nodes, dangling, nCensus) = prepGraph(edges, key, checkpoint = false)
-    loop(edgesW, nodes, dangling, nCensus,
-      nodes.withColumn("rank_micro", lit(1000000L)), iters, dampBp)
+  /** q142's loop over an edge CENSUS (src, dst, w) from uniform — the
+    * settled arm. */
+  def rankOf(edges: DataFrame, iters: Int = Iters, dampBp: Long = DampBp): DataFrame = {
+    val g = new RankGraph(edges, teleport = true, iters, dampBp)
+    g.iterate(g.uniform("rank_micro"), Seq("rank_micro"), 1 to iters)
   }
 
   /** [[rankOf]] warm-started from prior ranks `start(item, rank_micro)`
     * — the production arm of the composed daily refresh (q166): only the
     * warm refresh recurs there, so the cold audit column of
-    * [[rankWarmColdOf]] is not built. Alignment contract is the fused
-    * warm column's (missing node → uniform 10⁶, retired start row →
-    * dropped); the round body is SHARED with [[rankOf]] ([[loop]]), so
-    * the two differ only in r₀ and round count by construction. Graph
-    * frames checkpoint (the q164 display lesson — this arm's frames
-    * enter the final displayed plan). */
-  def rankFrom(edges: DataFrame, start: DataFrame, key: String,
+    * [[rankWarmColdOf]] is not built. Same [[RankGraph]] rounds, so the
+    * two differ only in r₀ and round count by construction. */
+  def rankFrom(edges: DataFrame, start: DataFrame,
                iters: Int = WarmIters, dampBp: Long = DampBp): DataFrame = {
-    val (edgesW, nodes, dangling, nCensus) = prepGraph(edges, key, checkpoint = true)
-    val r0 = nodes
-      .join(start.select(col("item"), col("rank_micro").as("r0w")), Seq("item"), "left")
-      .select(col("item"), coalesce(col("r0w"), lit(1000000L)).as("rank_micro"))
-      .localCheckpoint()
-    loop(edgesW, nodes, dangling, nCensus, r0, iters, dampBp)
-  }
-
-  /** The shared single-column round body — q142's arithmetic verbatim. */
-  private def loop(edgesW: DataFrame, nodes: DataFrame, dangling: DataFrame,
-                   nCensus: DataFrame, rank0: DataFrame, iters: Int,
-                   dampBp: Long): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    var rank = rank0
-    // r17 (verdict What's-wrong #2): forced broadcasts gated on the
-    // measured bytes of the checkpointed node table (rank/contrib are
-    // node-bounded) — past the cap the round degrades to the shuffle
-    // join; zero extra jobs (driver storage registry).
-    val fits = ScaleGuard.fits(nodes)
-    def gated(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-    for (i <- 1 to iters) {
-      // r16 optimization (guide §3.1): the rank vector and the per-node
-      // contribution census are node-bounded — broadcast both, so the
-      // edge census never re-shuffles across rounds (before, the
-      // checkpointed rank was a stats-less LogicalRDD and Spark planned
-      // two-sided shuffles of the edges every iteration).
-      val contrib = edgesW
-        .join(gated(rank.select(col("item").as("src"), col("rank_micro"))),
-          Seq("src"))
-        .groupBy(col("dst"))
-        .agg(sum(expr("(rank_micro * w) div out_w")).as("contrib"))
-      val dMass = rank.join(dangling, Seq("item"))
-        .agg(coalesce(sum(col("rank_micro")), lit(0L)).as("d_mass"))
-      rank = nodes
-        .join(gated(contrib.withColumnRenamed("dst", "item")), Seq("item"), "left")
-        .crossJoin(broadcast(dMass))
-        .crossJoin(broadcast(nCensus))
-        .select(col("item"),
-          (lit((10000L - dampBp) * 100L) +
-            expr(s"(coalesce(contrib, 0L) * ${dampBp}L) div 10000L") +
-            expr(s"((d_mass div n_nodes) * ${dampBp}L) div 10000L"))
-            .as("rank_micro"))
-      if (i < iters) rank = rank.localCheckpoint()
-    }
-    rank
+    val g = new RankGraph(edges, teleport = true, iters, dampBp)
+    g.iterate(g.aligned(start, "rank_micro"), Seq("rank_micro"), 1 to iters)
   }
 
   /** (item, rank_warm, rank_cold): warm and cold PageRank FUSED over one
     * edge census — the q163 two-column pattern. The warm column starts
     * from `start(item, rank_micro)` (aligned: missing → uniform 10⁶) and
     * freezes after `warmIters`; the cold column starts uniform and runs
-    * all `iters`. Per-column arithmetic == [[rankOf]] (pinned in spec). */
-  def rankWarmColdOf(edges: DataFrame, start: DataFrame, key: String,
+    * all `iters`. Both run the shared [[RankGraph]] round, so per-column
+    * arithmetic == [[rankOf]] (pinned in spec). */
+  def rankWarmColdOf(edges: DataFrame, start: DataFrame,
                      warmIters: Int = WarmIters, iters: Int = Iters,
                      dampBp: Long = DampBp): DataFrame = {
     require(warmIters >= 1 && warmIters <= iters,
       s"warmIters out of [1, $iters]: $warmIters")
-    val (edgesW, nodes, dangling, nCensus) = prepGraph(edges, key, checkpoint = true)
-    val base = (10000L - dampBp) * 100L
-    // r17: size-gated forced broadcasts — see [[loop]]'s note
-    val fits = ScaleGuard.fits(nodes)
-    def gated(df: DataFrame): DataFrame = if (fits) broadcast(df) else df
-    var state = nodes
-      .join(start.select(col("item"), col("rank_micro").as("r0w")), Seq("item"), "left")
-      .select(col("item"), coalesce(col("r0w"), lit(1000000L)).as("rw"),
-        lit(1000000L).as("rc"))
-      .localCheckpoint()
-    var vW: DataFrame = null
-    for (i <- 1 to iters) {
-      if (i <= warmIters) {
-        // r16 optimization: broadcast the node-bounded state/contrib —
-        // the edge census never re-shuffles (see [[loop]]).
-        val contrib = edgesW
-          .join(gated(state.select(col("item").as("src"), col("rw"), col("rc"))),
-            Seq("src"))
-          .groupBy(col("dst"))
-          .agg(sum(expr("(rw * w) div out_w")).as("cw"),
-            sum(expr("(rc * w) div out_w")).as("cc"))
-        val dMass = state.join(dangling, Seq("item"))
-          .agg(coalesce(sum(col("rw")), lit(0L)).as("dw"),
-            coalesce(sum(col("rc")), lit(0L)).as("dc"))
-        state = nodes
-          .join(gated(contrib.withColumnRenamed("dst", "item")), Seq("item"), "left")
-          .crossJoin(broadcast(dMass))
-          .crossJoin(broadcast(nCensus))
-          .select(col("item"),
-            (lit(base) + expr(s"(coalesce(cw, 0L) * ${dampBp}L) div 10000L") +
-              expr(s"((dw div n_nodes) * ${dampBp}L) div 10000L")).as("rw"),
-            (lit(base) + expr(s"(coalesce(cc, 0L) * ${dampBp}L) div 10000L") +
-              expr(s"((dc div n_nodes) * ${dampBp}L) div 10000L")).as("rc"))
-        if (i < iters) state = state.localCheckpoint()
-        if (i == warmIters) vW = state.select(col("item"), col("rw"))
-      } else {
-        val contrib = edgesW
-          .join(gated(state.select(col("item").as("src"), col("rc"))), Seq("src"))
-          .groupBy(col("dst"))
-          .agg(sum(expr("(rc * w) div out_w")).as("cc"))
-        val dMass = state.join(dangling, Seq("item"))
-          .agg(coalesce(sum(col("rc")), lit(0L)).as("dc"))
-        state = nodes
-          .join(gated(contrib.withColumnRenamed("dst", "item")), Seq("item"), "left")
-          .crossJoin(broadcast(dMass))
-          .crossJoin(broadcast(nCensus))
-          .select(col("item"),
-            (lit(base) + expr(s"(coalesce(cc, 0L) * ${dampBp}L) div 10000L") +
-              expr(s"((dc div n_nodes) * ${dampBp}L) div 10000L")).as("rc"))
-        if (i < iters) state = state.localCheckpoint()
-      }
-    }
-    vW.join(state.select(col("item"), col("rc")), Seq("item"))
+    val g = new RankGraph(edges, teleport = true, iters, dampBp)
+    val warm = g.iterate(g.aligned(start, "rw", "rc"), Seq("rw", "rc"), 1 to warmIters)
+    val cold = g.iterate(warm, Seq("rc"), warmIters + 1 to iters)
+    warm.select(col("item"), col("rw"))
+      .join(cold.select(col("item"), col("rc")), Seq("item"))
       .select(col("item"), col("rw").as("rank_warm"), col("rc").as("rank_cold"))
   }
 
   /** (item, rank_settled, rank_warm, rank_cold, drift) — see object doc. */
   def pageRankDeltaOf(events: DataFrame, tUs: Column,
                       cutUs: Long = SpectralDelta.DeltaCutUs): DataFrame = {
-    val e = Tables.swapPersist("q164_e", itemEvents(events, tUs))
+    val e = Tables.swapPersist("q164_e", CensusDelta.prep(events, tUs))
     val settled = e.filter(col("t") < cutUs)
-    val delta = e.filter(col("t") >= cutUs)
     // settled census: two readers (settled rank arm + merged union)
     // r16: checkpoint — lineage truncation (ppmiMatOf note)
     val cs = directedCensusOf(settled).localCheckpoint()
-    val cd = directedCensusOf(delta)
-    val cb = Frontier.straddleOf(settled, delta)
-      .filter(col("s_item") =!= col("d_item"))
-      .groupBy(col("s_item").as("src"), col("d_item").as("dst"))
-      .agg(count(lit(1)).as("w"))
-    val merged = cs.unionByName(cd).unionByName(cb)
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
+    val merged = mergedCensusOf(cs, Frontier.lastOf(settled), e.filter(col("t") >= cutUs))
 
     // yesterday's ranks: two readers (warm v0 + final left join)
-    val vS = rankOf(cs, key = "q164s").localCheckpoint()
-    val wc = rankWarmColdOf(merged, vS, key = "q164m")
+    val vS = rankOf(cs).localCheckpoint()
+    val wc = rankWarmColdOf(merged, vS)
 
     wc.join(vS.select(col("item"), col("rank_micro").as("rank_settled")),
         Seq("item"), "left")

@@ -36,15 +36,14 @@ import graft.oracle.{QueryDef, Tables}
 object PmiAgreement {
 
   /** (n_topk, n_direct, nodes, share_bp) over a `pmi(a, b, …, pmi)`
-    * census, using q157's top-K constants. `key` namespaces the
-    * similarity stack's internal persists per registered caller. */
-  def agreementOf(pmi: DataFrame, key: String = "q158"): DataFrame = {
+    * census, using q157's top-K constants. */
+  def agreementOf(pmi: DataFrame): DataFrame = {
     // pmi feeds the similarity stack AND the direct-edge arm (doubled-pass
     // rule) — localCheckpointed so the final plan truncates here rather
     // than replicating the census stack's displayed lineage through both
     // consumers (the q147/q148 manifest artifact)
     val p = pmi.localCheckpoint()
-    val nn = PmiNeighbors.neighborsOf(p, key = key)
+    val nn = PmiNeighbors.neighborsOf(p)
     val pos = p.filter(col("pmi") > 0)
       .select(col("a"), col("b"),
         round(col("pmi") * lit(1000.0), 0).cast("long").as("w"))
@@ -71,8 +70,7 @@ object PmiAgreement {
     val pw = Triangles.weightedItemGraphOf(ev, Tables.tsMicros(ev))
       .localCheckpoint()
     agreementOf(WalkPmi.pmiOf(
-      WalkPairs.walkPairsOf(Backbone.backboneOf(pw), key = "q158"),
-      key = "q158"))
+      WalkPairs.walkPairsOf(Backbone.backboneOf(pw))))
   }
 
   private def q158Sql: String =

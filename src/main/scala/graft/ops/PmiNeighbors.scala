@@ -49,11 +49,9 @@ object PmiNeighbors {
   val TopK = 5
 
   /** (node, nbr, rk, dot, cos2_bp) top-`k` capped-cosine neighbors per
-    * node of a `pmi(a, b, …, pmi)` census. `key` namespaces the internal
-    * persists per registered caller (q157/q158/q160/linkGate all run
-    * this — a shared key means concurrent-bench cross-query eviction). */
+    * node of a `pmi(a, b, …, pmi)` census. */
   def neighborsOf(pmi: DataFrame, cap: Long = ContextCap,
-                  k: Int = TopK, key: String = "q157"): DataFrame = {
+                  k: Int = TopK): DataFrame = {
     require(cap >= 1L, s"cap must be >= 1, got $cap")
     require(k >= 1, s"k must be >= 1, got $k")
     // w > 0 AFTER rounding: a pmi under 0.0005 rounds to weight 0 at
@@ -141,32 +139,14 @@ object PmiNeighbors {
     val pw = Tables.swapPersist("link_gate_pw",
       Triangles.weightedItemGraphOf(staticEvents, staticTUs, minW))
     val nn = neighborsOf(
-      WalkPmi.pmiOf(WalkPairs.walkPairsOf(Backbone.backboneOf(pw, topBp),
-        key = "link_gate"), key = "link_gate"),
-      key = "link_gate")
+      WalkPmi.pmiOf(WalkPairs.walkPairsOf(Backbone.backboneOf(pw, topBp))))
     // canonical predicted pairs that never co-transitioned: vocab-grain
     val pred = Tables.swapPersist("link_gate_pred",
       nn.select(least(col("node"), col("nbr")).as("a"),
           greatest(col("node"), col("nbr")).as("b"), col("cos2_bp"))
         .distinct()
         .join(pw.select(col("a"), col("b")), Seq("a", "b"), "left_anti"))
-    val lastItem = Tables.swapPersist("link_gate_last",
-      staticEvents
-        .select(col("user_id"), col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"),
-          staticTUs.as("t"))
-        .filter(col("item").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(expr("max_by(item, struct(t, event_id))").as("last_item")))
-    streamEvents
-      .select(col("user_id"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("item"))
-      .filter(col("item").isNotNull)
-      .join(lastItem.select(col("user_id"), col("last_item")), Seq("user_id"))
-      .filter(col("last_item") =!= col("item"))
-      .select(col("user_id"), col("event_id"),
-        least(col("last_item"), col("item")).as("a"),
-        greatest(col("last_item"), col("item")).as("b"))
+    Triangles.arrivalPairsOf(streamEvents, staticEvents, staticTUs, "link_gate_last")
       .join(pred, Seq("a", "b"))
       .select(col("user_id"), col("event_id"), col("a"), col("b"),
         col("cos2_bp"))
@@ -180,8 +160,7 @@ object PmiNeighbors {
     val pw = Triangles.weightedItemGraphOf(ev, Tables.tsMicros(ev))
       .localCheckpoint()
     neighborsOf(WalkPmi.pmiOf(
-      WalkPairs.walkPairsOf(Backbone.backboneOf(pw), key = "q157"),
-      key = "q157"))
+      WalkPairs.walkPairsOf(Backbone.backboneOf(pw))))
   }
 
   /** Mirror of [[neighborsOf]] over [[WalkPmi.pmiCtes]], ending in

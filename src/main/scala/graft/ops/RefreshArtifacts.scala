@@ -104,10 +104,9 @@ object RefreshArtifacts {
     Frontier.lastOf(e).write.mode("overwrite").parquet(s"$dir/frontier")
     SpectralEmbed.spectralOf(
         WalkPmi.pmiOf(Backbone.backboneWeightedOf(DailyRefresh.pooled(cs))
-          .withColumnRenamed("w", "cnt"), key = "q167f"),
-        key = "q167f")
+          .withColumnRenamed("w", "cnt")))
       .write.mode("overwrite").parquet(s"$dir/spectral")
-    PageRankDelta.rankOf(cs, key = "q167fr")
+    PageRankDelta.rankOf(cs)
       .write.mode("overwrite").parquet(s"$dir/ranks")
     ArtifactStore.commitFit(base, fp)
     dir
@@ -140,21 +139,14 @@ object RefreshArtifacts {
       CensusDelta.prep(ev.filter(Tables.tsAtLeast(ev, cutUs)),
         Tables.tsMicros(ev)))
 
-    val cd = PageRankDelta.directedCensusOf(d)
-    val cb = Frontier.straddleFrom(frontier, d)
-      .filter(col("s_item") =!= col("d_item"))
-      .groupBy(col("s_item").as("src"), col("d_item").as("dst"))
-      .agg(count(lit(1)).as("w"))
     // merged census persists: PageRank warm arm + pooled spectral rollup
-    val mDir = csArt.unionByName(cd).unionByName(cb)
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .localCheckpoint()
+    val mDir = PageRankDelta.mergedCensusOf(csArt, frontier, d).localCheckpoint()
 
     val vW = SpectralEmbed.spectralWarmOf(
       WalkPmi.pmiOf(Backbone.backboneWeightedOf(DailyRefresh.pooled(mDir))
-        .withColumnRenamed("w", "cnt"), key = "q167m"),
-      vS, SpectralDelta.WarmRounds, key = "q167m")
-    val rW = PageRankDelta.rankFrom(mDir, rS, key = "q167mr")
+        .withColumnRenamed("w", "cnt")),
+      vS, SpectralDelta.WarmRounds)
+    val rW = PageRankDelta.rankFrom(mDir, rS)
 
     rW.select(col("item"), col("rank_micro").as("rank_warm"))
       .join(rS.select(col("item"), col("rank_micro").as("rank_settled")),

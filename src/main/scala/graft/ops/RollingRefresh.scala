@@ -75,26 +75,14 @@ object RollingRefresh {
     val d1 = e.filter(col("t") >= c1 && col("t") < c2)
     val d2 = e.filter(col("t") >= c2)
 
-    def straddleCensus(front: DataFrame, delta: DataFrame): DataFrame =
-      Frontier.straddleFrom(front, delta)
-        .filter(col("s_item") =!= col("d_item"))
-        .groupBy(col("s_item").as("src"), col("d_item").as("dst"))
-        .agg(count(lit(1)).as("w"))
-
     val cs0 = PageRankDelta.directedCensusOf(s).localCheckpoint()
     val f0 = Frontier.lastOf(s).localCheckpoint() // 2 readers: cb1 + advance
-    val m1 = cs0.unionByName(PageRankDelta.directedCensusOf(d1))
-      .unionByName(straddleCensus(f0, d1))
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .localCheckpoint()
+    val m1 = PageRankDelta.mergedCensusOf(cs0, f0, d1).localCheckpoint()
     // compaction: tomorrow's state from today's state + d1 ALONE —
     // census closure (m1 IS the new settled census) and the frontier
     // upsert ([[Frontier.advance]]); the settled corpus is not touched
     val f1 = Frontier.advance(f0, Frontier.lastOf(d1))
-    val m2 = m1.unionByName(PageRankDelta.directedCensusOf(d2))
-      .unionByName(straddleCensus(f1, d2))
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .localCheckpoint()
+    val m2 = PageRankDelta.mergedCensusOf(m1, f1, d2).localCheckpoint()
     (cs0, m1, m2)
   }
 
@@ -125,26 +113,25 @@ object RollingRefresh {
     // posture, across all three days).
     val (wcR, wcV) = graft.oracle.Par.par2(
       {
-        val r0 = PageRankDelta.rankOf(cs0, key = "q169r0")
+        val r0 = PageRankDelta.rankOf(cs0)
         // day 1: refresh off (cs0, f0, r0) + the d1 shard
-        val r1 = PageRankDelta.rankFrom(m1, r0, key = "q169r1")
+        val r1 = PageRankDelta.rankFrom(m1, r0)
         // day 2: refresh off the COMPACTED state + the d2 shard; warm and
         // cold fused for the chained-drift audit
-        PageRankDelta.rankWarmColdOf(m2, r1, key = "q169r2")
+        PageRankDelta.rankWarmColdOf(m2, r1)
       },
       {
         val v0 = SpectralEmbed.spectralOf(
           WalkPmi.pmiOf(Backbone.backboneWeightedOf(DailyRefresh.pooled(cs0))
-            .withColumnRenamed("w", "cnt"), key = "q169s0"),
-          key = "q169s0")
+            .withColumnRenamed("w", "cnt")))
         val v1 = SpectralEmbed.spectralWarmOf(
           WalkPmi.pmiOf(Backbone.backboneWeightedOf(DailyRefresh.pooled(m1))
-            .withColumnRenamed("w", "cnt"), key = "q169s1"),
-          v0, SpectralDelta.WarmRounds, key = "q169s1")
+            .withColumnRenamed("w", "cnt")),
+          v0, SpectralDelta.WarmRounds)
         SpectralDelta.spectralWarmColdOf(
           WalkPmi.pmiOf(Backbone.backboneWeightedOf(DailyRefresh.pooled(m2))
-            .withColumnRenamed("w", "cnt"), key = "q169s2"),
-          v1, SpectralDelta.WarmRounds, key = "q169s2")
+            .withColumnRenamed("w", "cnt")),
+          v1, SpectralDelta.WarmRounds)
       })
 
     wcR.join(wcV.withColumnRenamed("node", "item"), Seq("item"), "left")
@@ -185,11 +172,10 @@ object RollingRefresh {
     // r17 (guide §2.6): rank and spectral priors are independent given
     // the checkpointed census — overlap their eager chains (q166 posture)
     var (r, v) = graft.oracle.Par.par2(
-      PageRankDelta.rankOf(cs, key = "chain_r0").localCheckpoint(),
+      PageRankDelta.rankOf(cs).localCheckpoint(),
       SpectralEmbed.spectralOf(
         WalkPmi.pmiOf(Backbone.backboneWeightedOf(DailyRefresh.pooled(cs))
-          .withColumnRenamed("w", "cnt"), key = "chain_s0"),
-        key = "chain_s0").localCheckpoint())
+          .withColumnRenamed("w", "cnt"))).localCheckpoint())
 
     val out = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val his = cuts.tail.map(Some(_)) :+ None
@@ -199,24 +185,18 @@ object RollingRefresh {
         case Some(h) => e.filter(col("t") >= lo && col("t") < h)
         case None => e.filter(col("t") >= lo)
       }
-      val cb = Frontier.straddleFrom(f, d)
-        .filter(col("s_item") =!= col("d_item"))
-        .groupBy(col("s_item").as("src"), col("d_item").as("dst"))
-        .agg(count(lit(1)).as("w"))
-      val m = cs.unionByName(PageRankDelta.directedCensusOf(d)).unionByName(cb)
-        .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-        .localCheckpoint()
+      val m = PageRankDelta.mergedCensusOf(cs, f, d).localCheckpoint()
       f = Frontier.advance(f, Frontier.lastOf(d)).localCheckpoint()
 
       val k = idx + 1
       // per-cycle rank and spectral arms are independent — overlap them
       val (wcR, wcV) = graft.oracle.Par.par2(
-        PageRankDelta.rankWarmColdOf(m, r, key = s"chain_r$k")
+        PageRankDelta.rankWarmColdOf(m, r)
           .localCheckpoint(),
         SpectralDelta.spectralWarmColdOf(
           WalkPmi.pmiOf(Backbone.backboneWeightedOf(DailyRefresh.pooled(m))
-            .withColumnRenamed("w", "cnt"), key = s"chain_s$k"),
-          v, SpectralDelta.WarmRounds, key = s"chain_s$k").localCheckpoint())
+            .withColumnRenamed("w", "cnt")),
+          v, SpectralDelta.WarmRounds).localCheckpoint())
 
       val rd = wcR.agg(count(lit(1)).as("nodes"),
         sum(abs(col("rank_warm") - col("rank_cold"))).as("rank_l1"),
@@ -251,13 +231,7 @@ object RollingRefresh {
         case Some(h) => e.filter(col("t") >= lo && col("t") < h)
         case None => e.filter(col("t") >= lo)
       }
-      val cb = Frontier.straddleFrom(f, d)
-        .filter(col("s_item") =!= col("d_item"))
-        .groupBy(col("s_item").as("src"), col("d_item").as("dst"))
-        .agg(count(lit(1)).as("w"))
-      cs = cs.unionByName(PageRankDelta.directedCensusOf(d)).unionByName(cb)
-        .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-        .localCheckpoint()
+      cs = PageRankDelta.mergedCensusOf(cs, f, d).localCheckpoint()
       f = Frontier.advance(f, Frontier.lastOf(d)).localCheckpoint()
     }
     cs

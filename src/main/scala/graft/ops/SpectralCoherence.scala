@@ -34,9 +34,8 @@ import graft.oracle.{QueryDef, Tables}
   * q153's machinery. */
 object SpectralCoherence {
 
-  /** (cls, pairs, mean_d2) over a `pmi(a, b, …, pmi)` census. `key`
-    * namespaces both stacks' internal persists per registered caller. */
-  def coherenceOf(pmi: DataFrame, key: String = "q160"): DataFrame = {
+  /** (cls, pairs, mean_d2) over a `pmi(a, b, …, pmi)` census. */
+  def coherenceOf(pmi: DataFrame): DataFrame = {
     // three faces (doubled-pass rule, and the q158 display lesson)
     val p = pmi.localCheckpoint()
     // r17 (guide §2.6): the spectral stack and the similarity stack are
@@ -44,8 +43,8 @@ object SpectralCoherence {
     // concurrently (the q166 posture) so their jobs and per-job driver
     // cost overlap; each is checkpointed for its two endpoint readers.
     val (coords, nnp) = graft.oracle.Par.par2(
-      SpectralEmbed.spectralPairOf(p, key = key).localCheckpoint(),
-      PmiNeighbors.neighborsOf(p, key = key)
+      SpectralEmbed.spectralPairOf(p).localCheckpoint(),
+      PmiNeighbors.neighborsOf(p)
         .select(least(col("node"), col("nbr")).as("a"),
           greatest(col("node"), col("nbr")).as("b"))
         .distinct()
@@ -86,8 +85,7 @@ object SpectralCoherence {
     val pw = Triangles.weightedItemGraphOf(ev, Tables.tsMicros(ev))
       .localCheckpoint()
     coherenceOf(WalkPmi.pmiOf(
-      WalkPairs.walkPairsOf(Backbone.backboneOf(pw), key = "q160"),
-      key = "q160"))
+      WalkPairs.walkPairsOf(Backbone.backboneOf(pw))))
   }
 
   /** Mirror of [[coherenceOf]]: the spectral-pair stack and the

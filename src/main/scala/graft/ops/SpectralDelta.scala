@@ -83,93 +83,32 @@ object SpectralDelta {
 
   /** (node, v_warm, v_cold) — warm and cold power iterations FUSED into
     * one pass: per round, ONE join of the matrix against a two-column
-    * state and one aggregation computing both raw vectors, then one
-    * 1-row census carrying both maxes. Per-column arithmetic is exactly
-    * [[SpectralEmbed.spectralWarmOf]] / [[SpectralEmbed.spectralOf]]
-    * (pinned column-for-column in SpectralDeltaSpec); the fusion buys
-    * one matrix pass per round instead of two — at a 10⁷-entry matrix
-    * that is half the iteration shuffle volume, and on the fixture it
-    * halves the number of eager checkpoint jobs (the measured per-job
-    * fixed cost dominates census-grain rounds). The warm column freezes
-    * after `warmRounds`; the cold column runs the full
-    * [[SpectralEmbed.Rounds]]. */
+    * state and one aggregation computing both raw vectors, then both
+    * maxes — [[SpectralEmbed.iterate]]'s round body over the columns
+    * (vw, vc) for the first `warmRounds` rounds, then over vc alone (the
+    * warm column frozen) to the full [[SpectralEmbed.Rounds]]. Per-column
+    * arithmetic is therefore exactly [[SpectralEmbed.spectralWarmOf]] /
+    * [[SpectralEmbed.spectralOf]] (pinned column-for-column in
+    * SpectralDeltaSpec); the fusion buys one matrix pass per round
+    * instead of two — at a 10⁷-entry matrix that is half the iteration
+    * shuffle volume, and on the fixture half the checkpoint jobs (the
+    * measured per-job fixed cost dominates census-grain rounds). */
   def spectralWarmColdOf(pmi: DataFrame, start: DataFrame,
-                         warmRounds: Int, key: String): DataFrame = {
+                         warmRounds: Int): DataFrame = {
     require(warmRounds >= 1 && warmRounds <= SpectralEmbed.Rounds,
       s"warmRounds out of [1, ${SpectralEmbed.Rounds}]: $warmRounds")
     val S = SpectralEmbed.Scale
-    val mat = SpectralEmbed.matOf(pmi, key)
-    import org.apache.spark.sql.types.DecimalType
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
-    // r16 optimization (guide §2.4/§3.1, mirrors SpectralEmbed.iterate):
-    // the two-column state is node-bounded, so it BROADCASTS into the
-    // round join (the matrix never re-shuffles — before, the
-    // checkpointed state was a stats-less LogicalRDD and Spark planned a
-    // two-sided shuffle every round) and the per-column max-normalization
-    // census folds into the SAME action as an empty-window max over the
-    // node-grain aggregate (was: a separate broadcast-census BNLJ +
-    // second action per round). One localCheckpoint per round bounds
-    // lineage; arithmetic byte-identical (SpectralDeltaSpec pins it
-    // column-for-column against the single-column loop).
-    // r17: lazy checkpoints — each round's state is materialized by the
-    // next round's broadcast build inside one job cascade (see
-    // SpectralEmbed.iterate's r17 note); lineage still truncates per round
-    var state = mat.select(col("i").as("node")).distinct()
+    val mat = SpectralEmbed.ppmiMatOf(pmi)
+    // lazy checkpoint, as every round's state (SpectralEmbed.iterate)
+    val state = mat.select(col("i").as("node")).distinct()
       .join(start.select(col("node"), col("vfp").as("v0w")), Seq("node"), "left")
       .select(col("node"), coalesce(col("v0w"), lit(S)).as("vw"), lit(S).as("vc"))
       .localCheckpoint(false)
-    var vW: DataFrame = null
-    // r17: broadcast + single-partition window folds gated on the
-    // measured matrix bytes (state ≤ nodes ≤ matrix rows) — see
-    // SpectralEmbed.iterate's note; the fallback arm is the pre-r16
-    // checkpoint + 1-row-census crossJoin shape (identical arithmetic)
-    val fits = ScaleGuard.fits(mat)
-    def gatedState(s: DataFrame): DataFrame = if (fits) broadcast(s) else s
-    for (r <- 1 to SpectralEmbed.Rounds) {
-      if (r <= warmRounds) {
-        // dual round: one matrix join, two DECIMAL sums, one 2-max window
-        val agg = mat.join(gatedState(state), mat("j") === state("node"))
-          .groupBy(col("i"))
-          .agg(sum((col("wfp") * col("vw")).cast(DecimalType(38, 0))).as("rw"),
-            sum((col("wfp") * col("vc")).cast(DecimalType(38, 0))).as("rc"))
-        state =
-          if (fits)
-            agg.withColumn("mw", max(col("rw")).over(wAll))
-              .withColumn("mc", max(col("rc")).over(wAll))
-              .select(col("i").as("node"),
-                expr("(rw * 1000000) div mw").as("vw"),
-                expr("(rc * 1000000) div mc").as("vc"))
-              .localCheckpoint(false)
-          else {
-            val raw = agg.localCheckpoint()
-            raw.crossJoin(broadcast(raw.agg(
-                max(col("rw")).as("mw"), max(col("rc")).as("mc"))))
-              .select(col("i").as("node"),
-                expr("(rw * 1000000) div mw").as("vw"),
-                expr("(rc * 1000000) div mc").as("vc"))
-              .localCheckpoint(false)
-          }
-        if (r == warmRounds)
-          vW = state.select(col("node"), col("vw"))
-      } else {
-        // warm column frozen: cold-only rounds
-        val agg = mat.join(gatedState(state), mat("j") === state("node"))
-          .groupBy(col("i"))
-          .agg(sum((col("wfp") * col("vc")).cast(DecimalType(38, 0))).as("rc"))
-        state =
-          if (fits)
-            agg.withColumn("mc", max(col("rc")).over(wAll))
-              .select(col("i").as("node"), expr("(rc * 1000000) div mc").as("vc"))
-              .localCheckpoint(false)
-          else {
-            val raw = agg.localCheckpoint()
-            raw.crossJoin(broadcast(raw.agg(max(col("rc")).as("mc"))))
-              .select(col("i").as("node"), expr("(rc * 1000000) div mc").as("vc"))
-              .localCheckpoint(false)
-          }
-      }
-    }
-    vW.join(state.select(col("node"), col("vc")), Seq("node"))
+    val warm = SpectralEmbed.iterate(mat, state, Seq("vw", "vc"), warmRounds)
+    val cold = SpectralEmbed.iterate(mat, warm, Seq("vc"),
+      SpectralEmbed.Rounds - warmRounds)
+    warm.select(col("node"), col("vw"))
+      .join(cold.select(col("node"), col("vc")), Seq("node"))
       .select(col("node"), col("vw").as("v_warm"), col("vc").as("v_cold"))
   }
 
@@ -206,14 +145,13 @@ object SpectralDelta {
     // — doubled-pass rule.
     val vS = SpectralEmbed.spectralOf(
       WalkPmi.pmiOf(Backbone.backboneWeightedOf(cs)
-        .withColumnRenamed("w", "cnt"), key = "q163s"),
-      key = "q163s").localCheckpoint()
+        .withColumnRenamed("w", "cnt"))).localCheckpoint()
 
     // the merged matrix builds ONCE and both arms ride the fused pass
     val wc = spectralWarmColdOf(
       WalkPmi.pmiOf(Backbone.backboneWeightedOf(merged)
-        .withColumnRenamed("w", "cnt"), key = "q163m"),
-      vS, WarmRounds, "q163m")
+        .withColumnRenamed("w", "cnt")),
+      vS, WarmRounds)
 
     wc.join(vS.select(col("node"), col("vfp").as("v_settled")), Seq("node"), "left")
       .select(col("node"), col("v_settled"), col("v_warm"), col("v_cold"),

@@ -57,7 +57,7 @@ object Triangles {
     val w = Window.partitionBy(col("user_id")).orderBy(col("t"), col("event_id"))
     events
       .select(col("user_id"), col("event_id"),
-        // integer-valued item keys only — see pageRankOf's cast note
+        // integer-valued item keys only — see CensusDelta.prep's cast note
         get_json_object(col("props"), "$.k").cast("long").as("item"), tUs.as("t"))
       .filter(col("item").isNotNull)
       .withColumn("src", lag(col("item"), 1).over(w))
@@ -175,6 +175,29 @@ object Triangles {
       .agg(count(lit(1)).as("closures"))
   }
 
+  /** The arrival pair of every streamed item event: (user_id, event_id,
+    * a, b) = the pooled edge from the user's frozen last item to the
+    * arriving item, self-loops dropped — the candidate edge the triad,
+    * drift and link gates each score. The last item is
+    * `max_by(item, struct(t, event_id))` over the static item events:
+    * user-grain, persisted under the gate's `lastKey`. */
+  private[ops] def arrivalPairsOf(streamEvents: DataFrame, staticEvents: DataFrame,
+                                  staticTUs: Column, lastKey: String): DataFrame = {
+    val lastItem = Tables.swapPersist(lastKey,
+      CensusDelta.prep(staticEvents, staticTUs)
+        .groupBy(col("user_id"))
+        .agg(expr("max_by(item, struct(t, event_id))").as("last_item")))
+    streamEvents
+      .select(col("user_id"), col("event_id"),
+        get_json_object(col("props"), "$.k").cast("long").as("item"))
+      .filter(col("item").isNotNull)
+      .join(lastItem.select(col("user_id"), col("last_item")), Seq("user_id"))
+      .filter(col("last_item") =!= col("item"))
+      .select(col("user_id"), col("event_id"),
+        least(col("last_item"), col("item")).as("a"),
+        greatest(col("last_item"), col("item")).as("b"))
+  }
+
   /** Stream-static triadic-closure gate — the graph family's ingestion
     * face (the `*GateStreamStatic` pattern, q144/q145's streaming
     * counterpart): freeze the support-filtered co-transition graph, its
@@ -203,23 +226,7 @@ object Triangles {
     val pairs = Tables.swapPersist("triad_gate_pairs",
       itemGraphOf(staticEvents, staticTUs, minW))
     val wedges = Tables.swapPersist("triad_gate_wedges", wedgeIndexOf(pairs))
-    val lastItem = Tables.swapPersist("triad_gate_last",
-      staticEvents
-        .select(col("user_id"), col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"),
-          staticTUs.as("t"))
-        .filter(col("item").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(expr("max_by(item, struct(t, event_id))").as("last_item")))
-    streamEvents
-      .select(col("user_id"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("item"))
-      .filter(col("item").isNotNull)
-      .join(lastItem.select(col("user_id"), col("last_item")), Seq("user_id"))
-      .filter(col("last_item") =!= col("item"))
-      .select(col("user_id"), col("event_id"),
-        least(col("last_item"), col("item")).as("a"),
-        greatest(col("last_item"), col("item")).as("b"))
+    arrivalPairsOf(streamEvents, staticEvents, staticTUs, "triad_gate_last")
       .join(wedges, Seq("a", "b"), "left")
       .join(pairs.withColumn("known_edge", lit(true)), Seq("a", "b"), "left")
       .select(col("user_id"), col("event_id"), col("a"), col("b"),

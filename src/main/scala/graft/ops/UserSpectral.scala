@@ -71,9 +71,7 @@ object UserSpectral {
     // census broadcasts) out of the corpus join's plan
     val coords = SpectralEmbed.spectralPairOf(
       WalkPmi.pmiOf(
-        WalkPairs.walkPairsOf(Backbone.backboneOf(pw), key = "q161"),
-        key = "q161"),
-      key = "q161")
+        WalkPairs.walkPairsOf(Backbone.backboneOf(pw))))
       .localCheckpoint()
     val items = ev
       .select(col("user_id"),

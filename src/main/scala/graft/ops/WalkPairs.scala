@@ -55,7 +55,7 @@ object WalkPairs {
   /** Within-walk co-visit pair census (a, b, cnt) of [[Steps]]-step
     * deterministic walks, one per node of the canonical (a < b) edge
     * list `strong`. */
-  def walkPairsOf(strong: DataFrame, key: String = "q153"): DataFrame = {
+  def walkPairsOf(strong: DataFrame): DataFrame = {
     val wU = Window.partitionBy(col("u"))
     val adj = strong.select(col("a").as("u"), col("b").as("v"))
       .unionAll(strong.select(col("b").as("u"), col("a").as("v")))

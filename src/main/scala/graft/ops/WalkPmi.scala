@@ -35,10 +35,8 @@ import graft.oracle.{QueryDef, Tables}
   * q153's machinery (persisted weighted census, checkpointed walks). */
 object WalkPmi {
 
-  /** (a, b, cnt, occ_a, occ_b, t_mass, pmi) over a pair census. `key`
-    * namespaces the persist per registered caller (concurrent-bench
-    * cross-query eviction otherwise). */
-  def pmiOf(pairs: DataFrame, key: String = "q155"): DataFrame = {
+  /** (a, b, cnt, occ_a, occ_b, t_mass, pmi) over a pair census. */
+  def pmiOf(pairs: DataFrame): DataFrame = {
     // r16: localCheckpoint, not keyed persist — the pair census is
     // census-bounded and its three readers (occupancy explode, T fold,
     // final row) otherwise each re-plan the full upstream walk/backbone
@@ -67,7 +65,7 @@ object WalkPmi {
     // out of every census-grain downstream plan (SpectralEmbed.ppmiMatOf)
     val pw = Triangles.weightedItemGraphOf(ev, Tables.tsMicros(ev))
       .localCheckpoint()
-    pmiOf(WalkPairs.walkPairsOf(Backbone.backboneOf(pw), key = "q155"))
+    pmiOf(WalkPairs.walkPairsOf(Backbone.backboneOf(pw)))
   }
 
   /** Mirror of [[pmiOf]] over [[WalkPairs.walkPairCtes]]'s `pairs`: CTE

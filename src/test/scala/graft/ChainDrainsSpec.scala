@@ -105,7 +105,7 @@ class ChainDrainsSpec extends SparkSpec {
       val settledPre = evCols(r.filter(col("day") < k ||
         (col("day") === k && !col("late"))))
       val m = LateRepair.applyTo(mPre,
-          LateRepair.correctionOf(settledPre, lateK, key = s"store$k"))
+          LateRepair.correctionOf(settledPre, lateK))
         .filter(col("w") =!= 0).select(col("src"), col("dst"), col("w"))
       val f = graft.ops.Frontier.advance(frArt, graft.ops.Frontier.lastOf(kept))
       fp = s"cycle$k"

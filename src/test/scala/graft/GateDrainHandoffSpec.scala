@@ -158,8 +158,7 @@ class GateDrainHandoffSpec extends SparkSpec {
           .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
         val settledPre = routed
           .filter(r => r._1 < k || (r._1 == k && !r._4)).map(_._3).toDF()
-        val corr = LateRepair.correctionOf(settledPre, ck.dlqEvents.toDF(),
-          key = s"handoff$k")
+        val corr = LateRepair.correctionOf(settledPre, ck.dlqEvents.toDF())
         val m = LateRepair.applyTo(mPre, corr)
           .filter(col("w") =!= 0).select(col("src"), col("dst"), col("w"))
         fp = s"cycle$k"

@@ -8,7 +8,7 @@ class HarmonicSpec extends SparkSpec {
   import spark.implicits._
 
   private def harm(edges: (Long, Long)*): Map[Long, (Long, Long, Long, Long)] =
-    Harmonic.harmonicOf(edges.toSeq.toDF("a", "b"), key = "harm_spec")
+    Harmonic.harmonicOf(edges.toSeq.toDF("a", "b"))
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap

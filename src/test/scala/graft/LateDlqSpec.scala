@@ -181,7 +181,7 @@ class LateDlqSpec extends SparkSpec {
       val dlqDf = coll.dlqEvents.toDF()
       val dlqIds = coll.dlq
       val keptDf = routed.map(_._2).filterNot(e => dlqIds.contains(e.event_id)).toDF()
-      val corr = LateRepair.correctionOf(keptDf, dlqDf, key = "dlq_spec")
+      val corr = LateRepair.correctionOf(keptDf, dlqDf)
       val repaired = LateRepair.applyTo(
           coll.census.toSeq.map { case ((s, d), w) => (s, d, w) }.toDF("src", "dst", "w"),
           corr)

@@ -9,7 +9,7 @@ class LinkPredictSpec extends SparkSpec {
   import spark.implicits._
 
   private def predict(minClosures: Long, edges: (Long, Long)*): Set[(Long, Long, Long, Long, Long, Long)] =
-    LinkPredict.linkPredictionOf(edges.toSeq.toDF("a", "b"), minClosures, key = "lp_spec")
+    LinkPredict.linkPredictionOf(edges.toSeq.toDF("a", "b"), minClosures)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
       .toSet
@@ -49,7 +49,7 @@ class LinkPredictSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val emb = Triangles.perEdgeEmbeddedness(pairsDf, key = "lp_spec_emb").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val open = LinkPredict.linkPredictionOf(pairsDf, 1L, key = "lp_spec2").collect()
+    val open = LinkPredict.linkPredictionOf(pairsDf, 1L).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     // edge-restricted wedge rows ARE q145's positive-embeddedness rows —
     // two independent triadic computations (Σdeg² bidirectional census vs

@@ -10,7 +10,7 @@ class LpaSpec extends SparkSpec {
   import spark.implicits._
 
   private def lpa(rounds: Int, edges: (Long, Long)*): Set[(Long, Long, Long)] =
-    Lpa.lpaOf(edges.toSeq.toDF("a", "b"), rounds, key = "lpa_spec")
+    Lpa.lpaOf(edges.toSeq.toDF("a", "b"), rounds)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("two triangles over a bridge split into their own communities (hand-traced 4 sweeps)") {
@@ -50,7 +50,7 @@ class LpaSpec extends SparkSpec {
     val ev = graft.oracle.Tables.table(spark, "/root/testdata/sf0.01", "events")
     val pw = Triangles.weightedItemGraphOf(ev, graft.oracle.Tables.tsMicros(ev))
     val strong = graft.ops.Backbone.backboneOf(pw).localCheckpoint()
-    val comm = Lpa.lpaOf(strong, key = "lpa_spec_sf")
+    val comm = Lpa.lpaOf(strong)
       .select(col("item"), col("community"))
     val cc = Components.connectedComponents(strong, "a", "b")
       .select(col("v").as("item"), col("cluster_id"))

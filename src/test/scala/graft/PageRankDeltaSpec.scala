@@ -39,10 +39,9 @@ class PageRankDeltaSpec extends SparkSpec {
     rank
   }
 
-  private def fused(edges: Seq[(Long, Long, Long)], start: Map[Long, Long],
-                    key: String): Map[Long, (Long, Long)] =
+  private def fused(edges: Seq[(Long, Long, Long)], start: Map[Long, Long]): Map[Long, (Long, Long)] =
     PageRankDelta.rankWarmColdOf(edges.toDF("src", "dst", "w"),
-      start.toSeq.toDF("item", "rank_micro"), key)
+      start.toSeq.toDF("item", "rank_micro"))
       .collect()
       .map(r => r.getAs[Long]("item") ->
         (r.getAs[Long]("rank_warm"), r.getAs[Long]("rank_cold"))).toMap
@@ -54,7 +53,7 @@ class PageRankDeltaSpec extends SparkSpec {
 
   test("fused warm+cold == the plain-Long mirror, column for column") {
     val start = Map(1L -> 1400000L, 3L -> 600000L) // partial: 2,4,5,6 align to uniform
-    val got = fused(edges, start, "prd_mir")
+    val got = fused(edges, start)
     val warm = mirrorRank(edges, start, PageRankDelta.WarmIters)
     val cold = mirrorRank(edges, Map.empty, PageRankDelta.Iters)
     assert(got.keySet == cold.keySet)
@@ -65,9 +64,9 @@ class PageRankDeltaSpec extends SparkSpec {
   }
 
   test("fused cold column == the single-column rankOf loop") {
-    val viaLoop = PageRankDelta.rankOf(edges.toDF("src", "dst", "w"), "prd_loop")
+    val viaLoop = PageRankDelta.rankOf(edges.toDF("src", "dst", "w"))
       .collect().map(r => r.getAs[Long]("item") -> r.getAs[Long]("rank_micro")).toMap
-    val viaFused = fused(edges, Map.empty, "prd_cold").map { case (n, (_, c)) => n -> c }
+    val viaFused = fused(edges, Map.empty).map { case (n, (_, c)) => n -> c }
     assert(viaLoop == viaFused)
   }
 
@@ -78,7 +77,7 @@ class PageRankDeltaSpec extends SparkSpec {
       (2L, 1L, 1L), (3L, 2L, 1L), (1L, 3L, 1L))
     val vStar = Map(1L -> 1000000L, 2L -> 1000000L, 3L -> 1000000L)
     assert(mirrorRank(reg, Map.empty, 7) == vStar, "cold converges to uniform")
-    val got = fused(reg, vStar, "prd_fp")
+    val got = fused(reg, vStar)
     got.foreach { case (n, (w, c)) =>
       assert(w == 1000000L && c == 1000000L, s"node $n: ($w, $c)")
     }

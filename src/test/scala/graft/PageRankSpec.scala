@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.PageRank
+import graft.ops.{PageRank, PageRankDelta}
 import org.apache.spark.sql.functions._
 
 /** q139: integer power-iteration PageRank over the item-transition graph. */
@@ -106,6 +106,31 @@ class PageRankSpec extends SparkSpec {
     // two disjoint cycles: every node has an out-edge, D = 0 every round
     val rows = walk(1, Seq(1, 2, 1)) ++ walk(2, Seq(3, 4, 5, 3))
     assert(prFullOf(rows, iters = 3) == prOf(rows, iters = 3))
+  }
+
+  test("every PageRank entry rejects iters < 1 and damping outside [0, 10000] before any job") {
+    val ev = walk(1, Seq(1, 2, 3)).toDF("event_id", "user_id", "ts", "props")
+    val tUs = unix_micros(col("ts"))
+    val edges = Seq((1L, 2L, 1L), (2L, 3L, 1L)).toDF("src", "dst", "w")
+    val start = Seq((1L, 1000000L)).toDF("item", "rank_micro")
+    val bad: Seq[(String, () => Any)] = Seq(
+      "pageRankOf iters 0" -> (() => PageRank.pageRankOf(ev, tUs, iters = 0)),
+      "pageRankOf dampBp 10001" -> (() => PageRank.pageRankOf(ev, tUs, dampBp = 10001L)),
+      "pageRankFullOf dampBp -1" -> (() => PageRank.pageRankFullOf(ev, tUs, dampBp = -1L)),
+      "rankOf dampBp 10001" -> (() => PageRankDelta.rankOf(edges, dampBp = 10001L)),
+      "rankOf dampBp -1" -> (() => PageRankDelta.rankOf(edges, dampBp = -1L)),
+      "rankFrom iters 0" -> (() => PageRankDelta.rankFrom(edges, start, iters = 0)),
+      "rankFrom dampBp 10001" -> (() => PageRankDelta.rankFrom(edges, start, dampBp = 10001L)),
+      "rankWarmColdOf dampBp 10001" ->
+        (() => PageRankDelta.rankWarmColdOf(edges, start, dampBp = 10001L)))
+    for ((name, build) <- bad) {
+      val (_, jobs) = JobCount.of(spark)(intercept[IllegalArgumentException](build()))
+      assert(jobs == 0, s"$name: $jobs Spark jobs ran before the input was rejected")
+    }
+    // both damping bounds are valid: 0 keeps only the base, 10000 none
+    assert(PageRankDelta.rankOf(edges, dampBp = 0L).collect()
+      .forall(_.getLong(1) == 1000000L))
+    assert(PageRankDelta.rankOf(edges, dampBp = 10000L).count() == 3L)
   }
 
   test("fixture census is item-vocabulary-bounded and all-positive") {

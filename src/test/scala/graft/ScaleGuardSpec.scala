@@ -102,7 +102,7 @@ class ScaleGuardSpec extends SparkSpec {
   test("under cap 0 the spectral round join is NOT broadcast (the gate really engages)") {
     val pmi = Registry.byName("q155_walk_pmi").run(spark, sf0001)
     val guarded = withCap(0L) {
-      graft.ops.SpectralEmbed.spectralOf(pmi, key = "guardspec")
+      graft.ops.SpectralEmbed.spectralOf(pmi)
     }
     val plan = guarded.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastHashJoin"),

@@ -42,10 +42,9 @@ class SpectralDeltaSpec extends SparkSpec {
   }
 
   private def runWarm(entries: Seq[(Long, Long, Double)],
-                      start: Map[Long, Long], rounds: Int,
-                      key: String): Map[Long, Long] =
+                      start: Map[Long, Long], rounds: Int): Map[Long, Long] =
     SpectralEmbed.spectralWarmOf(entries.toDF("a", "b", "pmi"),
-      start.toSeq.toDF("node", "vfp"), rounds, key)
+      start.toSeq.toDF("node", "vfp"), rounds)
       .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("vfp")).toMap
 
   private def runCold(entries: Seq[(Long, Long, Double)]): Map[Long, Long] =
@@ -59,8 +58,8 @@ class SpectralDeltaSpec extends SparkSpec {
     // (SpectralEmbedSpec) — so a warm restart from it must be invariant
     val vStar = runCold(triangle)
     assert(vStar.values.forall(_ == S), "triangle fixed point is uniform")
-    assert(runWarm(triangle, vStar, 1, "sd_fp1") == vStar)
-    assert(runWarm(triangle, vStar, SpectralEmbed.Rounds, "sd_fp4") == vStar)
+    assert(runWarm(triangle, vStar, 1) == vStar)
+    assert(runWarm(triangle, vStar, SpectralEmbed.Rounds) == vStar)
   }
 
   test("perturbed warm start RETURNS to the cold fixed point's 1-ULP basin") {
@@ -79,26 +78,26 @@ class SpectralDeltaSpec extends SparkSpec {
     val vStar = runCold(triangle)
     assert(m12.forall { case (n, x) => math.abs(x - vStar(n)) <= 1L },
       s"recovered point within 1 ULP of the cold fixed point: $m12 vs $vStar")
-    assert(runWarm(triangle, start, 12, "sd_ret") == m12)
+    assert(runWarm(triangle, start, 12) == m12)
   }
 
   test("empty warm start with Rounds rounds IS the cold path") {
     val es = Seq((1L, 2L, 1.25), (2L, 3L, 0.333333), (3L, 4L, 2.0), (4L, 5L, 0.000001))
-    assert(runWarm(es, Map.empty, SpectralEmbed.Rounds, "sd_cold") == runCold(es))
+    assert(runWarm(es, Map.empty, SpectralEmbed.Rounds) == runCold(es))
   }
 
   test("asymmetric census, partial start: warm trajectory matches the BigInt mirror bit-for-bit") {
     val es = Seq((1L, 2L, 1.25), (2L, 3L, 0.333333), (3L, 4L, 2.0), (4L, 5L, 0.7))
     val start = Map(1L -> 900000L, 3L -> 123456L) // 2,4,5 fall back to Scale
     (0 to 3).foreach { r =>
-      assert(runWarm(es, start, r, s"sd_mir$r") == mirrorWarm(es, start, r),
+      assert(runWarm(es, start, r) == mirrorWarm(es, start, r),
         s"round $r diverged from the mirror")
     }
   }
 
   test("alignment contract via rounds = 0: missing node -> Scale, retired node -> dropped") {
     val start = Map(1L -> 777777L, 99L -> 555555L) // 99 is not in the matrix
-    val got = runWarm(triangle, start, 0, "sd_align")
+    val got = runWarm(triangle, start, 0)
     assert(got == Map(1L -> 777777L, 2L -> S, 3L -> S))
   }
 
@@ -106,11 +105,11 @@ class SpectralDeltaSpec extends SparkSpec {
     val es = Seq((1L, 2L, 1.25), (2L, 3L, 0.333333), (3L, 4L, 2.0), (4L, 5L, 0.7))
     val start = Map(1L -> 900000L, 3L -> 123456L)
     val fused = SpectralDelta.spectralWarmColdOf(es.toDF("a", "b", "pmi"),
-      start.toSeq.toDF("node", "vfp"), SpectralDelta.WarmRounds, "sd_fused")
+      start.toSeq.toDF("node", "vfp"), SpectralDelta.WarmRounds)
       .collect()
       .map(r => r.getAs[Long]("node") ->
         (r.getAs[Long]("v_warm"), r.getAs[Long]("v_cold"))).toMap
-    val warm = runWarm(es, start, SpectralDelta.WarmRounds, "sd_fused_w")
+    val warm = runWarm(es, start, SpectralDelta.WarmRounds)
     val cold = runCold(es)
     assert(fused.keySet == cold.keySet)
     fused.foreach { case (n, (w, c)) =>
