@@ -4,6 +4,8 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.SqlAccess
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native codegen'd cosine similarity over two `array<double>` columns.
@@ -19,11 +21,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * HOF formulation (and DuckDB's `list_dot_product`), so results are
   * bit-identical and oracle hashes are unaffected.
   *
-  * Returns NULL on NULL input (standard binary-expression semantics);
-  * mismatched lengths fold over the common prefix (zip_with semantics would
-  * inject NULL elements — callers guarantee fixed-dim vectors).
+  * Equal to the HOF on every input:
+  *  - NULL when either array is NULL, has a NULL element, or the lengths
+  *    differ (`zip_with` pads the shorter array with NULLs, and a NULL term
+  *    makes the fold NULL);
+  *  - a zero norm is a division by zero, as in Spark's `/`: it raises
+  *    DIVIDE_BY_ZERO in ANSI mode (`ansi`, the session's setting when the
+  *    expression is built) and is NULL otherwise.
+  * The per-element NULL check is generated only for an array type with
+  * `containsNull = true`.
   */
-case class CosineSim(left: Expression, right: Expression)
+case class CosineSim(left: Expression, right: Expression, ansi: Boolean = SQLConf.get.ansiEnabled)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -36,20 +44,32 @@ case class CosineSim(left: Expression, right: Expression)
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
 
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def prettyName: String = "cosine_sim"
+  override def stringArgs: Iterator[Any] = Iterator(left, right)
+
+  private def elemsNullable: Boolean = Seq(left, right).exists(_.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
+  })
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    if (n != y.numElements()) return null
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xi = x.getDouble(i); val yi = y.getDouble(i)
       dot += xi * yi; nx += xi * xi; ny += yi * yi
       i += 1
     }
-    dot / (math.sqrt(nx) * math.sqrt(ny))
+    val norms = math.sqrt(nx) * math.sqrt(ny)
+    if (norms != 0.0) dot / norms
+    else if (ansi) throw SqlAccess.divideByZero()
+    else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -61,15 +81,32 @@ case class CosineSim(left: Expression, right: Expression)
       val ny = ctx.freshName("ny")
       val xi = ctx.freshName("xi")
       val yi = ctx.freshName("yi")
+      val norms = ctx.freshName("norms")
+      val zeroNorm =
+        if (ansi) "throw org.apache.spark.sql.graft.SqlAccess.divideByZero();"
+        else s"${ev.isNull} = true;"
+      val skipNull =
+        if (elemsNullable) s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
+        else ""
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = $a.getDouble($i);
-         |  double $yi = $b.getDouble($i);
-         |  $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
+         |int $n = $a.numElements();
+         |if ($n != $b.numElements()) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    $skipNull
+         |    double $xi = $a.getDouble($i);
+         |    double $yi = $b.getDouble($i);
+         |    $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
+         |  }
+         |  double $norms = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
+         |  if ($norms != 0.0) {
+         |    ${ev.value} = $dot / $norms;
+         |  } else if (!${ev.isNull}) {
+         |    $zeroNorm
+         |  }
          |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
        """.stripMargin
     })
 

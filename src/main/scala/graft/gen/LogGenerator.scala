@@ -30,45 +30,40 @@ object LogGenerator {
     "Session refreshed", "Healthcheck ok", "Payload accepted")
 
   /** Uniform [0,1) from a 32-bit hash of the given columns. */
-  private def u(cols: org.apache.spark.sql.Column*) =
+  private def unit(cols: org.apache.spark.sql.Column*) =
     pmod(hash(cols: _*), lit(1000000)) / 1000000.0
 
   /** Batch generation of `seconds` seconds of logs starting at `baseEpoch`.
     * Rates and spike behavior follow the reference; a fixed `seed` varies
-    * the stream. */
+    * the stream. One generator per level: the seconds × the service
+    * literal, then each service-second's events, then one projection. */
   def logs(spark: SparkSession, baseEpoch: Long, seconds: Int, seed: Int = 42): DataFrame = {
-    import spark.implicits._
-    val svc = services.toDF("service", "base_latency", "base_err")
-    spark.range(0, seconds.toLong).select(col("id").as("sec"))
-      .crossJoin(broadcast(svc))
+    val (sec, service, i) = (col("sec"), col("service"), col("i"))
+    def u(salt: String) = unit(lit(seed), sec, service, i, lit(salt))
+    val tsS = lit(baseEpoch) + sec
+    // spike: 5 s at the top of each wall-clock minute (log_producer.py:52-55)
+    val spike = pmod(tsS, lit(60)) < 5
+    val errRate = when(spike, least(col("base_err") * 10, lit(1.0))).otherwise(col("base_err"))
+    val level = when(u("lvl") < errRate, "ERROR").otherwise("INFO")
+    // latency: gauss(base·{1|3}, σ=30) clamped ≥10 (log_producer.py:62-64);
+    // Irwin-Hall(4) approximates the gaussian deterministically
+    val g = (u("l1") + u("l2") + u("l3") + u("l4") - 2.0) * math.sqrt(3.0)
+    val msgIdx = pmod(hash(lit(seed), sec, service, i, lit("m")), lit(5)) + 1
+    spark.range(0, seconds.toLong)
+      .select(col("id").as("sec"), inline(typedLit(services)).as(Seq("service", "base_latency", "base_err")))
       // events per service-second: 5..20 (log_producer.py:81)
-      .withColumn("n", (lit(5) + pmod(hash(lit(seed), col("sec"), col("service")), lit(16))).cast("int"))
-      .withColumn("i", explode(expr("sequence(0, n - 1)")))
-      .withColumn("ts_s", lit(baseEpoch) + col("sec"))
-      // spike: 5 s at the top of each wall-clock minute (log_producer.py:52-55)
-      .withColumn("spike", pmod(col("ts_s"), lit(60)) < 5)
-      .withColumn("err_rate", when(col("spike"), least(col("base_err") * 10, lit(1.0))).otherwise(col("base_err")))
-      .withColumn("level",
-        when(u(lit(seed), col("sec"), col("service"), col("i"), lit("lvl")) < col("err_rate"), "ERROR")
-          .otherwise("INFO"))
-      // latency: gauss(base·{1|3}, σ=30) clamped ≥10 (log_producer.py:62-64);
-      // Irwin-Hall(4) approximates the gaussian deterministically
-      .withColumn("g",
-        (u(lit(seed), col("sec"), col("service"), col("i"), lit("l1")) +
-         u(lit(seed), col("sec"), col("service"), col("i"), lit("l2")) +
-         u(lit(seed), col("sec"), col("service"), col("i"), lit("l3")) +
-         u(lit(seed), col("sec"), col("service"), col("i"), lit("l4")) - 2.0) * math.sqrt(3.0))
-      .withColumn("latency_ms", greatest(lit(10),
-        (col("base_latency") * when(col("spike"), 3).otherwise(1) + col("g") * 30).cast("int")))
-      .withColumn("host", concat(lit("node-"),
-        (pmod(hash(lit(seed), col("sec"), col("service"), col("i"), lit("h")), lit(3)) + 1)))
-      .withColumn("request_id", concat(lit("req-"),
-        substring(md5(concat_ws("|", lit(seed), col("sec"), col("service"), col("i"))), 1, 8)))
-      .withColumn("msgidx", pmod(hash(lit(seed), col("sec"), col("service"), col("i"), lit("m")), lit(5)) + 1)
-      .withColumn("message",
-        when(col("level") === "ERROR", element_at(array(errorMessages.map(lit): _*), col("msgidx")))
-          .otherwise(element_at(array(infoMessages.map(lit): _*), col("msgidx"))))
-      .withColumn("timestamp", date_format(timestamp_seconds(col("ts_s")), "yyyy-MM-dd'T'HH:mm:ss"))
-      .select("timestamp", "service", "host", "level", "request_id", "message", "latency_ms")
+      .select(col("*"), explode(sequence(lit(0),
+        (lit(5) + pmod(hash(lit(seed), sec, service), lit(16))).cast("int") - 1)).as("i"))
+      .select(
+        date_format(timestamp_seconds(tsS), "yyyy-MM-dd'T'HH:mm:ss").as("timestamp"),
+        service,
+        concat(lit("node-"), pmod(hash(lit(seed), sec, service, i, lit("h")), lit(3)) + 1).as("host"),
+        level.as("level"),
+        concat(lit("req-"), substring(md5(concat_ws("|", lit(seed), sec, service, i)), 1, 8))
+          .as("request_id"),
+        when(level === "ERROR", element_at(array(errorMessages.map(lit): _*), msgIdx))
+          .otherwise(element_at(array(infoMessages.map(lit): _*), msgIdx)).as("message"),
+        greatest(lit(10), (col("base_latency") * when(spike, 3).otherwise(1) + g * 30).cast("int"))
+          .as("latency_ms"))
   }
 }

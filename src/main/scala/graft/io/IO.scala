@@ -1,15 +1,22 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.graft.SqlAccess
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
 import scala.util.control.NonFatal
 
 /** Source/sink builders (S2-S5). The Kafka builders mirror the reference's
@@ -90,13 +97,36 @@ object Sources {
   * subdirectories (partition discovery), no data file, or a footer that
   * fails to read, the plain `spark.read.parquet(path)` runs and raises
   * its own error (e.g. `UNABLE_TO_INFER_SCHEMA` on an empty directory).
-  * Nothing is cached: every call lists the path and reads the footer. */
+  *
+  * A read that took the footer path leaves its analyzed relation behind,
+  * keyed by the session, the qualified path and the conf values the
+  * resolution reads: the five the footer converter takes and case
+  * sensitivity (Spark's duplicate-column check). Every call lists the path;
+  * when each listed file's name, length and modification time match the
+  * entry's, the read is a frame over that relation with fresh output
+  * attributes: no footer read and no data-source resolution (file index
+  * listing, schema checks), which is most of a read's driver time. Any
+  * other listing resolves the path again and replaces the entry, so a
+  * table rewritten in place is read as written, with no REFRESH. */
 object IO {
 
   def parquet(spark: SparkSession, path: String): DataFrame =
-    footerSchema(spark, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
+    listing(spark, path) match {
       case None => spark.read.parquet(path)
+      case Some(l) =>
+        val key = Key(spark, l.root, resolutionConfs(spark.sessionState.conf))
+        Option(resolved.get(key)).filter(_.stamps == l.stamps)
+          .flatMap(r => Try(SqlAccess.frameOver(spark, r.relation)).toOption)
+          .getOrElse(footerSchema(spark, l) match {
+            case Some(schema) =>
+              val df = spark.read.schema(schema).parquet(path)
+              df.queryExecution.analyzed match {
+                case r: LogicalRelation => remember(key, Resolved(l.stamps, r))
+                case _ =>
+              }
+              df
+            case None => spark.read.parquet(path)
+          })
     }
 
   private val Summaries = Seq("_common_metadata", "_metadata")
@@ -109,35 +139,73 @@ object IO {
       !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
         name.endsWith("._COPYING_"))
 
-  /** The schema Spark would infer for `path`, or None where the plain read
-    * must decide (see the object doc). */
-  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
-    val conf = spark.sessionState.conf
-    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_))) None
+  /** A path Spark's inference would answer from one footer: its qualified
+    * root, the (path, length, modification time) of each listed file in
+    * path order, which a resolved relation is checked against, and the
+    * file whose footer is read. */
+  private final case class Listing(root: String, stamps: Seq[(String, Long, Long)], footer: FileStatus,
+                                   hadoopConf: Configuration)
+
+  /** The listing of `path`, or None where the plain read must decide (see
+    * the object doc). */
+  private def listing(spark: SparkSession, path: String): Option[Listing] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_))) None
     else try {
       val hadoopConf = spark.sessionState.newHadoopConf()
       val root = new Path(path)
       val fs = root.getFileSystem(hadoopConf)
       val status = fs.getFileStatus(root)
       val files = (if (status.isDirectory) fs.listStatus(root) else Array(status))
-        .filter(f => listed(f.getPath.getName)).sortBy(_.getPath.toString)
+        .filter(f => listed(f.getPath.getName)).sortBy(_.getPath.toString).toSeq
       val pick =
         if (files.exists(_.isDirectory)) None
         else Summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
           .orElse(files.find(f => !Summaries.contains(f.getPath.getName)))
-      pick.map { f =>
-        val footer =
-          ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
-        // the converter ParquetFileFormat.mergeSchemasInParallel builds
-        val converter = new ParquetToSparkSchemaConverter(
-          assumeBinaryIsString = conf.isParquetBinaryAsString,
-          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
-          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
-          nanosAsLong = conf.legacyParquetNanosAsLong,
-          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
-        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
-      }
+      pick.map(Listing(fs.makeQualified(root).toString,
+        files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)), _, hadoopConf))
     } catch { case NonFatal(_) => None }
+
+  /** The schema Spark would infer for `path`, or None where the plain read
+    * must decide (see the object doc). */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    listing(spark, path).flatMap(footerSchema(spark, _))
+
+  private def footerSchema(spark: SparkSession, l: Listing): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    try {
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(l.footer, l.hadoopConf), SKIP_ROW_GROUPS)
+      // the converter ParquetFileFormat.mergeSchemasInParallel builds
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+      Some(ParquetFileFormat.readSchemaFromFooter(new Footer(l.footer.getPath, footer), converter))
+    } catch { case NonFatal(_) => None }
+  }
+
+  /** The session conf values a footer-path read's relation depends on:
+    * the footer converter's five, then case sensitivity. */
+  private def resolutionConfs(conf: SQLConf): Seq[Boolean] =
+    Seq(conf.isParquetBinaryAsString, conf.isParquetINT96AsTimestamp,
+      conf.parquetInferTimestampNTZEnabled, conf.legacyParquetNanosAsLong,
+      conf.parquetReaderRespectUnknownTypeAnnotation, conf.caseSensitiveAnalysis)
+
+  private final case class Key(session: SparkSession, root: String, confs: Seq[Boolean])
+  private final case class Resolved(stamps: Seq[(String, Long, Long)], relation: LogicalRelation)
+
+  /** Resolved relations. A relation holds its session, so a stopped
+    * session's entries are dropped on the next store, and the map is
+    * emptied when it reaches [[MaxResolved]] entries. */
+  private val resolved = new ConcurrentHashMap[Key, Resolved]()
+  private val MaxResolved = 1000
+
+  private def remember(key: Key, r: Resolved): Unit = {
+    resolved.keySet.removeIf(_.session.sparkContext.isStopped)
+    if (resolved.size >= MaxResolved) resolved.clear()
+    resolved.put(key, r)
   }
 }
 

@@ -55,11 +55,7 @@ object BackboneDrift {
   def periodCensusOf(events: DataFrame, tUs: Column): DataFrame = {
     val w = Window.partitionBy(col("user_id"), col("wk"))
       .orderBy(col("t"), col("event_id"))
-    events
-      .select(col("user_id"), col("event_id"),
-        // integer-valued item keys only — see CensusDelta.prep's cast note
-        get_json_object(col("props"), "$.k").cast("long").as("item"), tUs.as("t"))
-      .filter(col("item").isNotNull)
+    CensusDelta.prep(events, tUs)
       .withColumn("wk", expr(s"t div $WeekUs"))
       .withColumn("src", lag(col("item"), 1).over(w))
       .filter(col("src").isNotNull && col("src") =!= col("item"))

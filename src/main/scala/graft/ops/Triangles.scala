@@ -55,11 +55,7 @@ object Triangles {
   def weightedItemGraphOf(events: DataFrame, tUs: Column,
                           minW: Long = DefaultMinW): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("t"), col("event_id"))
-    events
-      .select(col("user_id"), col("event_id"),
-        // integer-valued item keys only — see CensusDelta.prep's cast note
-        get_json_object(col("props"), "$.k").cast("long").as("item"), tUs.as("t"))
-      .filter(col("item").isNotNull)
+    CensusDelta.prep(events, tUs)
       .withColumn("src", lag(col("item"), 1).over(w))
       .filter(col("src").isNotNull && col("src") =!= col("item"))
       .select(least(col("src"), col("item")).as("a"),
