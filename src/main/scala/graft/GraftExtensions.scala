@@ -47,7 +47,8 @@ object GraftExtensions {
     NativeFunction("minhash_signatures", classOf[MinhashSignatures],
       a => MinhashSignatures(a.head, intLit(a(1), "k"))),
     NativeFunction("ordered_pairs", classOf[OrderedPairs], a => OrderedPairs(a.head)),
-    NativeFunction("simhash_fingerprint", classOf[SimhashFingerprint], a => SimhashFingerprint(a.head)))
+    NativeFunction("simhash_fingerprint", classOf[SimhashFingerprint], a => SimhashFingerprint(a.head)),
+    NativeFunction("term_counts", classOf[TermCounts], a => TermCounts(a.head)))
 
   /** Register every native function in the session's function registry,
     * so `expr(...)` and SQL text can call them without the extension.

@@ -1,100 +1,174 @@
 package graft.agg
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.BinaryLike
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
+import org.apache.spark.sql.graft.SqlAccess
+import org.apache.spark.sql.types._
 
-import scala.reflect.ClassTag
-
-/** Bounded top-k as a partial-aggregation-capable Aggregator — the
-  * scale-correct alternative to
-  * `row_number().over(Window.partitionBy(g)).filter(rank <= k)`.
+/** Bounded top-k as a Catalyst aggregate: the k rows of a group first
+  * in `(score DESC, payload ASC)` order, as `array<struct<score, payload>>`
+  * in that order — the scale-correct form of
+  * `row_number() OVER (PARTITION BY g ORDER BY score DESC, payload ASC) <= k`.
   *
-  * The window formulation shuffles EVERY scored candidate row to the
-  * group's reducer before discarding all but k; this aggregator's `reduce`
-  * runs map-side, so the exchange carries at most k rows per (group ×
-  * input partition) — at a billion candidates per group that is the
-  * difference between shuffling 10⁹ rows and shuffling k·partitions.
+  * The window shuffles EVERY scored candidate row to the group's reducer
+  * before discarding all but k; this aggregate updates map-side, so the
+  * exchange carries at most k rows per (group × input partition) — at a
+  * billion candidates per group that is the difference between shuffling
+  * 10⁹ rows and shuffling k·partitions.
   *
-  * Buffer: a sorted array capped at k (insertion keeps order; k is small).
-  * Output preserves the sort — a deterministic total order (subclasses
-  * tie-break on the payload) so oracle hashes are stable.
-  */
-abstract class BoundedTopK[T >: Null <: AnyRef : ClassTag](k: Int)
-    extends Aggregator[T, Array[T], Array[T]] {
+  * Order: Spark's own ordering of each type, as the window's sort has it
+  * (a double NaN ranks above +∞, −0.0 ties 0.0, strings compare by UTF-8
+  * bytes). A row whose score or payload is NULL takes no part, as
+  * `max_by` skips a NULL ordering value. Rows equal in both score and
+  * payload are interchangeable. TopKSpec checks the aggregate against the
+  * window over random partial/merge/serialize splits, codegen and
+  * interpreted.
+  *
+  * Buffer: the kept rows in order, at most k (insertion keeps the order;
+  * a candidate no better than the k-th is dropped after one compare). It
+  * crosses an exchange as the `UnsafeArrayData` of its output array.
+  *
+  * @param elem the output struct; the inputs are cast to its two field types */
+case class BoundedTopK(score: Expression, payload: Expression, k: Int, name: String, elem: StructType,
+                       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[BoundedTopK.Buffer] with BinaryLike[Expression] {
 
-  /** Strict total order: a ranks before b. */
-  protected def lt(a: T, b: T): Boolean
+  override def left: Expression = score
+  override def right: Expression = payload
+  override def prettyName: String = name
+  override def nullable: Boolean = true
+  override def dataType: DataType = ArrayType(elem, containsNull = true)
 
-  final override def zero: Array[T] = Array.empty
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (k >= 0 && score.dataType == elem(0).dataType && payload.dataType == elem(1).dataType &&
+        Seq(score, payload).forall(e => TypeUtils.checkForOrderingExpr(e.dataType, name).isSuccess))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name requires k >= 0 and orderable (${elem(0).dataType.simpleString}, " +
+        s"${elem(1).dataType.simpleString}) inputs, got k=$k, " +
+        s"(${score.dataType.simpleString}, ${payload.dataType.simpleString})")
 
-  final override def reduce(buf: Array[T], x: T): Array[T] =
-    if (buf.length >= k && !lt(x, buf(buf.length - 1))) buf
-    else {
-      val pos = buf.indexWhere(e => lt(x, e)) match { case -1 => buf.length; case p => p }
-      val out = new Array[T](math.min(buf.length + 1, k))
-      Array.copy(buf, 0, out, 0, pos)
-      out(pos) = x
-      Array.copy(buf, pos, out, pos + 1, math.min(buf.length - pos, k - pos - 1))
-      out
+  @transient private lazy val scoreOrd = TypeUtils.getInterpretedOrdering(elem(0).dataType)
+  @transient private lazy val payloadOrd = TypeUtils.getInterpretedOrdering(elem(1).dataType)
+  @transient private lazy val toUnsafe = UnsafeProjection.create(Array[DataType](dataType))
+
+  /** (s1, p1) ranks strictly before (s2, p2). */
+  private def before(s1: Any, p1: Any, s2: Any, p2: Any): Boolean = {
+    val c = scoreOrd.compare(s1, s2)
+    c > 0 || (c == 0 && payloadOrd.lt(p1, p2))
+  }
+
+  /** Keep (s, p) if it ranks among the k first, dropping the k-th; an
+    * input row's values are copied only when kept (`owned` = already a copy). */
+  private def offer(b: BoundedTopK.Buffer, s: Any, p: Any, owned: Boolean): Unit =
+    if (k > 0 && (b.n < k || before(s, p, b.scores(b.n - 1), b.payloads(b.n - 1)))) {
+      val (sv, pv) = if (owned) (s, p) else (InternalRow.copyValue(s), InternalRow.copyValue(p))
+      var i = math.min(b.n, k - 1)
+      while (i > 0 && before(sv, pv, b.scores(i - 1), b.payloads(i - 1))) {
+        b.scores(i) = b.scores(i - 1)
+        b.payloads(i) = b.payloads(i - 1)
+        i -= 1
+      }
+      b.scores(i) = sv
+      b.payloads(i) = pv
+      if (b.n < k) b.n += 1
     }
 
-  final override def merge(b1: Array[T], b2: Array[T]): Array[T] =
-    b2.foldLeft(b1)(reduce)
+  override def createAggregationBuffer(): BoundedTopK.Buffer = new BoundedTopK.Buffer(k)
 
-  final override def finish(b: Array[T]): Array[T] = b
+  override def update(b: BoundedTopK.Buffer, input: InternalRow): BoundedTopK.Buffer = {
+    val s = score.eval(input)
+    if (s != null) {
+      val p = payload.eval(input)
+      if (p != null) offer(b, s, p, owned = false)
+    }
+    b
+  }
 
-  override def bufferEncoder: Encoder[Array[T]] = Encoders.kryo[Array[T]]
+  override def merge(b: BoundedTopK.Buffer, other: BoundedTopK.Buffer): BoundedTopK.Buffer = {
+    var i = 0
+    while (i < other.n) {
+      offer(b, other.scores(i), other.payloads(i), owned = true)
+      i += 1
+    }
+    b
+  }
+
+  override def eval(b: BoundedTopK.Buffer): Any =
+    new GenericArrayData(Array.tabulate[Any](b.n)(i => InternalRow(b.scores(i), b.payloads(i))))
+
+  override def serialize(b: BoundedTopK.Buffer): Array[Byte] =
+    toUnsafe(InternalRow(eval(b))).getBytes
+
+  override def deserialize(bytes: Array[Byte]): BoundedTopK.Buffer = {
+    val row = new UnsafeRow(1)
+    row.pointTo(bytes, bytes.length)
+    val rows = row.getArray(0)
+    val b = new BoundedTopK.Buffer(k)
+    b.n = rows.numElements()
+    var i = 0
+    while (i < b.n) {
+      val r = rows.getStruct(i, 2)
+      b.scores(i) = r.get(0, elem(0).dataType)
+      b.payloads(i) = r.get(1, elem(1).dataType)
+      i += 1
+    }
+    b
+  }
+
+  override def withNewMutableAggBufferOffset(offset: Int): BoundedTopK = copy(mutableAggBufferOffset = offset)
+  override def withNewInputAggBufferOffset(offset: Int): BoundedTopK = copy(inputAggBufferOffset = offset)
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): BoundedTopK =
+    copy(score = newLeft, payload = newRight)
 }
 
-case class ScoredId(score: Double, id: Long)
+object BoundedTopK {
 
-/** Top-k by (score desc, id asc) — similarity search. */
-class TopK(k: Int) extends BoundedTopK[ScoredId](k) {
-  override protected def lt(a: ScoredId, b: ScoredId): Boolean =
-    a.score > b.score || (a.score == b.score && a.id < b.id)
-  override def outputEncoder: Encoder[Array[ScoredId]] = ExpressionEncoder[Array[ScoredId]]()
+  /** The kept rows, first `n` slots in rank order. */
+  final class Buffer(k: Int) {
+    val scores = new Array[Any](k)
+    val payloads = new Array[Any](k)
+    var n = 0
+  }
+
+  /** The aggregate as a Column function `(score, payload) => top`, named
+    * `name` in plans, its output element `elem`. */
+  def column(k: Int, name: String, elem: StructType): (Column, Column) => Column =
+    (score, payload) => SqlAccess.column(BoundedTopK(
+      SqlAccess.expression(score.cast(elem(0).dataType)),
+      SqlAccess.expression(payload.cast(elem(1).dataType)), k, name, elem).toAggregateExpression())
+
+  private[agg] def elem(score: (String, DataType), payload: (String, DataType)): StructType =
+    new StructType()
+      .add(score._1, score._2, nullable = false)
+      .add(payload._1, payload._2, nullable = payload._2 == StringType)
 }
 
+/** Top-k by (score desc, id asc) — similarity search.
+  * `TopK(5)(col("sim"), col("vec_id"))` →
+  * `array<struct<score: double, id: bigint>>`, length ≤ k. */
 object TopK {
-  /** `TopK(5)(col("sim"), col("vec_id"))` → array<struct<score,id>> sorted
-    * by (score desc, id asc), length ≤ k. (The case-class input encoder
-    * flattens to two call parameters.) */
-  def apply(k: Int): (Column, Column) => Column = {
-    val fn = udaf(new TopK(k), ExpressionEncoder[ScoredId]())
-    (score, id) => fn(score, id)
-  }
+  def apply(k: Int): (Column, Column) => Column =
+    BoundedTopK.column(k, "topk", BoundedTopK.elem("score" -> DoubleType, "id" -> LongType))
 }
 
-case class CountedWord(n: Long, w: String)
-
-/** Top-k by (count desc, word asc) — vocabulary building. */
-class TopWords(k: Int) extends BoundedTopK[CountedWord](k) {
-  override protected def lt(a: CountedWord, b: CountedWord): Boolean =
-    a.n > b.n || (a.n == b.n && a.w < b.w)
-  override def outputEncoder: Encoder[Array[CountedWord]] = ExpressionEncoder[Array[CountedWord]]()
-}
-
+/** Top-k by (count desc, word asc) — vocabulary building.
+  * `TopWords(10)(col("n"), col("w"))` → `array<struct<n: bigint, w: string>>`. */
 object TopWords {
-  def apply(k: Int): (Column, Column) => Column = {
-    val fn = udaf(new TopWords(k), ExpressionEncoder[CountedWord]())
-    (n, w) => fn(n, w)
-  }
+  def apply(k: Int): (Column, Column) => Column =
+    BoundedTopK.column(k, "topwords", BoundedTopK.elem("n" -> LongType, "w" -> StringType))
 }
 
-case class ScoredTerm(score: Double, term: String)
-
-/** Top-k by (score desc, term asc) — TF-IDF / keyword extraction. */
-class TopTerms(k: Int) extends BoundedTopK[ScoredTerm](k) {
-  override protected def lt(a: ScoredTerm, b: ScoredTerm): Boolean =
-    a.score > b.score || (a.score == b.score && a.term < b.term)
-  override def outputEncoder: Encoder[Array[ScoredTerm]] = ExpressionEncoder[Array[ScoredTerm]]()
-}
-
+/** Top-k by (score desc, term asc) — TF-IDF / keyword extraction.
+  * `TopTerms(5)(col("tfidf"), col("w"))` →
+  * `array<struct<score: double, term: string>>`. */
 object TopTerms {
-  def apply(k: Int): (Column, Column) => Column = {
-    val fn = udaf(new TopTerms(k), ExpressionEncoder[ScoredTerm]())
-    (score, term) => fn(score, term)
-  }
+  def apply(k: Int): (Column, Column) => Column =
+    BoundedTopK.column(k, "topterms", BoundedTopK.elem("score" -> DoubleType, "term" -> StringType))
 }

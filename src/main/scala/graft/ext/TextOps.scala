@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.functions.TermCounts
 import graft.oracle.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -527,21 +528,22 @@ object TextOps {
       |FROM documents""".stripMargin
 
   // ---------------------------------------------------------------- q29
-  /** TF-IDF top-5 terms per document. tf from raw term counts, df from
-    * per-doc DISTINCT term sets (array_distinct map-side — no extra
-    * distinct shuffle), idf = ln(N/df) with N crossed in as a 1-row
-    * aggregate (no driver-side collect). Ranking uses the bounded
-    * [[graft.agg.TopTerms]] aggregator — ≤5 rows per doc×partition reach
+  /** TF-IDF top-5 terms per document. Terms are counted inside the row
+    * ([[graft.functions.TermCounts]]: one split, no (doc, term) shuffle):
+    * each doc gives one row per distinct term with its tf. `doc_id` is
+    * unique in `documents` (TermCountsSpec checks all three fixtures), so
+    * those rows are the (doc, term) grain and df is a count over the same
+    * rows. idf = ln(N/df) with N crossed in as a 1-row aggregate (no
+    * driver-side collect). Ranking uses the bounded
+    * [[graft.agg.TopTerms]] aggregate — ≤5 rows per doc×partition reach
     * the exchange, vs the whole scored term list under a window. Scores
     * rounded to 6 dp BEFORE ranking on both engines so tie-breaks (then
     * term asc) are deterministic. */
   def tfidfTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.table(spark, sfDir, "documents")
-    val words = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-    val tf = words.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-    val dft = docs
-      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("df"))
+    val tf = docs.select(col("doc_id"), explode(TermCounts(split(col("text"), " "))).as("t"))
+      .select(col("doc_id"), col("t.term").as("w"), col("t.tf").as("tf"))
+    val dft = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n"))
     tf.join(dft, "w").crossJoin(broadcast(n))
       .withColumn("tfidf", round(col("tf") * log(col("n") / col("df")), 6))

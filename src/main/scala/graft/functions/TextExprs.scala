@@ -1,9 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.SqlAccess
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -257,5 +260,68 @@ object OrderedPairs {
       }
     }
     new GenericArrayData(out.toArray)
+  }
+}
+
+/** The distinct terms of an `array<string>` with their counts, as
+  * `array<struct<term, tf>>` in first-appearance order — a per-row
+  * `GROUP BY term` in one hash pass: `explode(term_counts(a))` equals
+  * `explode(a)` grouped by (row, term) and counted, as multisets (a NULL
+  * element is one more term; an empty array gives no rows, a NULL array
+  * is NULL). Counting inside the row needs no (row, term) shuffle, and
+  * its rows are each term once per row, so a document frequency is a
+  * count over the same rows (q29). */
+case class TermCounts(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      s"term_counts requires array<string>, got ${child.dataType.simpleString}")
+  }
+
+  override def dataType: DataType = {
+    val termNullable = child.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => true
+    }
+    ArrayType(StructType(Seq(
+      StructField("term", StringType, termNullable),
+      StructField("tf", LongType, nullable = false))), containsNull = false)
+  }
+
+  override def prettyName: String = "term_counts"
+
+  override def nullSafeEval(input: Any): Any = TermCounts.compute(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.functions.TermCounts.compute($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object TermCounts {
+  def apply(terms: Column): Column = SqlAccess.column(TermCounts(SqlAccess.expression(terms)))
+
+  def compute(terms: ArrayData): ArrayData = {
+    val n = terms.numElements()
+    // a java HashMap takes the NULL element as one more key
+    val slot = new java.util.HashMap[UTF8String, Integer](math.max(16, n * 2))
+    val keys = new Array[UTF8String](n)
+    val counts = new Array[Long](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      val t = if (terms.isNullAt(i)) null else terms.getUTF8String(i)
+      val j = slot.get(t)
+      if (j == null) {
+        slot.put(t, m)
+        keys(m) = t
+        counts(m) = 1L
+        m += 1
+      } else counts(j) += 1L
+      i += 1
+    }
+    new GenericArrayData(Array.tabulate[Any](m)(j => InternalRow(keys(j), counts(j))))
   }
 }

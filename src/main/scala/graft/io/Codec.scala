@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.functions.JsonRecord
 import graft.model.Schemas
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -12,11 +13,12 @@ import org.apache.spark.sql.types.StructType
   * negative parse case in CodecSpec. */
 object Codec {
 
-  /** `value` (string JSON) → typed columns. PERMISSIVE mode: malformed
-    * fields null out individually, the row survives (verified Spark 4.1.2
-    * behavior, SURVEY §1.5). */
+  /** `value` (string JSON) → typed columns, parsed by
+    * [[graft.functions.JsonRecord]]: `from_json`'s result without a reader
+    * per record. PERMISSIVE mode: malformed fields null out individually,
+    * the row survives (verified Spark 4.1.2 behavior, SURVEY §1.5). */
   def decode(raw: DataFrame, schema: StructType, valueCol: String = "value"): DataFrame =
-    raw.select(from_json(col(valueCol).cast("string"), schema).as("data")).select("data.*")
+    raw.select(JsonRecord(col(valueCol).cast("string"), schema).as("data")).select("data.*")
 
   /** typed columns → single JSON string column named `value`, plus `key` =
     * service (the reference's Kafka message key, log_producer.py:88). */

@@ -52,14 +52,20 @@ object CensusDelta {
   val CutUs = 1705363200000000L
 
   /** (user_id, event_id, item, t) with non-null integer items. */
-  private[graft] def prep(events: DataFrame, tUs: Column): DataFrame =
-    events.select(col("user_id"), col("event_id"),
+  private[graft] def prep(events: DataFrame, tUs: Column): DataFrame = prepWith(events, Seq(tUs.as("t")))
+
+  /** (user_id, event_id, item): [[prep]] with no time column — the
+    * arriving side of the stream-static gates and q161's item events. */
+  private[graft] def prep(events: DataFrame): DataFrame = prepWith(events, Nil)
+
+  private def prepWith(events: DataFrame, extra: Seq[Column]): DataFrame =
+    events.select(Seq(col("user_id"), col("event_id"),
         // props.k is INTEGER-VALUED in the fixtures (TESTDATA.md). On a
         // non-integer numeric string the engines diverge (Spark's
         // cast("long") truncates '12.5'→12; DuckDB's TRY_CAST rounds or
         // NULLs) — if the item key ever becomes fractional, normalize
         // both sides with an integer-pattern guard before the cast.
-        get_json_object(col("props"), "$.k").cast("long").as("item"), tUs.as("t"))
+        get_json_object(col("props"), "$.k").cast("long").as("item")) ++ extra: _*)
       .filter(col("item").isNotNull)
 
   /** Pooled minW=1 census of consecutive transitions within `e`. */

@@ -23,13 +23,13 @@ object HeavyHitters {
   def q37(spark: SparkSession, sfDir: String): DataFrame = {
     val words = Tables.fanned(Tables.table(spark, sfDir, "documents"))
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
-    val sketch = words.groupBy(col("source"))
-      .agg(graft.agg.FreqItems.top50(col("w")).as("cand"))
-    val totals = words.groupBy(col("source")).agg(count(lit(1)).as("n"))
+    // the sketch and the per-source total in one aggregate: two explodes
+    // of the corpus (this one and the (source, w) count) and one join
+    val perSource = words.groupBy(col("source"))
+      .agg(graft.agg.FreqItems.top50(col("w")).as("cand"), count(lit(1)).as("n"))
     words.groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
-      .join(totals, "source")
+      .join(perSource, "source")
       .filter(col("c") * (K + 1) > col("n"))
-      .join(sketch, "source")
       .select(
         col("source"), col("w").as("word"), col("c").as("exact_count"),
         when(map_contains_key(col("cand"), col("w")),

@@ -1,8 +1,10 @@
 package graft.ops
 
+import graft.functions.JsonRecord
 import graft.oracle.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{MapType, StringType}
 
 /** Semi-structured payload profile (q110) — per-(event_type, json key)
   * census of the `props` JSON blob: how often each key is present, how
@@ -43,7 +45,7 @@ object PropsProfile {
     // rows — without it the JSON parse (the expensive part) runs twice
     val ev = Tables.swapPersist("q110_parsed",
       events.select(col("event_type"),
-        expr("from_json(props, 'map<string,string>')").as("m")))
+        JsonRecord(col("props"), MapType(StringType, StringType)).as("m")))
     val tot = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n_rows"))
     ev.select(col("event_type"), explode(col("m")).as(Seq("key", "v")))
       .groupBy(col("event_type"), col("key"))

@@ -183,10 +183,7 @@ object Triangles {
       CensusDelta.prep(staticEvents, staticTUs)
         .groupBy(col("user_id"))
         .agg(expr("max_by(item, struct(t, event_id))").as("last_item")))
-    streamEvents
-      .select(col("user_id"), col("event_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("item"))
-      .filter(col("item").isNotNull)
+    CensusDelta.prep(streamEvents)
       .join(lastItem.select(col("user_id"), col("last_item")), Seq("user_id"))
       .filter(col("last_item") =!= col("item"))
       .select(col("user_id"), col("event_id"),

@@ -73,11 +73,7 @@ object UserSpectral {
       WalkPmi.pmiOf(
         WalkPairs.walkPairsOf(Backbone.backboneOf(pw))))
       .localCheckpoint()
-    val items = ev
-      .select(col("user_id"),
-        get_json_object(col("props"), "$.k").cast("long").as("item"))
-      .filter(col("item").isNotNull)
-    gridOf(coords, items)
+    gridOf(coords, CensusDelta.prep(ev))
   }
 
   /** Mirror over [[SpectralEmbed.spectralPairCtes]] — the walk stack's

@@ -11,6 +11,13 @@ import scala.collection.concurrent.TrieMap
   * bench total can't: for a 15-job iterative query, is the time in the
   * corpus pass, the per-round checkpoints, or scheduler fixed cost?
   *
+  * Each rep is one cold execution — `run`, `count()`, then the release of
+  * the persist registry and the cache — and prints its wall time and its
+  * Java-thread CPU ms: the CPU time of every live Java thread over the
+  * execution, from `ThreadMXBean`, the statistic `scan_batch` gates. The
+  * minimum over reps is that query's floor, so a single-query A/B takes
+  * one JVM per side instead of a benchmark run.
+  *
   * Usage: runMain graft.tools.JobProfile <queryName> [sfDir] [reps]
   * Prints one line per job (start-ordered) plus a by-callsite rollup.
   * Not part of the driver contract; purely a diagnosis tool. */
@@ -18,6 +25,15 @@ object JobProfile {
 
   final case class JobRec(id: Int, site: String, group: String,
                           var endMs: Long, startMs: Long)
+
+  private val threads =
+    java.lang.management.ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+
+  /** CPU ns of every live Java thread, by thread id. */
+  private def threadCpu(): Map[Long, Long] = {
+    val ids = threads.getAllThreadIds
+    ids.zip(threads.getThreadCpuTime(ids)).filter(_._2 >= 0).toMap
+  }
 
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: JobProfile <query> [sfDir] [reps]"))
@@ -58,16 +74,20 @@ object JobProfile {
     spark.catalog.clearCache()
 
     var best = Double.MaxValue
+    val cpuMs = scala.collection.mutable.ArrayBuffer[Double]()
     var bestJobs: Seq[JobRec] = Seq.empty
     var bestStages: Seq[(Int, (String, Int, Long, Long, Long))] = Seq.empty
     for (r <- 1 to reps) {
       jobs.clear(); stages.clear()
+      val c0 = threadCpu()
       val t0 = System.nanoTime()
       q.run(spark, sfDir).count()
       val sec = (System.nanoTime() - t0) / 1e9
       graft.oracle.Tables.releasePersisted()
       spark.catalog.clearCache()
-      println(f"[profile] rep $r: $sec%.3f s, ${jobs.size} jobs, ${stages.size} stages")
+      // a thread started since counts from 0, one ended since is not counted
+      cpuMs += threadCpu().map { case (id, ns) => ns - c0.getOrElse(id, 0L) }.sum / 1e6
+      println(f"[profile] rep $r: $sec%.3f s, cpu ${cpuMs.last}%.1f ms, ${jobs.size} jobs, ${stages.size} stages")
       if (sec < best) {
         best = sec; bestJobs = jobs.values.toSeq.sortBy(_.startMs)
         bestStages = stages.toSeq.sortBy(_._1)
@@ -75,6 +95,7 @@ object JobProfile {
     }
 
     println(f"[profile] $name best=$best%.3f s over $reps reps, ${bestJobs.size} jobs")
+    println(f"[profile] $name cpu floor ${cpuMs.min}%.1f ms (min of ${cpuMs.map(c => f"$c%.1f").mkString("/")})")
     var prevEnd = 0L
     bestJobs.foreach { j =>
       val dur = (j.endMs - j.startMs) / 1e3

@@ -1,7 +1,5 @@
 package graft
 
-import graft.oracle.{Registry, Tables}
-
 /** Spark jobs of one cold `run + count()` of each iterative query at
   * sf0.001, pinned. The PageRank and power-iteration rounds and the
   * directed census merge are each written once and shared by these
@@ -24,10 +22,7 @@ class IterJobsSpec extends SparkSpec {
     "q176_chain_drains" -> 72)
 
   for ((name, want) <- pinned) test(s"$name: one cold run + count() launches $want jobs") {
-    Tables.releasePersisted(); spark.catalog.clearCache()
-    val (_, jobs) =
-      try JobCount.of(spark)(Registry.byName(name).run(spark, sf0001).count())
-      finally { Tables.releasePersisted(); spark.catalog.clearCache() }
+    val jobs = JobCount.coldRun(spark, name, sf0001)
     assert(jobs == want, s"$name: $jobs Spark jobs, pinned $want")
   }
 }

@@ -28,4 +28,12 @@ object JobCount {
     assert(ids.contains(marker), s"marker job $marker never reached the status store")
     (result, ids.count(_ != marker))
   }
+
+  /** Jobs of one cold `run` + `count()` of a registered query: the persist
+    * registry and the cache are released before and after. */
+  def coldRun(spark: SparkSession, name: String, sfDir: String): Int = {
+    graft.oracle.Tables.releasePersisted(); spark.catalog.clearCache()
+    try of(spark)(graft.oracle.Registry.byName(name).run(spark, sfDir).count())._2
+    finally { graft.oracle.Tables.releasePersisted(); spark.catalog.clearCache() }
+  }
 }
