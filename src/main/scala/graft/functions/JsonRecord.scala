@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * schemas on random, malformed, nested, duplicate-key and invalid-UTF-8
   * values, codegen and interpreted). PERMISSIVE mode, the session's time
   * zone and corrupt-record column name, as `from_json` without options.
-  * A struct, array or map schema; the result type is the schema made
+  * A struct or map schema; the result type is the schema made
   * nullable, as for `from_json`.
   *
   * Unlike `from_json`, the optimizer does not prune the schema to the
@@ -40,9 +40,9 @@ case class JsonRecord(child: Expression, schema: DataType, timeZoneId: Option[St
   override def prettyName: String = "json_record"
 
   override def checkInputDataTypes(): TypeCheckResult = (child.dataType, schema) match {
-    case (StringType, _: StructType | _: ArrayType | _: MapType) => TypeCheckResult.TypeCheckSuccess
+    case (StringType, _: StructType | _: MapType) => TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
-      s"json_record requires (string, struct|array|map schema), got " +
+      s"json_record requires (string, struct|map schema), got " +
         s"(${child.dataType.simpleString}, ${schema.simpleString})")
   }
 
@@ -95,7 +95,6 @@ final case class JsonRecordEvaluator(nullableSchema: DataType, nameOfCorruptReco
     if (!rows.hasNext) null
     else nullableSchema match {
       case _: StructType => rows.next()
-      case _: ArrayType => rows.next().getArray(0)
       case _: MapType => rows.next().getMap(0)
     }
 

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** [[JsonRecord]] against Spark's `from_json` (`JsonToStructs`) on every
   * input: random, malformed, nested, duplicate-key and invalid-UTF-8
-  * values, struct, map and array schemas, through generated code and
+  * values, struct and map schemas, through generated code and
   * interpreted `eval`. A value either parses to the same result in both
   * or raises the same error condition in both. */
 class JsonRecordSpec extends SparkSpec {
@@ -27,7 +27,6 @@ class JsonRecordSpec extends SparkSpec {
       "f MAP<STRING, INT>, t TIMESTAMP, dt DATE, z BOOLEAN, dec DECIMAL(10, 2)"),
     StructType.fromDDL("a INT, b STRING, _corrupt_record STRING"),
     MapType(StringType, StringType),
-    ArrayType(StructType.fromDDL("a INT, b STRING")),
     Schemas.rawLog, Schemas.incidentAlert, Schemas.escalation)
 
   private val keys = Seq("k", "a", "b", "c", "d", "e", "f", "t", "dt", "z", "dec", "x", "y", "A", "",

@@ -54,7 +54,7 @@ class TermCountsSpec extends SparkSpec {
 
   test("documents.doc_id is unique and non-NULL in every fixture (the q29 precondition)") {
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
-      val docs = graft.oracle.Tables.table(spark, s"/root/testdata/$sf", "documents")
+      val docs = graft.oracle.Tables.table(spark, sf0001.replace("sf0.001", sf), "documents")
       val r = docs.agg(count(lit(1)), countDistinct(col("doc_id")), count(col("doc_id"))).head
       assert(r.getLong(0) == r.getLong(1) && r.getLong(0) == r.getLong(2), s"$sf: $r")
     }
